@@ -137,9 +137,6 @@ def run_workload(spark, sf_dir: str, cpus: int) -> dict:
         f"cross join (select explode(sequence(0, {mult - 1})) as j) j"
     ).repartition(cpus * 2).cache()
     points.count()
-    # salt=1: uniform points + AQE need no deterministic salting — the
-    # hot-cell study (BENCH.md, scripts/hot_cell_bench.py) shows salt's
-    # cover/edge replication costs more than it saves on unskewed keys.
     # broadcast_edges=False explicitly: the corpus polygon side is known
     # big here, so skip the auto gate's full-geometry edge-count job
     timed("pip_join", lambda: point_in_polygon_join(

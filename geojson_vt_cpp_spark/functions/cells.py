@@ -16,7 +16,7 @@ generators so kernels and correctness oracles compute bit-identical ids.
 No reference implementation exists (geojson-vt-cpp has no index; the tile id
 ``toID`` packing at geojsonvt.hpp:66-68 is the closest analogue) — this is
 specified by the north rule (cell index at multiple resolutions driving
-broadcast/salted spatial joins).
+the spatial joins).
 """
 
 from __future__ import annotations

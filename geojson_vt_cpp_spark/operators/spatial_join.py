@@ -11,24 +11,19 @@ Design:
   points compute one cell per indexed resolution. The equi-join on
   (res, cell) is an ordinary shuffle join Catalyst can reorder, broadcast
   (``broadcast=True`` for small polygon sets) or AQE-skew-split.
-- **Exact ray-cast refinement** has three physical strategies:
-  ``method='native'`` (default) explodes polygons into an edge table once
-  and evaluates the even-odd crossing test as pure column expressions with
-  a map-side-combinable parity aggregate — zero Python in the hot path,
-  whole-stage codegen end to end; ``broadcast=True`` ships a geometry dict
-  to executors and refines in one narrow Arrow kernel (zero shuffles, for
-  small polygon sets); ``method='cogroup'`` cogroups candidates with
-  geometry so each polygon's geometry moves exactly once (when the polygon
-  side is too big to broadcast but per-group Arrow framing is acceptable).
-  All three produce identical rows (holes fall out of the even-odd rule).
-- **Skew**: pass ``salt > 1`` to replicate the polygon-cell build side and
-  scatter hot cells deterministically (hash of the point id), on top of AQE.
+- **Exact ray-cast refinement** is one native strip-keyed edge join:
+  polygons explode once into an edge table keyed by (polygon surrogate,
+  y-strip), each candidate point meets only its strip's edges, and the
+  even-odd crossing test plus a map-side-combinable parity aggregate run as
+  pure column expressions — whole-stage codegen end to end, no Python on
+  the candidate side. Holes fall out of the even-odd rule. The strip key
+  also splits a hot polygon's candidates 16 ways, which is the
+  deterministic skew split; AQE handles the rest.
 - **kNN** adapts H3-style k-ring expansion to the batch model: a bounded
   neighborhood join at a chosen resolution, a certification predicate
-  (kth-candidate distance < neighborhood safe radius), and a straggler
-  fallback for the (few) uncertified queries — ring doubling by default at
-  scale (ordinary equi-joins, exact at full grid cover), broadcast brute
-  force only under a site-count gate. Every point gets exact top-k.
+  (kth-candidate distance < neighborhood safe radius), and ring doubling
+  for the (few) uncertified queries — ordinary equi-joins, exact at full
+  grid cover, with no site-table broadcast. Every point gets exact top-k.
 - **distance_join / bbox_overlap_join** reuse the same cell machinery for
   radius and rectangle-overlap (range) joins; the bbox join dedupes
   multi-cell matches with a report-once responsibility cell instead of a
@@ -37,7 +32,6 @@ Design:
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -46,7 +40,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from geojson_vt_cpp_spark.functions import cells as C
-from geojson_vt_cpp_spark.operators import codec
 
 DEFAULT_RESOLUTIONS = (4, 7, 10)
 
@@ -139,34 +132,8 @@ def point_cells(
 
 
 # ---------------------------------------------------------------------------
-# exact ray-cast (Arrow kernel)
+# exact even-odd refinement (strip-keyed native edge join)
 # ---------------------------------------------------------------------------
-
-def ray_cast_np(px: np.ndarray, py: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:
-    """Even-odd point-in-polygon for a batch of points vs one polygon.
-
-    rings: list of (n,2) float arrays (closing vertex optional — the test
-    wraps implicitly). Vectorized points x edges; holes fall out of the
-    even-odd rule.
-    """
-    inside = np.zeros(px.shape[0], dtype=bool)
-    for ring in rings:
-        if ring.shape[0] < 3:
-            continue
-        xi = ring[:, 0]
-        yi = ring[:, 1]
-        xj = np.roll(xi, 1)
-        yj = np.roll(yi, 1)
-        # (P, E) broadcasting
-        y_between = (yi[None, :] > py[:, None]) != (yj[None, :] > py[:, None])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            x_cross = (xj - xi)[None, :] * (py[:, None] - yi[None, :]) / (
-                yj - yi
-            )[None, :] + xi[None, :]
-        crossings = y_between & (px[:, None] < x_cross)
-        inside ^= (crossings.sum(axis=1) % 2).astype(bool)
-    return inside
-
 
 def _polygon_edges(polys_keyed: DataFrame) -> DataFrame:
     """(poly_sk, e_xi, e_yi, e_xj, e_yj, p_miny, p_maxy) — one row per ring
@@ -225,7 +192,7 @@ def _polygon_edges(polys_keyed: DataFrame) -> DataFrame:
 # candidatesxedges fan-out by roughly the strip count for typical outlines
 # (an edge spans few strips; 16 keeps replication ~1.5x while dividing the
 # per-candidate edge fan-out by an order of magnitude)
-PIP_Y_STRIPS = int(os.environ.get("SPARK_GRAFT_PIP_STRIP_N", "16"))
+PIP_Y_STRIPS = 16
 
 
 def _strip_of(y: Column, miny: Column, maxy: Column, s: int = PIP_Y_STRIPS) -> Column:
@@ -250,8 +217,6 @@ def point_in_polygon_join(
     point_cols: tuple[str, str, str] = ("point_id", "px", "py"),
     resolutions: tuple[int, ...] = DEFAULT_RESOLUTIONS,
     broadcast: bool = False,
-    salt: int = 1,
-    method: str = "native",
     broadcast_edges: bool | None = None,
     edge_broadcast_threshold: int = 1_000_000,
 ) -> DataFrame:
@@ -261,14 +226,14 @@ def point_in_polygon_join(
     identity columns (doc_id, span_idx, feature_idx, member_seq,
     feature_id, props_json).
 
-    ``broadcast_edges`` controls the native path's candidatesxedges
-    refinement join: True ships the edge table to every executor (no
-    shuffle, and one hot polygon cannot converge its candidates onto one
-    reducer); None counts polygon vertices once and broadcasts under
-    ``edge_broadcast_threshold`` edges. When the edge table is too big to
-    broadcast AND ``salt > 1``, the salt is carried through to the parity
-    join key (edges replicated salt ways), so the skew split survives the
-    refinement stage instead of re-converging on raw poly_sk.
+    ``broadcast=True`` declares the polygon side small: the cell-cover table
+    and the edge table are both broadcast, so the candidates do not shuffle
+    before the parity aggregate. ``broadcast_edges`` controls the
+    candidatesxedges refinement join on its own: True ships the edge table
+    to every executor (no shuffle, and one hot polygon cannot converge its
+    candidates onto one reducer); False forces a shuffled-hash join; None
+    follows ``broadcast`` when that is set, and otherwise counts polygon
+    vertices once and broadcasts under ``edge_broadcast_threshold`` edges.
     """
     pid, xcol, ycol = point_cols
     polys = polys_df.where(F.col("gtype").isin(3, 6))
@@ -276,211 +241,84 @@ def point_in_polygon_join(
     attr_cols = ["feature_id", "props_json"]
     geom_cols = ["xs", "ys", "part_lens"]
 
-    # cover rows carry ONLY a long surrogate key + bbox + (res, cell[, salt])
-    # — geometry never rides the (cells x salt)-exploded build side, and the
-    # candidate shuffle moves longs, not id strings. The bbox goes along so
-    # candidates prune NATIVELY (whole-stage codegen) before any Python: the
-    # cell cover is conservative, the bbox test is exact per feature (the F2
+    # cover rows carry ONLY a long surrogate key + bbox + (res, cell) —
+    # geometry never rides the cells-exploded build side, and the candidate
+    # shuffle moves longs, not id strings. The bbox goes along so candidates
+    # prune NATIVELY (whole-stage codegen) before the edge join: the cell
+    # cover is conservative, the bbox test is exact per feature (the F2
     # analogue, clip.hpp:287-293).
     sk = F.xxhash64(*id_cols).alias("poly_sk")
     cover = polygon_cover_cells(
         polys.select(sk, "minx", "miny", "maxx", "maxy"), resolutions
     ).select("poly_sk", "res", "cell", "minx", "miny", "maxx", "maxy")
-    polys_keyed = polys.select(
-        F.xxhash64(*id_cols).alias("poly_sk"), *id_cols, *attr_cols, *geom_cols,
-        "miny", "maxy",
-    )
+    polys_keyed = polys.select(sk, *id_cols, *attr_cols, *geom_cols, "miny", "maxy")
 
     pts = point_cells(points_df.select(pid, xcol, ycol), resolutions, xcol, ycol)
-    if salt > 1:
-        cover = cover.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        )
-        pts = pts.withColumn("salt", F.pmod(F.xxhash64(F.col(pid)), F.lit(salt)))
-        keys = ["res", "cell", "salt"]
-    else:
-        keys = ["res", "cell"]
-
     right = F.broadcast(cover) if broadcast else cover
-    cand_cols = [pid, xcol, ycol, "poly_sk"] + (["salt"] if salt > 1 else [])
     # "strip" is the candidate's y-strip within its polygon's bbox — the
-    # native parity join keys on it (poly_sk, strip) so each candidate only
-    # meets the edges whose y-interval can actually contain its y (the
-    # bbox prune guarantees ycol is inside [miny, maxy] here, so the strip
-    # expression sees only in-range values)
+    # parity join keys on (poly_sk, strip) so each candidate only meets the
+    # edges whose y-interval can actually contain its y (the bbox prune
+    # guarantees ycol is inside [miny, maxy] here, so the strip expression
+    # sees only in-range values)
     cand = (
-        pts.join(right, keys, "inner")
-        # exact bbox prune in codegen before any Python crossing
+        pts.join(right, ["res", "cell"], "inner")
         .where(
             (F.col(xcol) >= F.col("minx")) & (F.col(xcol) <= F.col("maxx"))
             & (F.col(ycol) >= F.col("miny")) & (F.col(ycol) <= F.col("maxy"))
         )
         .select(
-            *cand_cols,
+            pid, xcol, ycol, "poly_sk",
             _strip_of(F.col(ycol), F.col("miny"), F.col("maxy")).alias("strip"),
         )
     )
 
-    pid_type = points_df.schema[pid].dataType.simpleString()
-    out_schema = ", ".join(
-        [f"{pid} {pid_type}", f"{xcol} double", f"{ycol} double",
-         "doc_id string", "span_idx int", "feature_idx int", "member_seq int",
-         "feature_id string", "props_json string"]
+    # edges explode into the y-strips their interval spans (monotone strip
+    # mapping, see _strip_of), so a candidate meets ~E/strips edges instead
+    # of all E edges of its polygon — the candidatesxedges fan-out (the
+    # dominant row count of this whole operator) drops by roughly the strip
+    # count for modest edge replication
+    lo = F.least(F.col("e_yi"), F.col("e_yj"))
+    hi = F.greatest(F.col("e_yi"), F.col("e_yj"))
+    edges = _polygon_edges(polys_keyed).withColumn(
+        "strip",
+        F.explode(F.sequence(
+            _strip_of(lo, F.col("p_miny"), F.col("p_maxy")),
+            _strip_of(hi, F.col("p_miny"), F.col("p_maxy")),
+        )),
+    ).drop("p_miny", "p_maxy")
+    if broadcast_edges is None:
+        broadcast_edges = broadcast or (
+            polys.agg(F.sum(F.size("xs")).alias("n")).first()["n"] or 0
+        ) <= edge_broadcast_threshold
+    if broadcast_edges:
+        edges = F.broadcast(edges)
+    else:
+        # when the edge table is ruled out for broadcasting, make sure
+        # Catalyst doesn't sneak one in from a bad estimate: a driver-built
+        # multi-ten-MB hashed relation showed up as whole-session GC
+        # pressure (slower UNRELATED queries) and occasional multi-second
+        # build stalls. A shuffled-hash join moves both (small) sides once
+        # and builds per-partition.
+        edges = edges.hint("shuffle_hash")
+
+    pxc, pyc = F.col(xcol), F.col(ycol)
+    yi, yj, xi, xj = F.col("e_yi"), F.col("e_yj"), F.col("e_xi"), F.col("e_xj")
+    y_between = (yi > pyc) != (yj > pyc)
+    x_cross = (xj - xi) * (pyc - yi) / (yj - yi) + xi
+    crossing = (y_between & (pxc < x_cross)).cast("int")
+    hits = (
+        cand.join(edges, ["poly_sk", "strip"])
+        .groupBy(pid, xcol, ycol, "poly_sk")
+        .agg(F.sum(crossing).alias("n_cross"))
+        .where(F.pmod(F.col("n_cross"), F.lit(2)) == 1)
     )
-    out_cols = [pid, xcol, ycol] + id_cols + attr_cols
-
-    def rings_of(xs_v, ys_v, part_lens_v) -> list[np.ndarray]:
-        xs = np.asarray(xs_v, dtype=np.float64)
-        ys = np.asarray(ys_v, dtype=np.float64)
-        rings = []
-        off = 0
-        for n in np.asarray(part_lens_v, dtype=np.int64):
-            rings.append(np.stack([xs[off:off + n], ys[off:off + n]], axis=1))
-            off += int(n)
-        return rings
-
-    if broadcast:
-        cand = cand.drop("strip")  # the Arrow kernel refines per polygon
-        # geometry as a broadcast dict keyed on the surrogate; the
-        # refinement is a pure narrow mapInPandas — zero shuffles end to end
-        geo_rows = polys_keyed.drop("miny", "maxy").collect()
-        bc = points_df.sparkSession.sparkContext.broadcast(
-            {
-                r["poly_sk"]: (
-                    rings_of(r["xs"], r["ys"], r["part_lens"]),
-                    tuple(r[c] for c in id_cols),
-                    r["feature_id"], r["props_json"],
-                )
-                for r in geo_rows
-            }
-        )
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            geo = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                rows = []
-                for key, grp in pdf.groupby("poly_sk", sort=False):
-                    entry = geo.get(key)
-                    if entry is None:
-                        continue
-                    hit = ray_cast_np(
-                        grp[xcol].to_numpy(np.float64),
-                        grp[ycol].to_numpy(np.float64),
-                        entry[0],
-                    )
-                    if hit.any():
-                        sel = grp.loc[hit, [pid, xcol, ycol]].copy()
-                        for c, v in zip(id_cols, entry[1]):
-                            sel[c] = v
-                        sel["feature_id"] = entry[2]
-                        sel["props_json"] = entry[3]
-                        rows.append(sel[out_cols])
-                if rows:
-                    yield pd.concat(rows, ignore_index=True)
-
-        return cand.mapInPandas(kernel, out_schema)
-
-    if method == "native":
-        # fully JVM path: explode polygons into an edge table once (small
-        # side), join candidates x edges on the surrogate key, evaluate the
-        # even-odd crossing test as a pure column expression, and count
-        # crossing parity with a map-side-combinable aggregate. No Python in
-        # the hot path at all — whole-stage codegen end to end; the
-        # per-group applyInPandas framing cost (measured ~23s for 41k groups
-        # at this bench scale) disappears.
-        # edges explode into the y-strips their interval spans (monotone
-        # strip mapping, see _strip_of): the parity join keys on
-        # (poly_sk, strip), so a candidate meets ~E/strips edges instead of
-        # all E edges of its polygon — the candidatesxedges fan-out (the
-        # dominant row count of this whole operator) drops by roughly the
-        # strip count for modest edge replication
-        use_strips = os.environ.get("SPARK_GRAFT_PIP_STRIPS", "1") != "0"
-        raw_edges = _polygon_edges(polys_keyed)
-        lo = F.least(F.col("e_yi"), F.col("e_yj"))
-        hi = F.greatest(F.col("e_yi"), F.col("e_yj"))
-        if use_strips:
-            edges = raw_edges.withColumn(
-                "strip",
-                F.explode(
-                    F.sequence(
-                        _strip_of(lo, F.col("p_miny"), F.col("p_maxy")),
-                        _strip_of(hi, F.col("p_miny"), F.col("p_maxy")),
-                    )
-                ),
-            ).drop("p_miny", "p_maxy")
-        else:
-            edges = raw_edges.drop("p_miny", "p_maxy")
-        jkeys = ["poly_sk", "strip"] if use_strips else ["poly_sk"]
-        if broadcast_edges is None:
-            n_edges = polys.agg(
-                F.sum(F.size("xs")).alias("n")
-            ).first()["n"] or 0
-            broadcast_edges = n_edges <= edge_broadcast_threshold
-        pxc, pyc = F.col(xcol), F.col(ycol)
-        yi, yj, xi, xj = F.col("e_yi"), F.col("e_yj"), F.col("e_xi"), F.col("e_xj")
-        y_between = (yi > pyc) != (yj > pyc)
-        x_cross = (xj - xi) * (pyc - yi) / (yj - yi) + xi
-        crossing = (y_between & (pxc < x_cross)).cast("int")
-        if not use_strips:
-            cand = cand.drop("strip")
-        if not broadcast_edges and os.environ.get("SPARK_GRAFT_PIP_SHJ", "1") != "0":
-            # when the caller ruled the edge table out for broadcasting,
-            # make sure Catalyst doesn't sneak one in from a bad estimate:
-            # a driver-built multi-ten-MB hashed relation showed up as
-            # whole-session GC pressure (slower UNRELATED queries) and
-            # occasional multi-second build stalls. A shuffled-hash join
-            # moves both (small) sides once and builds per-partition.
-            edges = edges.hint("shuffle_hash")
-        if broadcast_edges:
-            joined = cand.join(F.broadcast(edges), jkeys)
-        elif salt > 1:
-            # keep the skew split through the refinement: replicate edges
-            # per salt bucket so each hot polygon's candidates stay spread
-            edges = edges.withColumn(
-                "salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-            )
-            joined = cand.join(edges, jkeys[:1] + ["salt"] + jkeys[1:])
-        else:
-            joined = cand.join(edges, jkeys)
-        hits = (
-            joined.groupBy(pid, xcol, ycol, "poly_sk")
-            .agg(F.sum(crossing).alias("n_cross"))
-            .where(F.pmod(F.col("n_cross"), F.lit(2)) == 1)
-        )
-        return hits.join(
-            polys_keyed.select("poly_sk", *id_cols, *attr_cols), "poly_sk"
-        ).select(*out_cols)
-
-    # cogrouped applyInPandas on the long surrogate key — candidates shuffle
-    # as (pid, x, y, sk) rows, each polygon's geometry moves exactly once
-    def cogroup_kernel(cand_pdf: pd.DataFrame, poly_pdf: pd.DataFrame) -> pd.DataFrame:
-        if cand_pdf.empty or poly_pdf.empty:
-            return pd.DataFrame(columns=out_cols)
-        prow = poly_pdf.iloc[0]
-        rings = rings_of(prow["xs"], prow["ys"], prow["part_lens"])
-        hit = ray_cast_np(
-            cand_pdf[xcol].to_numpy(np.float64),
-            cand_pdf[ycol].to_numpy(np.float64),
-            rings,
-        )
-        sel = cand_pdf.loc[hit, [pid, xcol, ycol]].copy()
-        for c in id_cols:
-            sel[c] = prow[c]
-        sel["feature_id"] = prow["feature_id"]
-        sel["props_json"] = prow["props_json"]
-        return sel[out_cols]
-
-    return (
-        cand.drop("strip").groupby("poly_sk")
-        .cogroup(polys_keyed.drop("miny", "maxy").groupby("poly_sk"))
-        .applyInPandas(cogroup_kernel, out_schema)
-    )
+    return hits.join(
+        polys_keyed.select("poly_sk", *id_cols, *attr_cols), "poly_sk"
+    ).select(pid, xcol, ycol, *id_cols, *attr_cols)
 
 
 # ---------------------------------------------------------------------------
-# kNN via bounded neighborhood join + certification + straggler fallback
+# kNN via bounded neighborhood join + certification + ring doubling
 # ---------------------------------------------------------------------------
 
 def knn_join(
@@ -491,8 +329,6 @@ def knn_join(
     ring: int = 1,
     query_cols: tuple[str, str, str] = ("query_id", "qx", "qy"),
     site_cols: tuple[str, str, str] = ("site_id", "sx", "sy"),
-    fallback: str = "auto",
-    broadcast_max_sites: int = 2_000_000,
 ) -> DataFrame:
     """Exact k-nearest-sites per query (Euclidean in projected space).
 
@@ -502,24 +338,17 @@ def knn_join(
     beat the kth must then lie inside the joined neighborhood).
 
     Phase 2 (the uncertified stragglers — certification is density-sized so
-    these are rare):
+    these are rare): iterative ring doubling — re-join only the pending
+    queries at ring 2r, 4r, ... (cell-clamped ``sequence`` explodes, so wide
+    rings never build giant literal arrays), accepting each query as soon as
+    it certifies at its ring; when the ring covers the whole grid the join
+    IS the exhaustive join and every remaining query is exact by
+    construction. O(log(n/ring)) rounds, all ordinary equi-joins
+    Catalyst/AQE can shuffle or broadcast by its own sizing — nothing forces
+    the full site table through one executor. When every query certifies in
+    phase 1 the only extra cost is one emptiness probe of the straggler set.
 
-    - ``fallback="broadcast"``: brute force against ALL sites broadcast.
-      Exact and one-shot, but only sound when the site table fits in
-      executor memory — the small-dims case, NOT the 100-TB case.
-    - ``fallback="ring"``: iterative ring doubling — re-join only the
-      pending queries at ring 2r, 4r, ... (cell-clamped ``sequence``
-      explodes, so wide rings never build giant literal arrays), accepting
-      each query as soon as it certifies at its ring; when the ring covers
-      the whole grid the join IS the exhaustive join and every remaining
-      query is exact by construction. O(log(n/ring)) rounds, all ordinary
-      equi-joins Catalyst/AQE can shuffle or broadcast by its own sizing —
-      nothing forces the full site table through one executor.
-    - ``fallback="auto"`` (default): broadcast when ``sites_df`` has at
-      most ``broadcast_max_sites`` rows (one count job), else ring.
-
-    Both fallbacks produce identical rows (same tie-breaks: dist2, site_id),
-    so results are deterministic regardless of path.
+    Ties break on (dist2, site_id), so results are deterministic.
     """
     qid, qx, qy = query_cols
     sid, sx, sy = site_cols
@@ -570,7 +399,7 @@ def knn_join(
     # materialize the ranked candidates once: cert, the certified output and
     # the straggler set all read it — without this the neighborhood join +
     # window would recompute for each consumer. eager=False: the checkpoint
-    # write fuses into the first consuming job (cert / the isEmpty gate)
+    # write fuses into the first consuming job (cert / the straggler probe)
     # instead of paying a separate whole-plan checkpoint job; under AQE the
     # upstream shuffle stages still run at construction, but the result
     # stage (the expensive window pass over every candidate) runs once,
@@ -581,10 +410,10 @@ def knn_join(
         .localCheckpoint(eager=False)
     )
     safe2 = (ring * cell_size) ** 2
-    # materialized once: good, the straggler probe, AND the auto-fallback
-    # isEmpty gate all read cert — without this each consumer re-runs the
-    # certification aggregate over the ranked checkpoint (lazy for the same
-    # job-fusion reason; KB-sized per-query rows)
+    # materialized once: good and the straggler set both read cert —
+    # without this each consumer re-runs the certification aggregate over
+    # the ranked checkpoint (lazy for the same job-fusion reason; KB-sized
+    # per-query rows)
     cert = ranked.groupBy(qid).agg(
         F.count("*").alias("n_cand"), F.max("dist2").alias("kth_d2")
     ).withColumn(
@@ -598,25 +427,6 @@ def knn_join(
     ).unionByName(
         qcell.join(cert.select(qid), qid, "left_anti")
     )
-
-    if fallback == "auto":
-        # don't pay the sites count job when there are no stragglers to
-        # route — the common density-sized case certifies every query
-        if bad_q.isEmpty():
-            return good
-        fallback = (
-            "broadcast" if sites_df.count() <= broadcast_max_sites else "ring"
-        )
-    if fallback == "broadcast":
-        brute = (
-            bad_q.crossJoin(F.broadcast(sites_df.select(sid, sx, sy)))
-            .select(qid, qx, qy, sid, d2.alias("dist2"))
-            .withColumn("knn_rank", F.row_number().over(w))
-            .where(F.col("knn_rank") <= k)
-        )
-        return good.unionByName(brute)
-    if fallback != "ring":
-        raise ValueError(f"unknown fallback {fallback!r}")
 
     def neighborhood(qdf: DataFrame, r: int) -> DataFrame:
         # clamped sequences: (2r+1)^2 neighbor cells without literal arrays
@@ -635,9 +445,12 @@ def knn_join(
         ).select(qid, qx, qy, "ix", "iy")
 
     parts = [good]
-    pending = bad_q.localCheckpoint(eager=False)
+    pending = bad_q
     r = ring
+    # probe each straggler set before materializing it: the density-sized
+    # grid usually certifies every query, and then nothing is checkpointed
     while not pending.isEmpty():
+        pending = pending.localCheckpoint(eager=False)
         r *= 2
         ranked_r = (
             neighborhood(pending, r)
@@ -656,7 +469,7 @@ def knn_join(
             (F.col("n_cand") >= k) & (F.col("kth_d2") < F.lit((r * cell_size) ** 2))
         ).select(qid)
         parts.append(ranked_r.join(cert_r, qid, "inner"))
-        pending = pending.join(cert_r, qid, "left_anti").localCheckpoint(eager=False)
+        pending = pending.join(cert_r, qid, "left_anti")
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

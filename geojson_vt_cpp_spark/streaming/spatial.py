@@ -12,8 +12,9 @@ is joined once), so microbatch = correct, and the polygon side stays a
 static table Catalyst can broadcast per batch.
 
 Scale shape: each microbatch is an independent bounded PIP join — the same
-plan the batch engine runs, with the same skew handling (salting / AQE);
-state is bounded by the microbatch, not the stream.
+plan the batch engine runs, with the same skew handling (the per-polygon
+y-strip key of the edge join, plus AQE); state is bounded by the
+microbatch, not the stream.
 """
 
 from __future__ import annotations

@@ -2,14 +2,15 @@
 
 200 us-states copies stacked on the SAME region (<=0.7 deg deterministic
 jitter) x 120k points concentrated there: every point lands in the same few
-cells and hits ~40 polygons. Measures point_in_polygon_join variants:
+cells and hits ~40 polygons. Measures the two edge-join placements of
+point_in_polygon_join:
 
-  python3 scripts/hot_cell_bench.py salt1|salt8|salt8_bcast [cpus]
+  python3 scripts/hot_cell_bench.py shj|bcast_edges [cpus]
 
-- salt1: AQE alone
-- salt8: deterministic salting, carried through the parity join (edges
-  replicated per salt bucket; auto edge-count gate forces the shuffle path)
-- salt8_bcast: salting on the cell join + broadcast edge table refinement
+- shj: shuffled-hash edge join (``broadcast_edges=False``); the y-strip key
+  splits each hot polygon's candidates, AQE handles the rest
+- bcast_edges: broadcast edge table (``broadcast_edges=True``), no
+  refinement shuffle
 
 Run variants in SEPARATE processes (CLAUDE.md: shared box — never measure
 two Spark jobs concurrently).
@@ -78,7 +79,7 @@ def build_points(spark):
 
 
 def main():
-    variant = sys.argv[1] if len(sys.argv) > 1 else "salt8"
+    variant = sys.argv[1] if len(sys.argv) > 1 else "shj"
     cpus = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     from pyspark.sql import SparkSession
 
@@ -92,17 +93,12 @@ def main():
 
     polys = build_polys(spark).localCheckpoint()
     points = build_points(spark).localCheckpoint()
-    kw = dict(method="native")
-    if variant == "salt1":
-        kw.update(salt=1, broadcast_edges=False)
-    elif variant == "salt8":
-        kw.update(salt=8, broadcast_edges=False)
-    elif variant == "salt8_bcast":
-        kw.update(salt=8, broadcast_edges=True)
-    else:
+    if variant not in ("shj", "bcast_edges"):
         raise SystemExit(f"unknown variant {variant}")
     t0 = time.perf_counter()
-    n = point_in_polygon_join(points, polys, **kw).count()
+    n = point_in_polygon_join(
+        points, polys, broadcast_edges=variant == "bcast_edges"
+    ).count()
     dt = time.perf_counter() - t0
     print(json.dumps({"variant": variant, "cpus": cpus, "pairs": n, "sec": round(dt, 1)}))
     spark.stop()

@@ -1,19 +1,14 @@
-"""kNN straggler-fallback micro-bench (BENCH.md evidence, reproducible).
+"""kNN straggler micro-bench (BENCH.md evidence, reproducible).
 
 Workload engineered so phase-1 certification fails for a slice of queries:
 sites cluster in a corner patch, 1% of queries land far away (zero
 candidates at ring 1 — the realistic straggler fraction; certification is
-density-sized so stragglers are rare by design). Compares the two fallback
-paths:
+density-sized so stragglers are rare by design). Times knn_join, whose
+stragglers resolve by ring doubling:
 
-  python3 scripts/knn_straggler_bench.py broadcast|ring [cpus]
+  python3 scripts/knn_straggler_bench.py [cpus]
 
-- broadcast: brute force of stragglers against the full broadcast site
-  table (the pre-round-3 behavior; unsound when sites don't fit in memory)
-- ring: iterative ring doubling (scale path: ordinary equi-joins only)
-
-Run variants in SEPARATE processes (CLAUDE.md: shared box — never measure
-two Spark jobs concurrently).
+Never measure two Spark jobs concurrently on a shared box (CLAUDE.md).
 """
 
 from __future__ import annotations
@@ -30,8 +25,7 @@ N_QUERIES = 20_000
 
 
 def main() -> None:
-    mode = sys.argv[1] if len(sys.argv) > 1 else "ring"
-    cpus = int(sys.argv[2]) if len(sys.argv) > 2 else 8
+    cpus = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     from pyspark.sql import SparkSession
 
     from geojson_vt_cpp_spark.operators.spatial_join import knn_join
@@ -64,14 +58,13 @@ def main() -> None:
     queries = queries.localCheckpoint()
 
     # warm-up (JIT/codegen) on a slice, untimed
-    knn_join(queries.limit(2000), sites.limit(20000), k=3, res=7, ring=1,
-             fallback=mode).count()
+    knn_join(queries.limit(2000), sites.limit(20000), k=3, res=7, ring=1).count()
 
     t0 = time.time()
-    n = knn_join(queries, sites, k=3, res=7, ring=1, fallback=mode).count()
+    n = knn_join(queries, sites, k=3, res=7, ring=1).count()
     dt = time.time() - t0
     print(json.dumps({
-        "bench": "knn_straggler", "mode": mode, "cpus": cpus,
+        "bench": "knn_straggler", "cpus": cpus,
         "n_sites": N_SITES, "n_queries": N_QUERIES,
         "rows": n, "sec": round(dt, 2),
         "loadavg": round(os.getloadavg()[0], 1),

@@ -22,10 +22,20 @@ import json
 import os
 
 REF_FIXTURES = "/root/reference/test/fixtures"
+# copies the repository ships (fixtures/us-states.json, countries.geojson),
+# so tests on them run without the reference checkout
+REPO_FIXTURES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures"
+)
 
 
 def load_fixture(name: str) -> str:
-    with open(os.path.join(REF_FIXTURES, name)) as f:
+    """Fixture ``name`` from the in-repo copy if there is one, else from the
+    reference checkout."""
+    path = os.path.join(REPO_FIXTURES, name)
+    if not os.path.exists(path):
+        path = os.path.join(REF_FIXTURES, name)
+    with open(path) as f:
         return f.read()
 
 

@@ -16,7 +16,6 @@ from geojson_vt_cpp_spark.operators.spatial_join import (
     point_in_polygon_join,
     raster_tiles_from_documents,
     raster_vector_overlay,
-    ray_cast_np,
 )
 from geojson_vt_cpp_spark.sources.documents import documents_from_fixture
 
@@ -71,7 +70,36 @@ def test_cell_id_sql_duckdb_matches_spark(spark):
 def us_polys(spark):
     docs = documents_from_fixture(spark, load_fixture("us-states.json"), "us-states")
     feats = extract_features(docs, 1e-9)  # negligible tolerance: raw shapes
-    return feats.cache()
+    # re-rooted on a local relation, so the join's plan holds only the
+    # join's own Python nodes
+    return spark.createDataFrame(feats.collect(), feats.schema).cache()
+
+
+def ray_cast_np(px: np.ndarray, py: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:
+    """Even-odd point-in-polygon for a batch of points vs one polygon — the
+    brute-force oracle, independent of the engine's edge-join refinement.
+
+    rings: list of (n,2) float arrays (closing vertex optional — the test
+    wraps implicitly). Vectorized points x edges; holes fall out of the
+    even-odd rule.
+    """
+    inside = np.zeros(px.shape[0], dtype=bool)
+    for ring in rings:
+        if ring.shape[0] < 3:
+            continue
+        xi = ring[:, 0]
+        yi = ring[:, 1]
+        xj = np.roll(xi, 1)
+        yj = np.roll(yi, 1)
+        # (P, E) broadcasting
+        y_between = (yi[None, :] > py[:, None]) != (yj[None, :] > py[:, None])
+        with np.errstate(divide="ignore", invalid="ignore"):
+            x_cross = (xj - xi)[None, :] * (py[:, None] - yi[None, :]) / (
+                yj - yi
+            )[None, :] + xi[None, :]
+        crossings = y_between & (px[:, None] < x_cross)
+        inside ^= (crossings.sum(axis=1) % 2).astype(bool)
+    return inside
 
 
 def _brute_pip(pts, feats_rows):
@@ -92,29 +120,27 @@ def _brute_pip(pts, feats_rows):
 
 
 @pytest.mark.parametrize(
-    "broadcast,salt,method",
-    [
-        (False, 1, "native"),
-        (True, 1, "native"),
-        (False, 4, "native"),
-        (False, 1, "cogroup"),
-        (False, 4, "cogroup"),
-    ],
+    "broadcast,broadcast_edges,id_type",
+    [(b, e, "string") for b in (False, True) for e in (None, False, True)]
+    + [(True, None, "long")],
 )
-def test_point_in_polygon_vs_brute_force(spark, us_polys, broadcast, salt, method):
+def test_point_in_polygon_vs_brute_force(spark, us_polys, broadcast, broadcast_edges, id_type):
     pts = _unit_points(2000)
+    ids = [f"p{i:05d}" if id_type == "string" else (1 << 40) + i for i in range(len(pts))]
     pdf = spark.createDataFrame(
-        [(f"p{i:05d}", float(x), float(y)) for i, (x, y) in enumerate(pts)],
-        "point_id string, px double, py double",
+        [(pid, float(x), float(y)) for pid, (x, y) in zip(ids, pts)],
+        f"point_id {id_type}, px double, py double",
     )
     got = point_in_polygon_join(
-        pdf, us_polys, broadcast=broadcast, salt=salt, method=method
+        pdf, us_polys, broadcast=broadcast, broadcast_edges=broadcast_edges
     )
+    # one refinement strategy: the edge table is the plan's only Python node
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
     got_pairs = {(r["point_id"], r["doc_id"]) for r in got.collect()}
     oracle = _brute_pip(pts, us_polys.where("gtype in (3,6)").collect())
-    want_pairs = {
-        (f"p{i:05d}", d) for i, ds in oracle.items() for d in ds
-    }
+    want_pairs = {(ids[i], d) for i, ds in oracle.items() for d in ds}
     assert got_pairs == want_pairs
     assert len(want_pairs) > 200  # the sample really lands inside states
 
@@ -225,7 +251,7 @@ def test_knn_ring_fallback_exact_no_site_broadcast(spark):
         [(f"s{i:04d}", float(x), float(y)) for i, (x, y) in enumerate(sites)],
         "site_id string, sx double, sy double",
     )
-    got = knn_join(qdf, sdf, k=5, res=5, ring=1, fallback="ring")
+    got = knn_join(qdf, sdf, k=5, res=5, ring=1)
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -240,8 +266,7 @@ def test_knn_ring_fallback_exact_no_site_broadcast(spark):
         assert gotl == want, f"query {i}: {gotl} != {want}"
 
     # k exceeding the site count: full-cover terminal returns every site
-    got_all = knn_join(qdf.limit(2), sdf.limit(3), k=5, res=5, ring=1,
-                       fallback="ring").collect()
+    got_all = knn_join(qdf.limit(2), sdf.limit(3), k=5, res=5, ring=1).collect()
     per_q = {}
     for r in got_all:
         per_q.setdefault(r["query_id"], []).append(r["site_id"])
