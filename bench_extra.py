@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Round-6 optimization measurement harness (guide §1.4): per-query noop-sink
-isolation, per-phase pyramid timings, and .explain("formatted") capture.
+isolation, pyramid build and quantize timings, and .explain("formatted") capture.
 
 This file is NOT part of the frozen driver contract (bench.py is); it exists
 so optimization claims in OPTIMIZATION_r06.md cite isolated numbers and the
@@ -115,7 +115,7 @@ def main() -> None:
         warm_docs.unpersist()
 
         if "--pyramid" in sys.argv:
-            sc.setJobDescription("pyramid_build (phase-logged)")
+            sc.setJobDescription("pyramid_build (build + quantize timed)")
             t0 = time.time()
             pyr = TilePyramid.from_documents(
                 docs, Options(index_max_zoom=5, index_max_points=50_000, max_zoom=14)

@@ -20,6 +20,55 @@ Public API mirrors the reference's three entry points
 
 from geojson_vt_cpp_spark.config import Options, TileOptions, from_id, to_id
 
+
+def _stat_keyed_zip_invalidation() -> None:
+    """Inside a PySpark Python worker, re-read a zip's directory only when the
+    zip changed.
+
+    The worker calls ``importlib.invalidate_caches()`` at the start of every
+    task (``pyspark.worker_util.setup_spark_files``). On CPython 3.11 every
+    ``zipimporter`` then re-reads the whole central directory of its archive
+    (3.12 made this lazy, gh-103200); the ~16 importers over ``pyspark.zip``
+    and its packages cost more CPU per task than the engine's kernels. The
+    wrapper re-reads only when the archive's ``(st_ino, st_size,
+    st_mtime_ns)`` differs from the last re-read; otherwise the importer takes
+    the shared directory that re-read cached. A rebuilt or replaced archive
+    (``addPyFile`` / ``--py-files``) is still re-read. Idempotent; the driver
+    (no active ``TaskContext``) is never patched.
+    """
+    import sys
+
+    tc = sys.modules.get("pyspark.taskcontext")
+    if tc is None or tc.TaskContext.get() is None:
+        return
+    import os
+    import zipimport
+
+    cls = zipimport.zipimporter
+    if getattr(cls.invalidate_caches, "stat_keyed", False):
+        return
+    reread = cls.invalidate_caches
+    read_at = {}  # archive -> its stat key taken just before its last re-read
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            key = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if key is not None and files is not None and read_at.get(self.archive) == key:
+            self._files = files
+            return
+        reread(self)
+        read_at[self.archive] = key
+
+    invalidate_caches.stat_keyed = True
+    cls.invalidate_caches = invalidate_caches
+
+
+_stat_keyed_zip_invalidation()
+
 __all__ = [
     "Options",
     "TileOptions",

@@ -427,9 +427,6 @@ class TilePyramid:
             self._prev_snap = base.snapshot_id
             self._build(base.df)
             return
-        import time as _time
-
-        _t0 = _time.time()
         # lazy (eager=False) localCheckpoint: wrap's deciding aggregate (or
         # the z0 stats aggregate) is the materializing action, so the cache
         # write fuses into the consumer instead of paying a separate
@@ -440,8 +437,6 @@ class TilePyramid:
         features_df = features_df.repartition(self._n_parts).localCheckpoint(
             eager=False
         )
-        self._phase_log("base checkpoint (lazy)", _t0)
-        _t0 = _time.time()
         feats = (
             features_df
             if pre_wrapped
@@ -450,7 +445,6 @@ class TilePyramid:
                 max_kernel_parts=self._n_parts,
             )
         )
-        self._phase_log("wrap", _t0)
         # wrap returning its input unchanged (no dateline features) means the
         # base is already round-robin balanced AND materialized — z0 can skip
         # its redundant full-payload reshuffle + rematerialization
@@ -479,20 +473,7 @@ class TilePyramid:
         self.stats[z] = self.stats.get(z, 0) + 1
         return m
 
-    @staticmethod
-    def _phase_log(msg: str, t0: float) -> None:
-        """Env-gated phase timing (SPARK_GRAFT_PHASE_LOG=1): wall seconds
-        since ``t0`` to stderr — measurement aid, no behavior change."""
-        import os as _os
-        import sys as _sys
-        import time as _time
-
-        if _os.environ.get("SPARK_GRAFT_PHASE_LOG"):
-            print(f"[pyr-phase] {msg}: {_time.time() - t0:.3f}s", file=_sys.stderr)
-
     def _build(self, feats: DataFrame, base_balanced: bool = False) -> None:
-        import time as _time
-
         o = self.o
         assigned = feats.select(
             F.lit(0).alias("z"),
@@ -503,11 +484,6 @@ class TilePyramid:
         visit = {(0, 0)}
         z = 0
         while True:
-            _pt0 = _time.time()
-            # full round-robin repartition, not coalesce: assignments are
-            # spatially skewed and coalesce would carry that skew into every
-            # downstream kernel task (straggler-bound wall time); the shuffle
-            # itself is cheap relative to the kernels it balances
             if self._io is not None:
                 # manifest-gated level checkpoint: a killed build resumes
                 # here — completed levels read back, this one re-runs
@@ -526,13 +502,12 @@ class TilePyramid:
                 # full-payload shuffle + rematerialization buys nothing
                 pass
             else:
-                # coalesce (not the round-robin repartition of earlier
-                # rounds): since the split kernel only sees rows that
-                # genuinely need geometric clipping (clip_stage native
-                # routing), per-level Python work is too small to justify a
-                # full-payload shuffle per zoom — the single balancing
-                # shuffle now lives in tile_features(), in front of the one
-                # remaining heavy Python pass (quantize). The coalesce only
+                # coalesce, not a round-robin repartition: since the split
+                # kernel only sees rows that genuinely need geometric
+                # clipping (clip_stage native routing), per-level Python
+                # work is too small to justify a full-payload shuffle per
+                # zoom (tile_features() coalesces the same way in front of
+                # quantize). The coalesce only
                 # bounds the partition count (the native/kernel branch
                 # union doubles it every level). Lazy checkpoint: the
                 # level materializes inside its stats aggregate below (one
@@ -542,8 +517,6 @@ class TilePyramid:
                 assigned = assigned.coalesce(self._n_parts).localCheckpoint(
                     eager=False
                 )
-            self._phase_log(f"z{z} split (lazy)", _pt0)
-            _pt0 = _time.time()
             self._level_assigned[z] = assigned
             if not isinstance(visit, set) or len(visit) > self._driver_stats_max:
                 # big level: stop conditions evaluate from the aggregate
@@ -600,7 +573,6 @@ class TilePyramid:
                     for dx in (0, 1)
                     for dy in (0, 1)
                 }
-            self._phase_log(f"z{z} agg+decide (materializes level)", _pt0)
             assigned = split_children(
                 split_df, o.buffer, o.extent, o.line_metrics,
                 kernel_parts=self._size_parts(mid_total),
@@ -1047,24 +1019,17 @@ class TilePyramid:
         """All materialized tiles, quantized — lazy, cached.
 
         The union of per-level checkpoints accumulates partitions (levels +
-        drill rounds) AND — since the BFS stopped round-robin-shuffling
-        every level (clip_stage native routing made per-level Python work
-        small) — carries whatever spatial imbalance the splits produced. The
-        quantize kernel is the one remaining full Python pass over every
-        row, so THIS is where the single balancing shuffle goes: one
-        round-robin repartition sized to the driver-known total row count
-        (it also bounds per-task Python-runner startups the way the old
-        coalesce did).
+        drill rounds); the levels are coalesced, not shuffled, so it also
+        carries whatever spatial imbalance the splits produced. Quantize is
+        the one full Python pass over every row; a coalesce sized to the
+        driver-known total row count bounds its per-task Python-runner
+        startups without a shuffle (a round-robin repartition here measured
+        at par on the benchmark corpus).
         """
         if self._tile_features is None:
-            import os as _os
-
-            union = self._assigned_union()
-            n = self._size_parts(self.meta.total_rows())
-            if _os.environ.get("SPARK_GRAFT_TF_SHUFFLE", "0") == "1":
-                union = union.repartition(n)
-            else:
-                union = union.coalesce(n)
+            union = self._assigned_union().coalesce(
+                self._size_parts(self.meta.total_rows())
+            )
             self._tile_features = quantize(union, self.o).persist()
         return self._tile_features
 
