@@ -12,16 +12,16 @@ The reference's recursive DFS ``splitTile`` becomes a per-zoom loop:
 - quantization to int16 tile features is deferred and runs as one job over
   the union of all levels when output is first requested.
 
-Tile metadata (num_points, row counts, source retention) lives on the driver
-— small levels as plain dict entries; levels past ``driver_stats_max``
-visited tiles evaluate their stop conditions DataFrame-side (vectorized
-numpy over the level aggregate, broadcast semi-join split filter) and
-register into compact numpy blocks (~33 bytes/tile, searchsorted lookups)
-so deep indexes (index_max_zoom >= 8) never build per-tile Python objects
-or loop the visit set on the driver. Empty tiles ARE materialized (the
-reference constructs an InternalTile for every child before checking
-``features.empty()``, ``geojsonvt.hpp:189-206`` — the us-states golden
-contains 19 empty tiles).
+Tile metadata (num_points, row counts, source retention) lives on the
+driver in one registry, the analogue of the reference's single tile map
+(``geojsonvt.hpp:157``): every build level, append level and drill round
+registers into a compact numpy block (~33 bytes/tile, searchsorted
+lookups), and a build level evaluates its stop conditions in vectorized
+numpy over its one aggregate, so deep indexes (index_max_zoom >= 8) never
+build per-tile Python objects or loop the visit set on the driver. Empty
+tiles ARE materialized (the reference constructs an InternalTile for every
+child before checking ``features.empty()``, ``geojsonvt.hpp:189-206`` — the
+us-states golden contains 19 empty tiles).
 
 ``get_tile`` mirrors ``geojsonvt.hpp:117-150``: x wraparound, ancestor walk,
 targeted drill-down re-running the split from the nearest retained source,
@@ -35,6 +35,7 @@ import json
 from dataclasses import dataclass, field
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -86,16 +87,9 @@ class Tile:
 EMPTY_TILE = Tile(-1, 0, 0)  # canonical empty tile (geojsonvt.hpp:64)
 
 
-@dataclass
-class _Meta:
-    num_points: int
-    rows: int
-    has_source: bool = False
-
-
 class _MetaRef:
-    """Write-through view of one tile row in a numpy registry block —
-    duck-typed like :class:`_Meta` (num_points/rows/has_source)."""
+    """Write-through view of one tile row in a registry block
+    (num_points / rows / has_source)."""
 
     __slots__ = ("_lv", "_i")
 
@@ -129,28 +123,24 @@ class _MetaRef:
 
 
 class _MetaStore:
-    """Tile registry: dict semantics, numpy storage for big levels.
+    """Tile registry: dict semantics over numpy blocks.
 
-    Small levels (and drill-registered tiles) live in a plain dict of
-    :class:`_Meta`; levels whose visited-tile count exceeds the driver
-    threshold are stored as one numpy block per level — packed-key-sorted
-    arrays of (key, num_points, rows, has_source), ~33 bytes/tile instead
-    of ~200 for a dict entry + _Meta object, with O(log n) searchsorted
-    lookups. Mutations (drill retiring a source) write through the
-    :class:`_MetaRef` view into the block.
+    Every registration adds one block — a build or append level, or the
+    children one drill round registered at one zoom: packed-key-sorted
+    arrays of (key, num_points, rows, has_source), ~33 bytes/tile, with
+    O(log n) searchsorted lookups. Mutations (append growing a tile, a
+    drill retiring a source) write through the :class:`_MetaRef` view into
+    the block.
     """
 
     def __init__(self):
-        self._extra: dict[tuple[int, int, int], _Meta] = {}
         # z -> list of (packed_keys_sorted, npts, nrows, has_source,
         #               container_df_or_None); multiple blocks per level:
-        # one from the eager build plus one per big drill round
+        # one from the eager build plus one per append level / drill round
         self._levels: dict[int, list] = {}
         self._block_count = 0
 
     def add_level(self, z, xs, ys, npts, nrows, src, container=None) -> None:
-        import numpy as np
-
         packed = (xs.astype(np.int64) << 29) + ys.astype(np.int64)
         order = np.argsort(packed)
         self._levels.setdefault(z, []).append(
@@ -166,8 +156,6 @@ class _MetaStore:
 
     def _find(self, key):
         z, x, y = key
-        import numpy as np
-
         p = (x << 29) + y
         for lv in self._levels.get(z, ()):
             i = int(np.searchsorted(lv[0], p))
@@ -176,35 +164,25 @@ class _MetaStore:
         return None, None
 
     def block_container(self, key):
-        """The drill-round children df that registered this tile, if it
-        lives in a numpy block created by a drill round (sourced drill
-        children resolve their source container through this instead of a
-        per-key dict entry)."""
+        """The drill-round children df that registered this tile, or None
+        for tiles of build/append levels (their rows live in the level
+        checkpoint)."""
         lv, _i = self._find(key)
         return None if lv is None else lv[4]
 
     def __contains__(self, key) -> bool:
-        if key in self._extra:
-            return True
         return self._find(key)[0] is not None
 
     def __getitem__(self, key):
-        m = self._extra.get(key)
-        if m is not None:
-            return m
         lv, i = self._find(key)
         if lv is None:
             raise KeyError(key)
         return _MetaRef(lv, i)
 
-    def __setitem__(self, key, m: _Meta) -> None:
-        self._extra[key] = m
-
     def __len__(self) -> int:
-        return len(self._extra) + self._block_count
+        return self._block_count
 
     def __iter__(self):
-        yield from self._extra
         for z, blocks in self._levels.items():
             for lv in blocks:
                 for p in lv[0]:
@@ -214,23 +192,21 @@ class _MetaStore:
         return iter(self)
 
     def items(self):
-        for k, m in self._extra.items():
-            yield k, m
         for z, blocks in self._levels.items():
             for lv in blocks:
                 for i, p in enumerate(lv[0]):
                     yield (z, int(p) >> 29, int(p) & ((1 << 29) - 1)), _MetaRef(lv, i)
 
-    def values(self):
-        for _k, m in self.items():
-            yield m
+    def per_zoom(self) -> dict[int, int]:
+        return {
+            z: sum(len(lv[0]) for lv in blocks)
+            for z, blocks in sorted(self._levels.items())
+        }
 
     def total_rows(self) -> int:
-        s = sum(m.rows for m in self._extra.values())
-        for blocks in self._levels.values():
-            for lv in blocks:
-                s += int(lv[2].sum())
-        return s
+        return sum(
+            int(lv[2].sum()) for blocks in self._levels.values() for lv in blocks
+        )
 
 
 def quantize(assigned_df: DataFrame, options: Options) -> DataFrame:
@@ -358,7 +334,6 @@ class TilePyramid:
         options: Options | None = None,
         pre_wrapped: bool = False,
         workdir: str | None = None,
-        driver_stats_max: int = 4096,
     ):
         """``pre_wrapped=True`` skips the antimeridian wrap for callers that
         already ran wrap_features (e.g. the checkpointed pipeline's
@@ -379,14 +354,8 @@ class TilePyramid:
 
         self.o = options or Options()
         self.spark = features_df.sparkSession
-        # levels with more visited tiles than driver_stats_max evaluate
-        # their stop conditions DataFrame-side and register into compact
-        # numpy blocks (deep index_max_zoom; see _MetaStore / _build)
-        self._driver_stats_max = driver_stats_max
         self.meta: _MetaStore = _MetaStore()
-        self.stats: dict[int, int] = {}
         self._level_assigned: dict[int, DataFrame] = {}
-        self._sources: dict[tuple[int, int, int], DataFrame] = {}
         self._extra_assigned: list[DataFrame] = []
         self._tile_features: DataFrame | None = None
         self._tile_cache: dict[tuple[int, int, int], Tile] = {}
@@ -465,13 +434,12 @@ class TilePyramid:
     def total(self) -> int:
         return len(self.meta)
 
-    # ------------------------------------------------------------------ build
+    @property
+    def stats(self) -> dict[int, int]:
+        """Registered tiles per zoom (the reference's ``stats``)."""
+        return self.meta.per_zoom()
 
-    def _register(self, z: int, x: int, y: int, num_points: int, rows: int) -> _Meta:
-        m = _Meta(num_points=num_points, rows=rows)
-        self.meta[(z, x, y)] = m
-        self.stats[z] = self.stats.get(z, 0) + 1
-        return m
+    # ------------------------------------------------------------------ build
 
     def _build(self, feats: DataFrame, base_balanced: bool = False) -> None:
         o = self.o
@@ -481,7 +449,7 @@ class TilePyramid:
             F.lit(0).cast("long").alias("ty"),
             "*",
         )
-        visit = {(0, 0)}
+        visit = (np.zeros(1, dtype=np.int64), np.zeros(1, dtype=np.int64))
         z = 0
         while True:
             if self._io is not None:
@@ -518,84 +486,37 @@ class TilePyramid:
                     eager=False
                 )
             self._level_assigned[z] = assigned
-            if not isinstance(visit, set) or len(visit) > self._driver_stats_max:
-                # big level: stop conditions evaluate from the aggregate
-                # DataFrame in vectorized numpy (no per-tile Python loop),
-                # the registry lands in a compact numpy block, and the
-                # split filter is a broadcast semi-join — the driver never
-                # builds per-tile dict entries for this level
-                splits_np = self._level_stats_big(assigned, visit, z)
-                if splits_np is None:
-                    break
-                sxs, sys_, mid_total = splits_np
-                kdf = self.spark.createDataFrame(
-                    pd.DataFrame({"tx": sxs, "ty": sys_})
-                )
-                split_df = assigned.join(F.broadcast(kdf), ["tx", "ty"], "leftsemi")
-                import numpy as np
-
-                visit = (
-                    np.repeat(sxs * 2, 4) + np.tile(np.array([0, 1, 0, 1]), len(sxs)),
-                    np.repeat(sys_ * 2, 4) + np.tile(np.array([0, 0, 1, 1]), len(sys_)),
-                )
-            else:
-                stats = {
-                    (r["tx"], r["ty"]): (r["npts"], r["nrows"], r["nmid"])
-                    for r in assigned.groupBy("tx", "ty")
-                    .agg(
-                        F.sum("num_points").alias("npts"),
-                        F.count("*").alias("nrows"),
-                        # free sizing signal for the NEXT split's Python
-                        # stage (same scan): rows the native routing cannot
-                        # handle — see split_children/kernel_parts
-                        split_mid_count_col(o.buffer, o.extent).alias("nmid"),
-                    )
-                    .collect()
-                }
-                splits = []
-                mid_total = 0
-                for (x, y) in sorted(visit):
-                    npts, nrows, nmid = stats.get((x, y), (0, 0, 0))
-                    m = self._register(z, x, y, int(npts or 0), int(nrows))
-                    if nrows == 0:
-                        continue  # empty tile: materialized, never splits
-                    if z == o.index_max_zoom or m.num_points <= o.index_max_points:
-                        m.has_source = True  # leaf keeps source (geojsonvt.hpp:212-214)
-                    else:
-                        splits.append((x, y))
-                        mid_total += int(nmid or 0)
-                if not splits:
-                    break
-                split_df = self._filter_tiles(assigned, splits)
-                visit = {
-                    (2 * x + dx, 2 * y + dy)
-                    for (x, y) in splits
-                    for dx in (0, 1)
-                    for dy in (0, 1)
-                }
+            splits = self._level_stats(assigned, visit, z)
+            if splits is None:
+                break
+            sxs, sys_, mid_total = splits
+            split_df = self._filter_tiles(
+                assigned, list(zip(sxs.tolist(), sys_.tolist()))
+            )
+            visit = (
+                np.repeat(sxs * 2, 4) + np.tile(np.array([0, 1, 0, 1]), len(sxs)),
+                np.repeat(sys_ * 2, 4) + np.tile(np.array([0, 0, 1, 1]), len(sys_)),
+            )
             assigned = split_children(
                 split_df, o.buffer, o.extent, o.line_metrics,
                 kernel_parts=self._size_parts(mid_total),
             )
             z += 1
 
-    def _level_stats_big(self, assigned: DataFrame, visit, z: int):
-        """DataFrame-side stop-condition evaluation for a big level.
+    def _level_stats(self, assigned: DataFrame, visit, z: int):
+        """Stop conditions for one build level (``geojsonvt.hpp:210-215``).
 
-        Registers every visited tile (including empties) into a numpy
-        registry block and returns the (xs, ys) arrays of tiles to split,
-        or None when the level is all leaves — the exact same decisions as
-        the small-level Python loop, vectorized.
+        One aggregate over the level — per-tile num_points sum, row count
+        and the next split's mid-row count (rows the native routing cannot
+        clip, see split_children/kernel_parts) — then vectorized numpy:
+        every visited tile (``visit`` = (xs, ys), empties included) lands
+        in one registry block; a non-empty tile keeps its source at
+        ``indexMaxZoom`` or at most ``indexMaxPoints`` points, and splits
+        otherwise. Returns the (xs, ys) arrays of tiles to split and their
+        mid-row total, or None when the level is all leaves.
         """
-        import numpy as np
-
         o = self.o
-        if isinstance(visit, set):
-            sv = sorted(visit)
-            vxs = np.array([x for x, _ in sv], dtype=np.int64)
-            vys = np.array([y for _, y in sv], dtype=np.int64)
-        else:
-            vxs, vys = visit
+        vxs, vys = visit
         packed = (vxs << 29) + vys
         order = np.argsort(packed)
         vxs, vys, packed = vxs[order], vys[order], packed[order]
@@ -628,7 +549,6 @@ class TilePyramid:
         )
         split_mask = nonempty & (z < o.index_max_zoom) & (npts > o.index_max_points)
         self.meta.add_level(z, vxs, vys, npts, nrows, keep_src)
-        self.stats[z] = self.stats.get(z, 0) + len(packed)
         if not split_mask.any():
             return None
         return vxs[split_mask], vys[split_mask], int(nmid[split_mask].sum())
@@ -694,7 +614,8 @@ class TilePyramid:
             F.lit(0).cast("long").alias("ty"),
             "*",
         )
-        expect: set[tuple[int, int, int]] = set()
+        # (x, y) at level z of the children of tiles split by this append
+        expect: set[tuple[int, int]] = set()
         z = 0
         while True:
             new_assigned = new_assigned.repartition(
@@ -708,25 +629,22 @@ class TilePyramid:
             }
             if not nstats and not expect:
                 break
-            lvl_keys = set(nstats) | {(x, y) for (zz, x, y) in expect if zz == z}
             descend_new: list[tuple[int, int]] = []  # new rows descend
             pull_old: list[tuple[int, int]] = []  # old leaf rows re-split too
             new_splits: list[tuple[int, int]] = []  # children need registering
-            for (x, y) in sorted(lvl_keys):
+            fresh: list[tuple] = []  # (x, y, npts, rows, has_source)
+            for (x, y) in sorted(set(nstats) | expect):
                 npts_new, rows_new = nstats.get((x, y), (0, 0))
-                key = (z, x, y)
-                if key in expect:
+                if (x, y) in expect:
                     # child of a tile split during THIS append: fresh tile,
                     # new_assigned already carries ALL of its rows
-                    m = self._register(z, x, y, npts_new, rows_new)
-                    if rows_new == 0:
-                        continue
-                    if z == o.index_max_zoom or npts_new <= o.index_max_points:
-                        m.has_source = True
-                    else:
+                    leaf = z == o.index_max_zoom or npts_new <= o.index_max_points
+                    fresh.append((x, y, npts_new, rows_new, rows_new > 0 and leaf))
+                    if rows_new > 0 and not leaf:
                         descend_new.append((x, y))
                         new_splits.append((x, y))
                     continue
+                key = (z, x, y)
                 if key not in self.meta:
                     raise AssertionError(f"append reached unregistered tile {key}")
                 m = self.meta[key]
@@ -744,6 +662,11 @@ class TilePyramid:
                     descend_new.append((x, y))
                     pull_old.append((x, y))
                     new_splits.append((x, y))
+            if fresh:
+                arr = np.array(fresh, dtype=np.int64)
+                self.meta.add_level(
+                    z, arr[:, 0], arr[:, 1], arr[:, 2], arr[:, 3], arr[:, 4]
+                )
             old_lvl = self._level_assigned.get(z)
             if pull_old:
                 descend_old = self._filter_tiles(old_lvl, pull_old)
@@ -754,7 +677,7 @@ class TilePyramid:
                     else old_lvl.unionByName(new_assigned)
                 )
             expect = {
-                (z + 1, 2 * x + dx, 2 * y + dy)
+                (2 * x + dx, 2 * y + dy)
                 for (x, y) in new_splits
                 for dx in (0, 1)
                 for dy in (0, 1)
@@ -787,27 +710,18 @@ class TilePyramid:
     # ------------------------------------------------------------ drill-down
 
     def _source_container(self, key: tuple[int, int, int]) -> DataFrame | None:
-        """The unfiltered DataFrame holding this sourced tile's rows.
+        """The unfiltered DataFrame holding this sourced tile's rows: the
+        drill round's children df that registered its block, else its
+        build/append level.
 
-        ``_sources`` maps a sourced tile to its CONTAINER df (a drill
-        round's children union), not a pre-filtered view: constructing one
-        filtered DataFrame per retained child would cost Py4J round trips
-        per tile — O(misses) driver work, exactly what the batched drill
-        exists to avoid. Filters are built lazily, grouped per container,
-        only for tiles that actually drill.
+        A container, not a pre-filtered view: constructing one filtered
+        DataFrame per retained child would cost Py4J round trips per tile —
+        O(misses) driver work, exactly what the batched drill exists to
+        avoid. Filters are built lazily, grouped per container, only for
+        tiles that actually drill.
         """
-        if key in self._sources:
-            return self._sources[key]
         c = self.meta.block_container(key)
-        if c is not None:
-            return c
-        return self._level_assigned.get(key[0])
-
-    def _source_df(self, key: tuple[int, int, int]) -> DataFrame | None:
-        c = self._source_container(key)
-        if c is None:
-            return None
-        return self._filter_tiles_z(c, [key])
+        return self._level_assigned.get(key[0]) if c is None else c
 
     def _drill(self, cz: int, cx: int, cy: int) -> None:
         """splitTile(parent.source, ..., cz, cx, cy) (geojsonvt.hpp:130-139):
@@ -903,15 +817,13 @@ class TilePyramid:
             _t2 = _time.time()
             nxt: dict[tuple[int, int, int], set] = {}
             containers = {}
-            # defer registrations: big rounds bulk-register into numpy
-            # blocks (traversal-shaped drills create hundreds of thousands
-            # of tiles — per-key dict entries would be ~10x the memory and
-            # the dominant driver cost)
+            # the round's children register as one block per zoom
+            # (traversal-shaped drills create hundreds of thousands of
+            # tiles), each block pointing at ``children`` as its container
             pend: dict[int, list] = {}  # z+1 -> [(x, y, npts, nrows, src)]
             for (z, x, y), tset in active.items():
                 # the split tile drops its source (geojsonvt.hpp:256-257)
                 self.meta[(z, x, y)].has_source = False
-                self._sources.pop((z, x, y), None)
                 for dx in (0, 1):
                     for dy in (0, 1):
                         czx, czy = 2 * x + dx, 2 * y + dy
@@ -930,34 +842,22 @@ class TilePyramid:
                             }
                             src = not below
                         if key in self.meta:
-                            # defensive (drill children cannot pre-exist):
-                            # preserve write-through behavior
-                            if src:
-                                self.meta[key].has_source = True
-                                self._sources[key] = children
-                        else:
-                            pend.setdefault(z + 1, []).append(
-                                (czx, czy, int(npts or 0), int(nrows), src)
+                            # a split tile was a sourced leaf: no children
+                            raise AssertionError(
+                                f"drill child {key} already registered"
                             )
+                        pend.setdefault(z + 1, []).append(
+                            (czx, czy, int(npts or 0), int(nrows), src)
+                        )
                         if below:
                             nxt[key] = below  # recurses; no source kept
                             containers[key] = children
-            import numpy as np
-
             for z1, regs in pend.items():
-                if len(regs) > self._driver_stats_max:
-                    arr = np.array(regs, dtype=np.int64)
-                    self.meta.add_level(
-                        z1, arr[:, 0], arr[:, 1], arr[:, 2], arr[:, 3],
-                        arr[:, 4].astype(bool), container=children,
-                    )
-                    self.stats[z1] = self.stats.get(z1, 0) + len(regs)
-                else:
-                    for (cx1, cy1, npv, nrv, src) in regs:
-                        m = self._register(z1, cx1, cy1, npv, nrv)
-                        if src:
-                            m.has_source = True
-                            self._sources[(z1, cx1, cy1)] = children
+                arr = np.array(regs, dtype=np.int64)
+                self.meta.add_level(
+                    z1, arr[:, 0], arr[:, 1], arr[:, 2], arr[:, 3], arr[:, 4],
+                    container=children,
+                )
             self.drill_log.append(
                 {
                     "active": len(active),

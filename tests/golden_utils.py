@@ -39,6 +39,50 @@ def load_fixture(name: str) -> str:
         return f.read()
 
 
+# A small dateline-crossing FeatureCollection, for tests that need wrap
+# copies without the reference checkout: a polygon and a line spanning
+# 170°E -> 190°E (past the antimeridian), and a point past -180°. The
+# polygon's long edges carry 60 vertices each, so its points push the
+# us-states z1 leaf (1, 1, 0) past index_max_points=100.
+DATELINE_GEOJSON = json.dumps(
+    {
+        "type": "FeatureCollection",
+        "features": [
+            {
+                "type": "Feature",
+                "id": "dl-polygon",
+                "properties": {"name": "dateline polygon"},
+                "geometry": {
+                    "type": "Polygon",
+                    "coordinates": [
+                        [[170 + i / 3, 50] for i in range(60)]
+                        + [[190 - i / 3, 56] for i in range(60)]
+                        + [[170, 50]]
+                    ],
+                },
+            },
+            {
+                "type": "Feature",
+                "id": "dl-line",
+                "properties": {"name": "dateline line"},
+                "geometry": {
+                    "type": "LineString",
+                    "coordinates": [
+                        [170, 60], [175, 61], [180, 62], [185, 61], [190, 60]
+                    ],
+                },
+            },
+            {
+                "type": "Feature",
+                "id": 7,
+                "properties": {"name": "point past -180"},
+                "geometry": {"type": "Point", "coordinates": [-185, 20]},
+            },
+        ],
+    }
+)
+
+
 def load_golden_tiles(name: str) -> dict:
     return json.loads(load_fixture(name))
 

@@ -13,7 +13,7 @@ from geojson_vt_cpp_spark.config import Options
 from geojson_vt_cpp_spark.operators.pyramid import TilePyramid
 from geojson_vt_cpp_spark.sources.documents import documents_from_fixture
 
-from .golden_utils import load_fixture
+from .golden_utils import DATELINE_GEOJSON, load_fixture
 
 pytestmark = pytest.mark.spark
 
@@ -39,12 +39,17 @@ def test_append_equals_full_rebuild(spark):
     us-states index ≡ full rebuild over the union — registry, stats,
     source retention, and every quantized tile feature."""
     us = documents_from_fixture(spark, load_fixture("us-states.json"), "us-states")
-    dl = documents_from_fixture(spark, load_fixture("dateline.json"), "dateline")
+    dl = documents_from_fixture(spark, DATELINE_GEOJSON, "dateline")
     o = Options(**OPTS)
     full = TilePyramid.from_documents(us.unionByName(dl), o)
     inc = TilePyramid.from_documents(us, o)
+    sourced = {k for k, m in inc.meta.items() if m.rows > 0 and m.has_source}
     inc.append(docs_df=dl)
     _assert_same(full, inc)
+    # a leaf newly split by the append: its old rows were pulled back
+    assert any(
+        (k[0] + 1, 2 * k[1], 2 * k[2]) in inc.meta for k in sourced
+    ), "no sourced leaf was split by the append"
     # drill-down parity after append
     tf = full.get_tile(7, 37, 48)
     ti = inc.get_tile(7, 37, 48)
@@ -57,7 +62,7 @@ def test_append_order_and_drill_guard(spark):
     """Appending in the other direction (dateline base, us-states appended)
     also reproduces the rebuild; appending after a drill raises."""
     us = documents_from_fixture(spark, load_fixture("us-states.json"), "us-states")
-    dl = documents_from_fixture(spark, load_fixture("dateline.json"), "dateline")
+    dl = documents_from_fixture(spark, DATELINE_GEOJSON, "dateline")
     o = Options(**OPTS)
     full = TilePyramid.from_documents(us.unionByName(dl), o)
     inc = TilePyramid.from_documents(dl, o)
@@ -76,7 +81,7 @@ def test_append_reads_back_untouched_manifests(spark, tmp_path):
     subtrees are READ BACK from their parquet stages, not recomputed) while
     still producing rebuild-identical tiles."""
     us = documents_from_fixture(spark, load_fixture("us-states.json"), "us-states")
-    dl = documents_from_fixture(spark, load_fixture("dateline.json"), "dateline")
+    dl = documents_from_fixture(spark, DATELINE_GEOJSON, "dateline")
     o = Options(**OPTS)
     from geojson_vt_cpp_spark.operators.convert import extract_features
 

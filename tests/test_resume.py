@@ -12,7 +12,7 @@ from geojson_vt_cpp_spark.config import Options
 from geojson_vt_cpp_spark.sources.documents import documents_from_fixture
 from geojson_vt_cpp_spark.sources.table_io import TableIO, checkpointed_pipeline
 
-from .golden_utils import load_fixture
+from .golden_utils import DATELINE_GEOJSON, load_fixture
 
 pytestmark = pytest.mark.spark
 
@@ -151,7 +151,7 @@ def test_checkpointed_pipeline_no_double_wrap(spark, tmp_path):
     from geojson_vt_cpp_spark.operators.pyramid import TilePyramid
     from geojson_vt_cpp_spark.sources.documents import documents_from_fixture
 
-    docs = documents_from_fixture(spark, load_fixture("dateline.json"), "dateline")
+    docs = documents_from_fixture(spark, DATELINE_GEOJSON, "dateline")
     opts = Options(index_max_zoom=2, max_zoom=14)
 
     r = checkpointed_pipeline(spark, str(tmp_path / "dl"), docs, opts)

@@ -10,7 +10,7 @@ from geojson_vt_cpp_spark.operators.pyramid import TilePyramid
 from geojson_vt_cpp_spark.operators.tile_diff import changed_tiles, tile_digests
 from geojson_vt_cpp_spark.sources.documents import documents_from_fixture
 
-from .golden_utils import load_fixture
+from .golden_utils import DATELINE_GEOJSON, load_fixture
 
 pytestmark = pytest.mark.spark
 
@@ -31,7 +31,7 @@ def test_append_diff_is_exactly_the_touched_tiles(spark):
     diff of the two tile tables AND never includes a tile whose rows are
     identical across versions."""
     us = documents_from_fixture(spark, load_fixture("us-states.json"), "us-states")
-    dl = documents_from_fixture(spark, load_fixture("dateline.json"), "dateline")
+    dl = documents_from_fixture(spark, DATELINE_GEOJSON, "dateline")
     o = Options(index_max_zoom=4, index_max_points=100)
     pyr = TilePyramid.from_documents(us, o)
     old_pdf = pyr.tile_features().toPandas()
