@@ -16,10 +16,48 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geojson_vt_cpp_spark.functions import kernels as K
 from geojson_vt_cpp_spark.operators import codec
+
+# Vertices one task of a Python-kernel stage is sized to carry. A warm
+# mapInPandas task costs ~0.06 CPU-s however few rows it gets (local[4],
+# process-tree CPU: 4 -> 16 no-op tasks read 1.06 -> 1.75 CPU-s), and the
+# serial clip kernel runs at ~1.1 us per vertex (clip_feature on in-repo
+# us-states: 77 us per feature, 3,539 vertices over 52 features). 2^16
+# vertices are ~0.07 CPU-s of clipping, so a full task does at least as
+# much kernel work as it pays in fixed cost, and a 13-tile pyramid of a
+# few thousand vertices runs every stage on one partition.
+POINTS_PER_PART = 1 << 16
+
+
+def stage_parts(spark, points: int) -> int:
+    """The partition count of a stage over ``points`` vertices:
+    ``ceil(points / POINTS_PER_PART)`` clamped to [1, 2 * defaultParallelism].
+
+    The one sizing rule of the tile stages (wrap windows, pyramid levels
+    and their split kernels, append levels, drill rounds, quantize): each
+    is sized from a vertex count its operator already aggregated, never
+    from a fixed count. Points, not rows, because the kernels' work is
+    per vertex and one state polygon outweighs a thousand points.
+    """
+    return max(1, min(max_stage_parts(spark), -(-int(points) // POINTS_PER_PART)))
+
+
+def max_stage_parts(spark) -> int:
+    """The cap of :func:`stage_parts`: two tasks per core."""
+    return 2 * spark.sparkContext.defaultParallelism
+
+
+def fit_parts(df: DataFrame, n: int) -> tuple[DataFrame, bool]:
+    """``df`` on ``n`` partitions, and whether that took a shuffle: coalesce
+    to shrink (narrow), round-robin repartition to grow — coalesce alone
+    cannot fan a few-partition input out."""
+    if n > df.rdd.getNumPartitions():
+        return df.repartition(n), True
+    return df.coalesce(n), False
 
 
 def iter_rows(pdf: pd.DataFrame) -> Iterator[dict]:
@@ -53,6 +91,9 @@ def clip_fixed_window(features_df, axis: int, k1: float, k2: float,
                       line_metrics: bool, kernel_parts: int | None = None):
     """Clip every feature to one fixed slab [k1, k2) — used by wrap and the
     one-shot tile path, where the window does not depend on the row.
+    ``kernel_parts`` (wrap sizes it with :func:`stage_parts`) reshuffles
+    the rows that need the kernel onto that many partitions; None keeps
+    the input's partitioning.
 
     Trivially accepted rows (``min >= k1 and max < k2`` on the clip axis —
     the exact predicate ``kernels.clip_feature`` applies, including the
@@ -83,10 +124,9 @@ def clip_fixed_window(features_df, axis: int, k1: float, k2: float,
 
     mid_in = features_df.where(~acc & ~rej)
     if kernel_parts is not None:
-        # the mid set is usually tiny (boundary crossers); a full-width
-        # Python stage pays ~30-60 ms of runner handshake PER TASK even
-        # warm — reshuffle the small set to a sized, balanced stage
-        mid_in = mid_in.repartition(max(1, kernel_parts))
+        # the mid set is usually tiny (boundary crossers): a full-width
+        # Python stage pays its per-task cost on every upstream partition
+        mid_in = mid_in.repartition(kernel_parts)
     mid = mid_in.mapInPandas(kernel, schema)
     return features_df.where(acc).unionByName(mid)
 
@@ -120,13 +160,13 @@ def _split_routing(p: float):
     return x_trv[0] & x_trv[1] & y_trv[0] & y_trv[1], x_acc, y_acc
 
 
-def split_mid_count_col(buffer: int, extent: int):
-    """Aggregation column counting the rows a subsequent
+def split_mid_points_col(buffer: int, extent: int):
+    """Aggregation column summing the vertices of the rows a subsequent
     :func:`split_children` would send through the Python kernel (not
-    natively routable) — lets callers size the kernel stage from an
-    aggregate they already run."""
+    natively routable) — lets callers size the kernel stage with
+    :func:`stage_parts` from an aggregate they already run."""
     native, _x, _y = _split_routing(0.5 * buffer / extent)
-    return F.sum(F.when(~native, 1).otherwise(0))
+    return F.sum(F.when(~native, F.col("num_points")).otherwise(0))
 
 
 def split_children(assigned_df, buffer: int, extent: int, line_metrics: bool,
@@ -151,6 +191,11 @@ def split_children(assigned_df, buffer: int, extent: int, line_metrics: bool,
     bit-identical to ``kernels.clip_feature``'s accept/reject branch and
     only rows that genuinely need geometric clipping cross the Python
     boundary (guide §4: fewer rows and bytes per crossing).
+
+    ``kernel_parts`` (the pyramid build passes :func:`stage_parts` of the
+    :func:`split_mid_points_col` sum) reshuffles the kernel's rows onto
+    that many partitions; None keeps the input's partitioning, which the
+    caller already sized.
     """
     schema = assigned_df.schema
     p = 0.5 * buffer / extent
@@ -217,10 +262,10 @@ def split_children(assigned_df, buffer: int, extent: int, line_metrics: bool,
     if kernel_parts is not None:
         # boundary-crossing rows are the minority AND spatially clustered:
         # a round-robin repartition of just this small set both sizes the
-        # Python stage (per-task runner handshake is paid kernel_parts
-        # times, not once per upstream partition) and balances the real
-        # clip work (without it the mid rows ride the parent's spatial
-        # skew into a straggler task). The shuffle moves only mid rows.
-        kernel_in = kernel_in.repartition(max(1, kernel_parts))
+        # Python stage (per-task cost is paid kernel_parts times, not once
+        # per upstream partition) and balances the real clip work (without
+        # it the mid rows ride the parent's spatial skew into a straggler
+        # task). The shuffle moves only mid rows.
+        kernel_in = kernel_in.repartition(kernel_parts)
     kernel_out = kernel_in.mapInPandas(kernel, schema)
     return native_out.unionByName(kernel_out)

@@ -12,6 +12,15 @@ The reference's recursive DFS ``splitTile`` becomes a per-zoom loop:
 - quantization to int16 tile features is deferred and runs as one job over
   the union of all levels when output is first requested.
 
+Every stage is sized by one rule, ``clip_stage.stage_parts`` (one
+partition per ``POINTS_PER_PART`` vertices, capped at two per core), from a
+vertex count the operator already aggregated: wrap's deciding aggregate
+sizes z0 and the wrap windows, each level's stats aggregate sizes the next
+level and its split kernel, the registry sizes drill rounds, quantize and
+selective reads. Until the first aggregate nothing is counted, so the
+input keeps its partitioning; a 13-tile index runs every stage on one
+partition.
+
 Tile metadata (num_points, row counts, source retention) lives on the
 driver in one registry, the analogue of the reference's single tile map
 (``geojsonvt.hpp:157``): every build level, append level and drill round
@@ -44,10 +53,11 @@ from geojson_vt_cpp_spark.config import Options
 from geojson_vt_cpp_spark.functions import kernels as K
 from geojson_vt_cpp_spark.operators import codec
 from geojson_vt_cpp_spark.operators.clip_stage import (
-    iter_rows, split_children, split_mid_count_col,
+    fit_parts, iter_rows, max_stage_parts, split_children,
+    split_mid_points_col, stage_parts,
 )
 from geojson_vt_cpp_spark.operators.convert import extract_features
-from geojson_vt_cpp_spark.operators.wrap import wrap_features
+from geojson_vt_cpp_spark.operators.wrap import wrap_with_points
 
 
 @dataclass
@@ -208,6 +218,11 @@ class _MetaStore:
             int(lv[2].sum()) for blocks in self._levels.values() for lv in blocks
         )
 
+    def total_points(self) -> int:
+        return sum(
+            int(lv[1].sum()) for blocks in self._levels.values() for lv in blocks
+        )
+
 
 def quantize(assigned_df: DataFrame, options: Options) -> DataFrame:
     """Assigned features -> quantized tile features (one narrow pass).
@@ -360,7 +375,9 @@ class TilePyramid:
         self._tile_features: DataFrame | None = None
         self._tile_cache: dict[tuple[int, int, int], Tile] = {}
         self._serving: tuple[list[int], list[tuple[int, str]]] | None = None
-        self.drill_log: list[dict] = []  # per-round batched-drill diagnostics
+        # one entry per batched-drill round: tiles split ("active"), their
+        # registry vertices ("points") and the partitions that sized ("parts")
+        self.drill_log: list[dict] = []
         self._drilled = False  # append() is defined on the eager index only
         self._append_seq = 0
         self._io = None
@@ -373,28 +390,30 @@ class TilePyramid:
                 f"|pre_wrapped={pre_wrapped}"
             )
 
-        # materialize-and-truncate the convert output once: wrap alone
-        # references it 4x (one agg + three clip passes), and the BFS adds a
-        # level of plan depth per zoom — localCheckpoint keeps each level's
-        # plan shallow (local mode; the workdir/TableIO path uses reliable
-        # parquet checkpoints instead at cluster scale)
-        self._n_parts = max(features_df.sparkSession.sparkContext.defaultParallelism * 2, 8)
+        # materialize-and-truncate the convert output once, in the input's
+        # partitioning — nothing has counted it yet: wrap alone references
+        # it 4x (one agg + three clip passes), and its deciding aggregate
+        # counts the vertices that size every stage after it. The BFS adds
+        # a level of plan depth per zoom — localCheckpoint keeps each
+        # level's plan shallow (local mode; the workdir/TableIO path uses
+        # reliable parquet checkpoints instead at cluster scale)
         if self._io is not None:
-            base = self._io.run_stage(
-                "pyr_base",
-                lambda: (
-                    features_df.repartition(self._n_parts)
-                    if pre_wrapped
-                    else wrap_features(
-                        features_df.repartition(self._n_parts).localCheckpoint(),
-                        self.o.buffer / self.o.extent,
-                        self.o.line_metrics,
-                    )
-                ),
-                fingerprint=self._fp,
-            )
+            counted: dict[str, int] = {}
+
+            def base_stage() -> DataFrame:
+                if pre_wrapped:
+                    return features_df
+                wrapped, counted["points"] = wrap_with_points(
+                    features_df.localCheckpoint(),
+                    self.o.buffer / self.o.extent,
+                    self.o.line_metrics,
+                )
+                return wrapped
+
+            base = self._io.run_stage("pyr_base", base_stage, fingerprint=self._fp)
             self._prev_snap = base.snapshot_id
-            self._build(base.df)
+            # a resumed base was not counted in this process
+            self._build(base.df, counted.get("points"), materialized=True)
             return
         # lazy (eager=False) localCheckpoint: wrap's deciding aggregate (or
         # the z0 stats aggregate) is the materializing action, so the cache
@@ -403,21 +422,19 @@ class TilePyramid:
         # .persist(), whose CacheManager entry would outlive the pyramid in
         # a long-lived session): the ContextCleaner releases the blocks
         # when the level DataFrames are garbage collected.
-        features_df = features_df.repartition(self._n_parts).localCheckpoint(
-            eager=False
-        )
-        feats = (
-            features_df
-            if pre_wrapped
-            else wrap_features(
-                features_df, self.o.buffer / self.o.extent, self.o.line_metrics,
-                max_kernel_parts=self._n_parts,
-            )
+        if pre_wrapped:
+            # no count until the z0 stats aggregate: the input keeps its
+            # partitioning, bounded by the rule's cap
+            base = features_df.coalesce(max_stage_parts(self.spark))
+            self._build(base.localCheckpoint(eager=False), None, materialized=True)
+            return
+        features_df = features_df.localCheckpoint(eager=False)
+        feats, points = wrap_with_points(
+            features_df, self.o.buffer / self.o.extent, self.o.line_metrics
         )
         # wrap returning its input unchanged (no dateline features) means the
-        # base is already round-robin balanced AND materialized — z0 can skip
-        # its redundant full-payload reshuffle + rematerialization
-        self._build(feats, base_balanced=feats is features_df)
+        # base is already materialized — z0 needs no second checkpoint
+        self._build(feats, points, materialized=feats is features_df)
 
     @classmethod
     def from_documents(cls, docs_df: DataFrame, options: Options | None = None,
@@ -441,7 +458,13 @@ class TilePyramid:
 
     # ------------------------------------------------------------------ build
 
-    def _build(self, feats: DataFrame, base_balanced: bool = False) -> None:
+    def _build(self, feats: DataFrame, points: int | None,
+               materialized: bool) -> None:
+        """The BFS from z0. ``points`` is the vertex count of ``feats``, or
+        None when nothing counted it (pre-wrapped input, a resumed base):
+        z0 then stays on at most the rule's cap of partitions, and its
+        stats aggregate sizes every level after it. ``materialized`` says
+        ``feats`` is already checkpointed."""
         o = self.o
         assigned = feats.select(
             F.lit(0).alias("z"),
@@ -455,41 +478,47 @@ class TilePyramid:
             if self._io is not None:
                 # manifest-gated level checkpoint: a killed build resumes
                 # here — completed levels read back, this one re-runs
+                n = (
+                    max_stage_parts(self.spark) if points is None
+                    else stage_parts(self.spark, points)
+                )
                 lvl_df = assigned  # bind before reassignment (closure)
                 res = self._io.run_stage(
                     f"pyr_level_{z:02d}",
-                    lambda: lvl_df.repartition(self._n_parts),
+                    lambda: lvl_df.repartition(n),
                     inputs=(self._prev_snap,),
                     fingerprint=self._fp,
                 )
                 assigned = res.df
                 self._prev_snap = res.snapshot_id
-            elif z == 0 and base_balanced:
-                # the z0 rows are a narrow projection of the already
-                # round-robin-balanced persisted base — a second
-                # full-payload shuffle + rematerialization buys nothing
-                pass
+            elif points is None:
+                # an uncounted (pre-wrapped) z0: __init__ coalesced it to
+                # the rule's cap and checkpointed it; its stats aggregate
+                # sizes every level after it
+                n = assigned.rdd.getNumPartitions()
             else:
-                # coalesce, not a round-robin repartition: since the split
-                # kernel only sees rows that genuinely need geometric
-                # clipping (clip_stage native routing), per-level Python
-                # work is too small to justify a full-payload shuffle per
-                # zoom (tile_features() coalesces the same way in front of
-                # quantize). The coalesce only
-                # bounds the partition count (the native/kernel branch
-                # union doubles it every level). Lazy checkpoint: the
-                # level materializes inside its stats aggregate below (one
-                # fused pass, ContextCleaner-managed blocks); the
-                # workdir/TableIO branch above stays the
+                # coalesce when the level shrinks, which is the usual case
+                # (a split output has at least its parent level's
+                # partitions): per-level Python work (only the rows native
+                # routing cannot clip) is too small to justify a
+                # full-payload shuffle per zoom. A round-robin repartition
+                # only where the level holds fewer partitions than its
+                # points ask for: a few-partition convert output at z0, or
+                # the children of a one-partition pre-wrapped z0. Lazy
+                # checkpoint: the level materializes inside its stats
+                # aggregate below (one fused pass, ContextCleaner-managed
+                # blocks); the workdir/TableIO branch above stays the
                 # reliable-checkpoint cluster path.
-                assigned = assigned.coalesce(self._n_parts).localCheckpoint(
-                    eager=False
-                )
+                n = stage_parts(self.spark, points)
+                assigned, grew = fit_parts(assigned, n)
+                if grew or not materialized:
+                    assigned = assigned.localCheckpoint(eager=False)
+            materialized = False
             self._level_assigned[z] = assigned
             splits = self._level_stats(assigned, visit, z)
             if splits is None:
                 break
-            sxs, sys_, mid_total = splits
+            sxs, sys_, points, mid_points = splits
             split_df = self._filter_tiles(
                 assigned, list(zip(sxs.tolist(), sys_.tolist()))
             )
@@ -497,9 +526,11 @@ class TilePyramid:
                 np.repeat(sxs * 2, 4) + np.tile(np.array([0, 1, 0, 1]), len(sxs)),
                 np.repeat(sys_ * 2, 4) + np.tile(np.array([0, 0, 1, 1]), len(sys_)),
             )
+            # a level on one partition (n is its partition count) feeds its
+            # kernel as it is: there is nothing to shrink or balance
             assigned = split_children(
                 split_df, o.buffer, o.extent, o.line_metrics,
-                kernel_parts=self._size_parts(mid_total),
+                kernel_parts=None if n == 1 else stage_parts(self.spark, mid_points),
             )
             z += 1
 
@@ -507,13 +538,15 @@ class TilePyramid:
         """Stop conditions for one build level (``geojsonvt.hpp:210-215``).
 
         One aggregate over the level — per-tile num_points sum, row count
-        and the next split's mid-row count (rows the native routing cannot
-        clip, see split_children/kernel_parts) — then vectorized numpy:
-        every visited tile (``visit`` = (xs, ys), empties included) lands
-        in one registry block; a non-empty tile keeps its source at
-        ``indexMaxZoom`` or at most ``indexMaxPoints`` points, and splits
-        otherwise. Returns the (xs, ys) arrays of tiles to split and their
-        mid-row total, or None when the level is all leaves.
+        and the vertices of the next split's mid rows (rows the native
+        routing cannot clip, see split_children/kernel_parts) — then
+        vectorized numpy: every visited tile (``visit`` = (xs, ys), empties
+        included) lands in one registry block; a non-empty tile keeps its
+        source at ``indexMaxZoom`` or at most ``indexMaxPoints`` points, and
+        splits otherwise. Returns the (xs, ys) arrays of tiles to split,
+        their vertex total (the size of the next level) and their mid-row
+        vertex total (the size of the split kernel), or None when the level
+        is all leaves.
         """
         o = self.o
         vxs, vys = visit
@@ -525,7 +558,7 @@ class TilePyramid:
             .agg(
                 F.sum("num_points").alias("npts"),
                 F.count("*").alias("nrows"),
-                split_mid_count_col(o.buffer, o.extent).alias("nmid"),
+                split_mid_points_col(o.buffer, o.extent).alias("nmid"),
             )
             .toPandas()
         )
@@ -551,7 +584,10 @@ class TilePyramid:
         self.meta.add_level(z, vxs, vys, npts, nrows, keep_src)
         if not split_mask.any():
             return None
-        return vxs[split_mask], vys[split_mask], int(nmid[split_mask].sum())
+        return (
+            vxs[split_mask], vys[split_mask],
+            int(npts[split_mask].sum()), int(nmid[split_mask].sum()),
+        )
 
     # ---------------------------------------------------------------- append
 
@@ -600,10 +636,11 @@ class TilePyramid:
             features_df = extract_features(
                 docs_df, tol, generate_id=o.generate_id, on_error=on_error
             )
-        feats = wrap_features(
-            features_df.repartition(self._n_parts).localCheckpoint(),
-            o.buffer / o.extent,
-            o.line_metrics,
+        # the batch keeps its convert partitioning until wrap's aggregate
+        # counts its vertices; that count sizes z0, and each level after is
+        # sized by the vertices that descend to it
+        feats, points = wrap_with_points(
+            features_df.localCheckpoint(), o.buffer / o.extent, o.line_metrics
         )
         self._append_seq += 1
         self._invalidate_tile_features()
@@ -618,9 +655,9 @@ class TilePyramid:
         expect: set[tuple[int, int]] = set()
         z = 0
         while True:
-            new_assigned = new_assigned.repartition(
-                max(1, self._n_parts // 4)
-            ).localCheckpoint()
+            new_assigned = fit_parts(
+                new_assigned, stage_parts(self.spark, points)
+            )[0].localCheckpoint()
             nstats = {
                 (r["tx"], r["ty"]): (int(r["npts"]), int(r["nrows"]))
                 for r in new_assigned.groupBy("tx", "ty")
@@ -633,6 +670,7 @@ class TilePyramid:
             pull_old: list[tuple[int, int]] = []  # old leaf rows re-split too
             new_splits: list[tuple[int, int]] = []  # children need registering
             fresh: list[tuple] = []  # (x, y, npts, rows, has_source)
+            points = 0  # vertices descending to level z + 1
             for (x, y) in sorted(set(nstats) | expect):
                 npts_new, rows_new = nstats.get((x, y), (0, 0))
                 if (x, y) in expect:
@@ -643,6 +681,7 @@ class TilePyramid:
                     if rows_new > 0 and not leaf:
                         descend_new.append((x, y))
                         new_splits.append((x, y))
+                        points += npts_new
                     continue
                 key = (z, x, y)
                 if key not in self.meta:
@@ -653,6 +692,7 @@ class TilePyramid:
                 m.rows += rows_new
                 if was_interior:
                     descend_new.append((x, y))  # children exist: new rows only
+                    points += npts_new
                 elif z == o.index_max_zoom or m.num_points <= o.index_max_points:
                     m.has_source = True  # leaf stays leaf (empty becomes leaf)
                 else:
@@ -662,6 +702,7 @@ class TilePyramid:
                     descend_new.append((x, y))
                     pull_old.append((x, y))
                     new_splits.append((x, y))
+                    points += m.num_points  # new rows and the old ones
             if fresh:
                 arr = np.array(fresh, dtype=np.int64)
                 self.meta.add_level(
@@ -770,10 +811,7 @@ class TilePyramid:
             containers[anc] = self._source_container(anc)
         if frontier:
             self._drilled = True
-        import time as _time
-
         while frontier:
-            _t0 = _time.time()
             active = {
                 key: below
                 for key, tset in frontier.items()
@@ -789,17 +827,20 @@ class TilePyramid:
             for key in sorted(active):
                 c = containers[key]
                 groups.setdefault(id(c), (c, []))[1].append(key)
-            parts = [self._filter_tiles_z(c, ks) for c, ks in groups.values()]
-            union = parts[0]
-            for d in parts[1:]:
+            filtered = [self._filter_tiles_z(c, ks) for c, ks in groups.values()]
+            union = filtered[0]
+            for d in filtered[1:]:
                 union = union.unionByName(d)
-            # right-size partitions from the driver-known row counts: the
+            # size the round from the registry's vertex counts: the
             # filtered union inherits its containers' partitioning (hundreds
             # of near-empty partitions after a few rounds) and mapInPandas
-            # pays a Python-runner startup PER TASK — measured 12 s/round on
-            # a 43k-row traversal without this
-            est_rows = 2 * sum(self.meta[k].rows for k in active)
-            union = union.repartition(self._size_parts(est_rows))
+            # pays its per-task cost on every one — measured 12 s/round on
+            # a 43k-row traversal before rounds were sized. The containers
+            # were usually sized from more vertices, so this coalesces; it
+            # grows only a union on fewer partitions than its points ask for.
+            points = sum(self.meta[k].num_points for k in active)
+            n = stage_parts(self.spark, points)
+            union = fit_parts(union, n)[0]
             # lazy checkpoint, materialized by the stats aggregate below:
             # the drill round's cache write fuses into the stats job
             children = split_children(
@@ -807,14 +848,12 @@ class TilePyramid:
             ).localCheckpoint(eager=False)
             self._extra_assigned.append(children)
             self._invalidate_tile_features()  # invalidate union cache
-            _t1 = _time.time()
             cstats = {
                 (r["z"], r["tx"], r["ty"]): (r["npts"], r["nrows"])
                 for r in children.groupBy("z", "tx", "ty")
                 .agg(F.sum("num_points").alias("npts"), F.count("*").alias("nrows"))
                 .collect()
             }
-            _t2 = _time.time()
             nxt: dict[tuple[int, int, int], set] = {}
             containers = {}
             # the round's children register as one block per zoom
@@ -859,13 +898,7 @@ class TilePyramid:
                     container=children,
                 )
             self.drill_log.append(
-                {
-                    "active": len(active),
-                    "est_rows": est_rows,
-                    "split_sec": round(_t1 - _t0, 2),
-                    "stats_sec": round(_t2 - _t1, 2),
-                    "register_sec": round(_time.time() - _t2, 2),
-                }
+                {"active": len(active), "points": points, "parts": n}
             )
             frontier = nxt
 
@@ -902,12 +935,6 @@ class TilePyramid:
 
     # --------------------------------------------------------------- output
 
-    def _size_parts(self, rows: int, per_part: int = 256) -> int:
-        """Partition count for a Python-kernel pass over ``rows`` rows:
-        enough for parallelism, never hundreds of near-empty partitions
-        each paying a Python-runner startup."""
-        return min(self._n_parts, max(1, rows // per_part + 1))
-
     def _assigned_union(self) -> DataFrame:
         dfs = list(self._level_assigned.values()) + self._extra_assigned
         union = dfs[0]
@@ -921,14 +948,14 @@ class TilePyramid:
         The union of per-level checkpoints accumulates partitions (levels +
         drill rounds); the levels are coalesced, not shuffled, so it also
         carries whatever spatial imbalance the splits produced. Quantize is
-        the one full Python pass over every row; a coalesce sized to the
-        driver-known total row count bounds its per-task Python-runner
-        startups without a shuffle (a round-robin repartition here measured
-        at par on the benchmark corpus).
+        the one full Python pass over every row; a coalesce to
+        :func:`stage_parts` of the registry's total vertex count bounds its
+        per-task cost without a shuffle (a round-robin repartition here
+        measured at par on the benchmark corpus).
         """
         if self._tile_features is None:
             union = self._assigned_union().coalesce(
-                self._size_parts(self.meta.total_rows())
+                stage_parts(self.spark, self.meta.total_points())
             )
             self._tile_features = quantize(union, self.o).persist()
         return self._tile_features
@@ -977,8 +1004,8 @@ class TilePyramid:
         # quantize instead.
         if self._tile_features is None and 2 * len(found) < len(self.meta):
             sel = self._filter_tiles_z(self._assigned_union(), found)
-            rows = sum(self.meta[k].rows for k in found)
-            return quantize(sel.repartition(self._size_parts(rows)), self.o)
+            points = sum(self.meta[k].num_points for k in found)
+            return quantize(sel.coalesce(stage_parts(self.spark, points)), self.o)
         tf = self.tile_features()
         return self._filter_tiles_z(tf, found)
 
@@ -1016,7 +1043,7 @@ class TilePyramid:
             + F.shiftleft(F.col("tx"), 29)
             + F.col("ty")
         ).alias("pk")
-        nfiles = max(1, min(self._n_parts, self.meta.total_rows() // 4096 + 1))
+        nfiles = min(max_stage_parts(self.spark), self.meta.total_rows() // 4096 + 1)
         (
             self.tile_features()
             .select(pk, "*")

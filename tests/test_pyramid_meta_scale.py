@@ -1,6 +1,8 @@
 """The tile registry: numpy blocks checked against the independent
-driver-side mirror, bounded driver state at deep index_max_zoom, and the
-build's job floor of one Spark job per BFS level."""
+driver-side mirror, bounded driver state at deep index_max_zoom, the
+build's job floor of one Spark job per BFS level, and its partition
+sizing: one partition per stage for a small index, a grown z0 for a large
+one-partition input."""
 
 from __future__ import annotations
 
@@ -8,13 +10,18 @@ import resource
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from geojson_vt_cpp_spark.config import Options
+from geojson_vt_cpp_spark.operators.clip_stage import POINTS_PER_PART, stage_parts
 from geojson_vt_cpp_spark.operators.convert import extract_features
 from geojson_vt_cpp_spark.operators.pyramid import TilePyramid
-from geojson_vt_cpp_spark.operators.wrap import wrap_features
+from geojson_vt_cpp_spark.operators.wrap import wrap_features, wrap_with_points
 from geojson_vt_cpp_spark.sources.documents import documents_from_fixture
 
-from .golden_utils import compare_tiles, load_fixture, my_feature_to_golden_shape
+from .golden_utils import (
+    DATELINE_GEOJSON, compare_tiles, load_fixture, my_feature_to_golden_shape,
+)
 from .local_pyramid import LocalPyramid
 
 pytestmark = pytest.mark.spark
@@ -51,10 +58,10 @@ def test_block_registry_matches_local_mirror(spark):
     pyr.close()
 
 
-def _synth_point_features(spark, n: int):
+def _synth_point_features(spark, n: int, parts: int | None = None):
     """n spread unit-square point features in the engine's features-table
     encoding (pure column expressions — no external data)."""
-    return spark.range(n).selectExpr(
+    return spark.range(0, n, 1, parts).selectExpr(
         "cast(id as string) as doc_id",
         "0 as span_idx", "0 as feature_idx", "0 as member_seq",
         "1 as copy_tag", "'' as slice_path",
@@ -96,6 +103,20 @@ def test_index_max_zoom_9_build_bounded_driver(spark):
     pyr.close()
 
 
+def _without_aqe(spark, group: str, fn):
+    """Run ``fn`` under job group ``group`` with adaptive execution off
+    (as in perfbench: stable job/stage/task counts); returns its result."""
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sc.setJobGroup(group, group)
+        return fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
 def test_build_runs_one_job_per_level(spark):
     """The build's job floor: with its input converted, wrapped and
     checkpointed, a TilePyramid build runs exactly one Spark job per BFS
@@ -108,17 +129,104 @@ def test_build_runs_one_job_per_level(spark):
     feats = wrap_features(
         extract_features(docs, tol), o.buffer / o.extent, o.line_metrics
     ).localCheckpoint()
-    sc = spark.sparkContext
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     group = "test-pyramid-build-jobs"
-    try:
-        sc.setJobGroup(group, "pyramid build")
-        pyr = TilePyramid(feats, o, pre_wrapped=True)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    pyr = _without_aqe(spark, group, lambda: TilePyramid(feats, o, pre_wrapped=True))
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
     assert len(pyr.stats) == 3, pyr.stats
     assert len(jobs) == 3, jobs
     pyr.close()
+
+
+def test_small_pyramid_runs_on_one_partition(spark):
+    """The task floor of a small index: us-states (3,539 vertices, 9 tiles
+    over 3 levels) is far below one stage_parts partition, so every level
+    and the quantized output hold exactly one partition, and the whole
+    from_documents + tile_features call runs 5 jobs of 21 tasks in all
+    (local[4]; with a fixed 8 partitions per level the same call ran 90)."""
+    o = Options(index_max_zoom=2, index_max_points=1000)
+    docs = documents_from_fixture(spark, load_fixture("us-states.json"), "us-states")
+    group = "test-small-pyramid-tasks"
+
+    def build():
+        p = TilePyramid.from_documents(docs, o)
+        p.tile_features().count()
+        return p
+
+    pyr = _without_aqe(spark, group, build)
+    tracker = spark.sparkContext.statusTracker()
+    tasks = sum(
+        tracker.getStageInfo(sid).numCompletedTasks
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+    )
+    assert pyr.total == 9 and len(pyr.stats) == 3, pyr.stats
+    parts = {z: df.rdd.getNumPartitions() for z, df in pyr._level_assigned.items()}
+    assert parts == {0: 1, 1: 1, 2: 1}, parts
+    assert pyr.tile_features().rdd.getNumPartitions() == 1
+    assert len(tracker.getJobIdsForGroup(group)) == 5
+    assert tasks == 21, tasks
+    pyr.close()
+
+
+def test_z0_grows_a_one_partition_input(spark):
+    """The z0 grow step: a one-partition input holding more than
+    2 * POINTS_PER_PART vertices comes out of wrap (here a no-op: no
+    feature reaches the world-copy windows) on stage_parts(points)
+    partitions; coalesce alone would leave it on one."""
+    n = 2 * POINTS_PER_PART + 5_000
+    feats = (
+        _synth_point_features(spark, n, parts=1)
+        .withColumn("xs", F.expr("transform(xs, v -> 0.25d + v / 2)"))
+        .withColumn("minx", F.col("xs")[0])
+        .withColumn("maxx", F.col("xs")[0])
+    )
+    assert feats.rdd.getNumPartitions() == 1
+    want = stage_parts(spark, n)
+    assert want == 3
+    pyr = TilePyramid(feats, Options(index_max_zoom=0, max_zoom=14))
+    assert pyr._level_assigned[0].rdd.getNumPartitions() == want
+    assert pyr.meta[(0, 0, 0)].num_points == n
+    assert pyr._level_assigned[0].count() == n
+    pyr.close()
+
+
+def test_z1_grows_a_one_partition_pre_wrapped_input(spark):
+    """A pre-wrapped input is not counted before its z0 stats aggregate,
+    so a one-partition input stays on one partition at z0; the children of
+    its split are sized from that aggregate and land on
+    stage_parts(points) partitions, not on the two (native branch plus
+    kernel) the split output holds."""
+    n = 2 * POINTS_PER_PART + 5_000
+    feats = _synth_point_features(spark, n, parts=1)
+    want = stage_parts(spark, n)
+    assert want == 3
+    pyr = TilePyramid(
+        feats, Options(index_max_zoom=1, index_max_points=100_000, max_zoom=14),
+        pre_wrapped=True,
+    )
+    assert pyr.stats == {0: 1, 1: 4}, pyr.stats
+    assert pyr._level_assigned[0].rdd.getNumPartitions() == 1
+    z1 = pyr._level_assigned[1]
+    assert z1.rdd.getNumPartitions() == want
+    assert z1.count() == sum(pyr.meta[(1, x, y)].rows for x in (0, 1) for y in (0, 1))
+    pyr.close()
+
+
+def test_wrap_features_keeps_the_input_partitioning(spark):
+    """wrap_features (the one-shot tile path, the checkpointed pipeline's
+    wrapped stage) runs each window's kernel on its input's partitions;
+    only the pyramid's wrap_with_points reshuffles each window's kernel
+    rows onto stage_parts partitions. Both emit the same rows."""
+    o = Options()
+    docs = documents_from_fixture(spark, DATELINE_GEOJSON, "dateline")
+    feats = extract_features(docs, 1e-7).localCheckpoint()
+    plain = wrap_features(feats, o.buffer / o.extent, o.line_metrics)
+    sized, points = wrap_with_points(feats, o.buffer / o.extent, o.line_metrics)
+
+    def exchanges(df):
+        return str(df._jdf.queryExecution().executedPlan()).count("Exchange")
+
+    assert exchanges(plain) == 0
+    assert exchanges(sized) == 3
+    assert sorted(map(str, plain.collect())) == sorted(map(str, sized.collect()))
+    assert points >= sized.agg(F.sum("num_points")).first()[0]
