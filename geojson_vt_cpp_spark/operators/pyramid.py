@@ -1,7 +1,9 @@
 """The tile pyramid: BFS-per-zoom index build + lazy drill-down ``get_tile``.
 
 Spark re-expression of ``GeoJSONVT`` (``include/mapbox/geojsonvt.hpp:94-258``).
-The reference's recursive DFS ``splitTile`` becomes a per-zoom loop:
+The reference's recursive DFS ``splitTile`` becomes one per-zoom level loop
+(``TilePyramid._descend``), which the build and ``append`` both run — the
+build is an append onto an empty index:
 
 - one narrow ``mapInPandas`` pass clips every assigned feature into its four
   buffered child quadrants (no shuffle — features never leave their
@@ -11,6 +13,9 @@ The reference's recursive DFS ``splitTile`` becomes a per-zoom loop:
   ``num_points <= indexMaxPoints``, ``geojsonvt.hpp:210-215``) on the driver,
 - quantization to int16 tile features is deferred and runs as one job over
   the union of all levels when output is first requested.
+
+Drill-down (``_drill_batch``) keeps its own loop: its levels mix zooms and
+are driven by the requested tiles.
 
 Every stage is sized by one rule, ``clip_stage.stage_parts`` (one
 partition per ``POINTS_PER_PART`` vertices, capped at two per core), from a
@@ -25,9 +30,11 @@ Tile metadata (num_points, row counts, source retention) lives on the
 driver in one registry, the analogue of the reference's single tile map
 (``geojsonvt.hpp:157``): every build level, append level and drill round
 registers into a compact numpy block (~33 bytes/tile, searchsorted
-lookups), and a build level evaluates its stop conditions in vectorized
-numpy over its one aggregate, so deep indexes (index_max_zoom >= 8) never
-build per-tile Python objects or loop the visit set on the driver. Empty
+lookups), and a level evaluates the stop conditions of its fresh tiles in
+vectorized numpy over its one aggregate, so deep indexes (index_max_zoom
+>= 8) never build per-tile Python objects or loop the visit set on the
+driver; only tiles an append reaches that are already registered take a
+per-tile Python path, bounded by the new features' cover. Empty
 tiles ARE materialized (the reference constructs an InternalTile for every
 child before checking ``features.empty()``, ``geojsonvt.hpp:189-206`` — the
 us-states golden contains 19 empty tiles).
@@ -42,6 +49,7 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
+from itertools import groupby
 from typing import Iterator
 
 import numpy as np
@@ -146,7 +154,7 @@ class _MetaStore:
     def __init__(self):
         # z -> list of (packed_keys_sorted, npts, nrows, has_source,
         #               container_df_or_None); multiple blocks per level:
-        # one from the eager build plus one per append level / drill round
+        # one per build / append level with fresh tiles and per drill round
         self._levels: dict[int, list] = {}
         self._block_count = 0
 
@@ -301,24 +309,25 @@ def quantize_one(
 
 
 def _rows_to_features(rows) -> tuple[list, int]:
-    """Quantized tile-feature rows (Spark Row or dict, in SORT_KEYS order)
-    -> (feature list, n_simplified). Shared by the Spark collect path and
-    the driver-local serving-snapshot probe."""
+    """One tile's quantized tile-feature rows, in SORT_KEYS order ->
+    (feature list, n_simplified): the one decoder of the tile-feature
+    encoding. ``rows`` are Spark Rows (``get_tile``, ``all_tiles``) or the
+    dicts of a serving-snapshot read; both carry plain Python values."""
     feats = []
     nsimp = 0
     for r in rows:
-        nsimp += int(r["n_simplified"])
+        nsimp += r["n_simplified"]
         if r["out_type"] < 0:
             continue
         feats.append(
             {
-                "type": int(r["out_type"]),
-                "is_multi": bool(r["is_multi"]),
+                "type": r["out_type"],
+                "is_multi": r["is_multi"],
                 "parts": [
-                    [[int(px), int(py)] for px, py in zip(xs, ys)]
+                    [[px, py] for px, py in zip(xs, ys)]
                     for xs, ys in zip(r["part_xs"], r["part_ys"])
                 ],
-                "poly_lens": [int(v) for v in r["poly_lens"]],
+                "poly_lens": r["poly_lens"],
                 "tags": json.loads(r["props_json"]),
                 "id": r["feature_id"],
                 "id_kind": r["id_kind"],
@@ -379,7 +388,6 @@ class TilePyramid:
         # registry vertices ("points") and the partitions that sized ("parts")
         self.drill_log: list[dict] = []
         self._drilled = False  # append() is defined on the eager index only
-        self._append_seq = 0
         self._io = None
         self._fp = ""
         if workdir is not None:
@@ -396,7 +404,9 @@ class TilePyramid:
         # counts the vertices that size every stage after it. The BFS adds
         # a level of plan depth per zoom — localCheckpoint keeps each
         # level's plan shallow (local mode; the workdir/TableIO path uses
-        # reliable parquet checkpoints instead at cluster scale)
+        # reliable parquet checkpoints instead at cluster scale). The level
+        # loop starts with the root as its one fresh tile.
+        root = (np.zeros(1, dtype=np.int64), np.zeros(1, dtype=np.int64))
         if self._io is not None:
             counted: dict[str, int] = {}
 
@@ -413,7 +423,7 @@ class TilePyramid:
             base = self._io.run_stage("pyr_base", base_stage, fingerprint=self._fp)
             self._prev_snap = base.snapshot_id
             # a resumed base was not counted in this process
-            self._build(base.df, counted.get("points"), materialized=True)
+            self._descend(base.df, counted.get("points"), True, root, staged=True)
             return
         # lazy (eager=False) localCheckpoint: wrap's deciding aggregate (or
         # the z0 stats aggregate) is the materializing action, so the cache
@@ -426,7 +436,7 @@ class TilePyramid:
             # no count until the z0 stats aggregate: the input keeps its
             # partitioning, bounded by the rule's cap
             base = features_df.coalesce(max_stage_parts(self.spark))
-            self._build(base.localCheckpoint(eager=False), None, materialized=True)
+            self._descend(base.localCheckpoint(eager=False), None, True, root)
             return
         features_df = features_df.localCheckpoint(eager=False)
         feats, points = wrap_with_points(
@@ -434,7 +444,7 @@ class TilePyramid:
         )
         # wrap returning its input unchanged (no dateline features) means the
         # base is already materialized — z0 needs no second checkpoint
-        self._build(feats, points, materialized=feats is features_df)
+        self._descend(feats, points, feats is features_df, root)
 
     @classmethod
     def from_documents(cls, docs_df: DataFrame, options: Options | None = None,
@@ -456,46 +466,63 @@ class TilePyramid:
         """Registered tiles per zoom (the reference's ``stats``)."""
         return self.meta.per_zoom()
 
-    # ------------------------------------------------------------------ build
+    # ------------------------------------------------------------ level loop
 
-    def _build(self, feats: DataFrame, points: int | None,
-               materialized: bool) -> None:
-        """The BFS from z0. ``points`` is the vertex count of ``feats``, or
+    def _descend(self, feats: DataFrame, points: int | None, materialized: bool,
+                 fresh: tuple, staged: bool = False) -> None:
+        """The BFS from z0, one zoom per step — the build, and an append
+        onto a built index. ``points`` is the vertex count of ``feats``, or
         None when nothing counted it (pre-wrapped input, a resumed base):
         z0 then stays on at most the rule's cap of partitions, and its
         stats aggregate sizes every level after it. ``materialized`` says
-        ``feats`` is already checkpointed."""
+        ``feats`` is already checkpointed. ``fresh`` is the (xs, ys) of the
+        z0 tiles to register: the root for a build, none for an append.
+        ``staged`` checkpoints each level as a manifest-gated TableIO stage
+        (the workdir build) instead of a lazy ``localCheckpoint``.
+
+        Each level runs one aggregate — per-tile num_points sum, row count
+        and the vertices of the next split's mid rows (rows the native
+        routing cannot clip, see split_children/kernel_parts) — as its
+        first action, so the lazy level checkpoint fuses into it. Fresh
+        tiles (children of this loop's splits, empties included) register
+        as one numpy block; a non-empty one keeps its source at
+        ``indexMaxZoom`` or at most ``indexMaxPoints`` points and splits
+        otherwise (``geojsonvt.hpp:210-215``). Every other tile of the
+        aggregate must already be registered (new rows reaching an index):
+        an interior tile passes only the new rows to its children, a leaf
+        stays a leaf, and a leaf newly over ``indexMaxPoints`` splits with
+        its old rows pulled back from the level it was registered in.
+        """
         o = self.o
-        assigned = feats.select(
+        level = feats.select(
             F.lit(0).alias("z"),
             F.lit(0).cast("long").alias("tx"),
             F.lit(0).cast("long").alias("ty"),
             "*",
         )
-        visit = (np.zeros(1, dtype=np.int64), np.zeros(1, dtype=np.int64))
         z = 0
         while True:
-            if self._io is not None:
+            if staged:
                 # manifest-gated level checkpoint: a killed build resumes
                 # here — completed levels read back, this one re-runs
                 n = (
                     max_stage_parts(self.spark) if points is None
                     else stage_parts(self.spark, points)
                 )
-                lvl_df = assigned  # bind before reassignment (closure)
+                lvl_df = level  # bind before reassignment (closure)
                 res = self._io.run_stage(
                     f"pyr_level_{z:02d}",
                     lambda: lvl_df.repartition(n),
                     inputs=(self._prev_snap,),
                     fingerprint=self._fp,
                 )
-                assigned = res.df
+                level = res.df
                 self._prev_snap = res.snapshot_id
             elif points is None:
                 # an uncounted (pre-wrapped) z0: __init__ coalesced it to
                 # the rule's cap and checkpointed it; its stats aggregate
                 # sizes every level after it
-                n = assigned.rdd.getNumPartitions()
+                n = level.rdd.getNumPartitions()
             else:
                 # coalesce when the level shrinks, which is the usual case
                 # (a split output has at least its parent level's
@@ -507,87 +534,102 @@ class TilePyramid:
                 # the children of a one-partition pre-wrapped z0. Lazy
                 # checkpoint: the level materializes inside its stats
                 # aggregate below (one fused pass, ContextCleaner-managed
-                # blocks); the workdir/TableIO branch above stays the
+                # blocks); the staged branch above is the
                 # reliable-checkpoint cluster path.
                 n = stage_parts(self.spark, points)
-                assigned, grew = fit_parts(assigned, n)
+                level, grew = fit_parts(level, n)
                 if grew or not materialized:
-                    assigned = assigned.localCheckpoint(eager=False)
+                    level = level.localCheckpoint(eager=False)
             materialized = False
-            self._level_assigned[z] = assigned
-            splits = self._level_stats(assigned, visit, z)
-            if splits is None:
+            old = self._level_assigned.get(z)  # rows registered before
+            self._level_assigned[z] = level if old is None else old.unionByName(level)
+            pdf = (
+                level.groupBy("tx", "ty")
+                .agg(
+                    F.sum("num_points").alias("npts"),
+                    F.count("*").alias("nrows"),
+                    split_mid_points_col(o.buffer, o.extent).alias("nmid"),
+                )
+                .toPandas()
+            )
+            sxs = pdf["tx"].to_numpy().astype(np.int64)
+            sys_ = pdf["ty"].to_numpy().astype(np.int64)
+            snpts = pdf["npts"].to_numpy().astype(np.int64)
+            snrows = pdf["nrows"].to_numpy().astype(np.int64)
+            snmid = pdf["nmid"].fillna(0).to_numpy().astype(np.int64)
+            # fresh tiles, in vectorized numpy
+            fxs, fys = fresh
+            packed = (fxs << 29) + fys
+            order = np.argsort(packed)
+            fxs, fys, packed = fxs[order], fys[order], packed[order]
+            is_fresh = np.isin((sxs << 29) + sys_, packed)
+            idx = np.searchsorted(packed, (sxs[is_fresh] << 29) + sys_[is_fresh])
+            npts = np.zeros(len(packed), dtype=np.int64)
+            nrows = np.zeros(len(packed), dtype=np.int64)
+            nmid = np.zeros(len(packed), dtype=np.int64)
+            npts[idx] = snpts[is_fresh]
+            nrows[idx] = snrows[is_fresh]
+            nmid[idx] = snmid[is_fresh]
+            nonempty = nrows > 0
+            keep_src = nonempty & (
+                (z == o.index_max_zoom) | (npts <= o.index_max_points)
+            )
+            split_mask = nonempty & (z < o.index_max_zoom) & (npts > o.index_max_points)
+            if len(packed):
+                self.meta.add_level(z, fxs, fys, npts, nrows, keep_src)
+            descend = list(zip(fxs[split_mask].tolist(), fys[split_mask].tolist()))
+            points = int(npts[split_mask].sum())  # vertices reaching z + 1
+            mid_points = int(nmid[split_mask].sum())
+            new_splits: list[tuple[int, int]] = []  # registered, newly split
+            for i in np.flatnonzero(~is_fresh).tolist():
+                x, y = int(sxs[i]), int(sys_[i])
+                key = (z, x, y)
+                if key not in self.meta:
+                    raise AssertionError(f"level stats reached unregistered tile {key}")
+                m = self.meta[key]
+                was_interior = m.rows > 0 and not m.has_source
+                old_points = m.num_points
+                m.num_points += int(snpts[i])
+                m.rows += int(snrows[i])
+                if was_interior:
+                    descend.append((x, y))  # children exist: new rows only
+                    points += int(snpts[i])
+                    mid_points += int(snmid[i])
+                elif z == o.index_max_zoom or m.num_points <= o.index_max_points:
+                    m.has_source = True  # leaf stays leaf (empty becomes leaf)
+                else:
+                    # leaf newly exceeds the split threshold: its old rows
+                    # re-split with the new ones; their vertices bound
+                    # their mid-row vertices
+                    m.has_source = False
+                    descend.append((x, y))
+                    new_splits.append((x, y))
+                    points += m.num_points  # new rows and the old ones
+                    mid_points += int(snmid[i]) + old_points
+            if not descend:
                 break
-            sxs, sys_, points, mid_points = splits
-            split_df = self._filter_tiles(
-                assigned, list(zip(sxs.tolist(), sys_.tolist()))
+            split_df = self._filter_tiles_z(level, [(z, x, y) for x, y in descend])
+            if new_splits:
+                split_df = split_df.unionByName(
+                    self._filter_tiles_z(old, [(z, x, y) for x, y in new_splits])
+                )
+            reg = np.array(new_splits, dtype=np.int64).reshape(-1, 2)
+            cxs = np.concatenate([fxs[split_mask], reg[:, 0]])
+            cys = np.concatenate([fys[split_mask], reg[:, 1]])
+            fresh = (
+                np.repeat(cxs * 2, 4) + np.tile(np.array([0, 1, 0, 1]), len(cxs)),
+                np.repeat(cys * 2, 4) + np.tile(np.array([0, 0, 1, 1]), len(cys)),
             )
-            visit = (
-                np.repeat(sxs * 2, 4) + np.tile(np.array([0, 1, 0, 1]), len(sxs)),
-                np.repeat(sys_ * 2, 4) + np.tile(np.array([0, 0, 1, 1]), len(sys_)),
-            )
-            # a level on one partition (n is its partition count) feeds its
-            # kernel as it is: there is nothing to shrink or balance
-            assigned = split_children(
+            # a split input on one partition (n is the level's partition
+            # count) feeds its kernel as it is: nothing to shrink or balance
+            level = split_children(
                 split_df, o.buffer, o.extent, o.line_metrics,
-                kernel_parts=None if n == 1 else stage_parts(self.spark, mid_points),
+                kernel_parts=(
+                    None if n == 1 and not new_splits
+                    else stage_parts(self.spark, mid_points)
+                ),
             )
             z += 1
-
-    def _level_stats(self, assigned: DataFrame, visit, z: int):
-        """Stop conditions for one build level (``geojsonvt.hpp:210-215``).
-
-        One aggregate over the level — per-tile num_points sum, row count
-        and the vertices of the next split's mid rows (rows the native
-        routing cannot clip, see split_children/kernel_parts) — then
-        vectorized numpy: every visited tile (``visit`` = (xs, ys), empties
-        included) lands in one registry block; a non-empty tile keeps its
-        source at ``indexMaxZoom`` or at most ``indexMaxPoints`` points, and
-        splits otherwise. Returns the (xs, ys) arrays of tiles to split,
-        their vertex total (the size of the next level) and their mid-row
-        vertex total (the size of the split kernel), or None when the level
-        is all leaves.
-        """
-        o = self.o
-        vxs, vys = visit
-        packed = (vxs << 29) + vys
-        order = np.argsort(packed)
-        vxs, vys, packed = vxs[order], vys[order], packed[order]
-        pdf = (
-            assigned.groupBy("tx", "ty")
-            .agg(
-                F.sum("num_points").alias("npts"),
-                F.count("*").alias("nrows"),
-                split_mid_points_col(o.buffer, o.extent).alias("nmid"),
-            )
-            .toPandas()
-        )
-        npts = np.zeros(len(packed), dtype=np.int64)
-        nrows = np.zeros(len(packed), dtype=np.int64)
-        nmid = np.zeros(len(packed), dtype=np.int64)
-        if len(pdf):
-            sp = (
-                pdf["tx"].to_numpy().astype(np.int64) << 29
-            ) + pdf["ty"].to_numpy().astype(np.int64)
-            idx = np.searchsorted(packed, sp)
-            ok = (idx < len(packed)) & (packed[np.minimum(idx, len(packed) - 1)] == sp)
-            if not ok.all():
-                raise AssertionError("level stats contain unvisited tiles")
-            npts[idx] = pdf["npts"].to_numpy().astype(np.int64)
-            nrows[idx] = pdf["nrows"].to_numpy().astype(np.int64)
-            nmid[idx] = pdf["nmid"].fillna(0).to_numpy().astype(np.int64)
-        nonempty = nrows > 0
-        keep_src = nonempty & (
-            (z == o.index_max_zoom) | (npts <= o.index_max_points)
-        )
-        split_mask = nonempty & (z < o.index_max_zoom) & (npts > o.index_max_points)
-        self.meta.add_level(z, vxs, vys, npts, nrows, keep_src)
-        if not split_mask.any():
-            return None
-        return (
-            vxs[split_mask], vys[split_mask],
-            int(npts[split_mask].sum()), int(nmid[split_mask].sum()),
-        )
 
     # ---------------------------------------------------------------- append
 
@@ -603,18 +645,21 @@ class TilePyramid:
         parquet manifests, never re-clipped).
 
         The result is row/meta/stats-identical to a full rebuild over the
-        union corpus (pytest-gated): new rows descend the existing BFS
-        levels; interior (already-split) tiles pass only the NEW rows to
-        their children; a leaf whose combined num_points now exceeds
+        union corpus (pytest-gated). The build is this append onto an empty
+        index: the batch runs the build's level loop (:meth:`_descend`)
+        from z0 with no fresh tile, so every tile it reaches is registered.
+        Interior (already-split) tiles pass only the NEW rows to their
+        children; a leaf whose combined num_points now exceeds
         ``indexMaxPoints`` is newly split — its OLD rows are pulled back
         from the level checkpoint and re-clipped together with the new
-        ones; children of new splits register exactly like the eager build
+        ones; children of new splits register exactly like the build's
         (all four, empties included).
 
-        Scale shape: per level, one narrow clip over the new rows + one
-        touched-tile aggregate (driver state bounded by the NEW features'
-        tile cover, not the corpus); the old-leaf pull is a pruned filter
-        on the level checkpoint.
+        Scale shape: the build's — wrap's deciding aggregate, then per
+        level one narrow clip over the new rows and one touched-tile
+        aggregate, into which the level's lazy checkpoint fuses (driver
+        state bounded by the NEW features' tile cover, not the corpus); the
+        old-leaf pull is a pruned filter on the level checkpoint.
 
         Constraints: not defined after drill-downs (``get_tile`` misses) —
         a rebuild would not contain them; call append first, drill after.
@@ -636,117 +681,17 @@ class TilePyramid:
             features_df = extract_features(
                 docs_df, tol, generate_id=o.generate_id, on_error=on_error
             )
-        # the batch keeps its convert partitioning until wrap's aggregate
-        # counts its vertices; that count sizes z0, and each level after is
-        # sized by the vertices that descend to it
-        feats, points = wrap_with_points(
-            features_df.localCheckpoint(), o.buffer / o.extent, o.line_metrics
-        )
-        self._append_seq += 1
         self._invalidate_tile_features()
         self._tile_cache.clear()
-        new_assigned = feats.select(
-            F.lit(0).alias("z"),
-            F.lit(0).cast("long").alias("tx"),
-            F.lit(0).cast("long").alias("ty"),
-            "*",
+        # as in the build: the batch keeps its convert partitioning until
+        # wrap's aggregate counts its vertices (and materializes the lazy
+        # checkpoint); that count sizes z0
+        features_df = features_df.localCheckpoint(eager=False)
+        feats, points = wrap_with_points(
+            features_df, o.buffer / o.extent, o.line_metrics
         )
-        # (x, y) at level z of the children of tiles split by this append
-        expect: set[tuple[int, int]] = set()
-        z = 0
-        while True:
-            new_assigned = fit_parts(
-                new_assigned, stage_parts(self.spark, points)
-            )[0].localCheckpoint()
-            nstats = {
-                (r["tx"], r["ty"]): (int(r["npts"]), int(r["nrows"]))
-                for r in new_assigned.groupBy("tx", "ty")
-                .agg(F.sum("num_points").alias("npts"), F.count("*").alias("nrows"))
-                .collect()
-            }
-            if not nstats and not expect:
-                break
-            descend_new: list[tuple[int, int]] = []  # new rows descend
-            pull_old: list[tuple[int, int]] = []  # old leaf rows re-split too
-            new_splits: list[tuple[int, int]] = []  # children need registering
-            fresh: list[tuple] = []  # (x, y, npts, rows, has_source)
-            points = 0  # vertices descending to level z + 1
-            for (x, y) in sorted(set(nstats) | expect):
-                npts_new, rows_new = nstats.get((x, y), (0, 0))
-                if (x, y) in expect:
-                    # child of a tile split during THIS append: fresh tile,
-                    # new_assigned already carries ALL of its rows
-                    leaf = z == o.index_max_zoom or npts_new <= o.index_max_points
-                    fresh.append((x, y, npts_new, rows_new, rows_new > 0 and leaf))
-                    if rows_new > 0 and not leaf:
-                        descend_new.append((x, y))
-                        new_splits.append((x, y))
-                        points += npts_new
-                    continue
-                key = (z, x, y)
-                if key not in self.meta:
-                    raise AssertionError(f"append reached unregistered tile {key}")
-                m = self.meta[key]
-                was_interior = m.rows > 0 and not m.has_source
-                m.num_points += npts_new
-                m.rows += rows_new
-                if was_interior:
-                    descend_new.append((x, y))  # children exist: new rows only
-                    points += npts_new
-                elif z == o.index_max_zoom or m.num_points <= o.index_max_points:
-                    m.has_source = True  # leaf stays leaf (empty becomes leaf)
-                else:
-                    # leaf newly exceeds the split threshold: old rows come
-                    # back from the level checkpoint and re-split with new
-                    m.has_source = False
-                    descend_new.append((x, y))
-                    pull_old.append((x, y))
-                    new_splits.append((x, y))
-                    points += m.num_points  # new rows and the old ones
-            if fresh:
-                arr = np.array(fresh, dtype=np.int64)
-                self.meta.add_level(
-                    z, arr[:, 0], arr[:, 1], arr[:, 2], arr[:, 3], arr[:, 4]
-                )
-            old_lvl = self._level_assigned.get(z)
-            if pull_old:
-                descend_old = self._filter_tiles(old_lvl, pull_old)
-            if nstats:
-                self._level_assigned[z] = (
-                    new_assigned
-                    if old_lvl is None
-                    else old_lvl.unionByName(new_assigned)
-                )
-            expect = {
-                (2 * x + dx, 2 * y + dy)
-                for (x, y) in new_splits
-                for dx in (0, 1)
-                for dy in (0, 1)
-            }
-            if not descend_new:
-                break
-            descend = self._filter_tiles(new_assigned, descend_new)
-            if pull_old:
-                descend = descend.unionByName(descend_old)
-            new_assigned = split_children(descend, o.buffer, o.extent, o.line_metrics)
-            z += 1
-
-    @staticmethod
-    def _filter_tiles(df: DataFrame, tiles: list[tuple[int, int]]) -> DataFrame:
-        if len(tiles) == 1:
-            x, y = tiles[0]
-            return df.where((F.col("tx") == x) & (F.col("ty") == y))
-        if len(tiles) > 2048:
-            # Py4J literal marshalling is ~1 ms/key — broadcast-semi-join an
-            # Arrow-built key table instead (see _filter_tiles_z)
-            kpdf = pd.DataFrame(tiles, columns=["tx", "ty"]).astype("int64")
-            kdf = df.sparkSession.createDataFrame(kpdf)
-            return df.join(F.broadcast(kdf), ["tx", "ty"], "leftsemi")
-        # packed-int membership: Catalyst turns a literal-int isin into an
-        # InSet hash probe; a struct-literal isin would instead analyze and
-        # evaluate a huge OR tree per row (dominant cost at deep levels)
-        packed = F.shiftleft(F.col("tx"), 32) + F.col("ty")
-        return df.where(packed.isin([(x << 32) + y for x, y in tiles]))
+        none = np.zeros(0, dtype=np.int64)
+        self._descend(feats, points, feats is features_df, (none, none))
 
     # ------------------------------------------------------------ drill-down
 
@@ -763,11 +708,6 @@ class TilePyramid:
         """
         c = self.meta.block_container(key)
         return self._level_assigned.get(key[0]) if c is None else c
-
-    def _drill(self, cz: int, cx: int, cy: int) -> None:
-        """splitTile(parent.source, ..., cz, cx, cy) (geojsonvt.hpp:130-139):
-        single-target drill, a batch of one (:meth:`_drill_batch`)."""
-        self._drill_batch([(cz, cx, cy)])
 
     def _drill_batch(self, targets: list[tuple[int, int, int]]) -> None:
         """Batched drill-down: every miss drilled in ONE BFS — one
@@ -904,8 +844,9 @@ class TilePyramid:
 
     @staticmethod
     def _filter_tiles_z(df: DataFrame, keys: list[tuple[int, int, int]]) -> DataFrame:
-        """Tile membership filter keyed on (z, tx, ty) — the batched-drill
-        children union mixes levels, so tx/ty alone would collide.
+        """Tile membership filter keyed on (z, tx, ty) — the one filter of
+        the level loop's splits and old-leaf pulls and of the drill rounds,
+        whose children union mixes levels, so tx/ty alone would collide.
 
         Small key sets compile to an InSet probe; large ones become a
         broadcast left-semi join against an Arrow-built key table —
@@ -968,7 +909,9 @@ class TilePyramid:
         x = ((x % z2) + z2) % z2
         key = (z, x, y)
         if key not in self.meta:
-            self._drill(z, x, y)
+            # splitTile from the nearest sourced ancestor
+            # (geojsonvt.hpp:130-139): a batch of one
+            self._drill_batch([key])
         if key not in self.meta:
             return EMPTY_TILE
         return self._collect_tile(key)
@@ -1106,13 +1049,12 @@ class TilePyramid:
         p = (z << 58) + (x << 29) + y
         mins, entries = self._serving
         i = bisect_right(mins, p) - 1
-        feats: list = []
-        nsimp = 0
+        rows: list = []
         if i >= 0 and entries[i][0] >= p:
             # rows come back in the snapshot's (pk, SORT_KEYS) write order;
-            # arrow -> Python lists directly (to_pylist): pandas object
+            # arrow -> Python objects directly (to_pylist): pandas object
             # columns for the nested int16 arrays cost ~5x more per row
-            tbl = _pq.read_table(
+            rows = _pq.read_table(
                 entries[i][1],
                 columns=[
                     "pk", "n_simplified", "out_type", "is_multi", "part_xs",
@@ -1120,26 +1062,8 @@ class TilePyramid:
                     "id_kind",
                 ],
                 filters=[("pk", "==", p)],
-            )
-            cols = [tbl.column(c).to_pylist() for c in tbl.column_names[1:]]
-            for (n_s, o_t, i_m, pxs, pys, plens, props, fid, idk) in zip(*cols):
-                nsimp += n_s
-                if o_t < 0:
-                    continue
-                feats.append(
-                    {
-                        "type": o_t,
-                        "is_multi": i_m,
-                        "parts": [
-                            [[px, py] for px, py in zip(xs, ys)]
-                            for xs, ys in zip(pxs, pys)
-                        ],
-                        "poly_lens": plens,
-                        "tags": json.loads(props),
-                        "id": fid,
-                        "id_kind": idk,
-                    }
-                )
+            ).to_pylist()
+        feats, nsimp = _rows_to_features(rows)
         return Tile(z, x, y, feats, self.meta[key].num_points, nsimp)
 
     def _collect_tile(self, key: tuple[int, int, int]) -> Tile:
@@ -1165,23 +1089,8 @@ class TilePyramid:
         tile keyed 'z{z}-{x}-{y}', in ONE Spark job."""
         rows = self.tile_features().orderBy("z", "tx", "ty", *codec.SORT_KEYS).collect()
         out = {f"z{z}-{x}-{y}": [] for (z, x, y) in self.meta}
-        for r in rows:
-            if r["out_type"] < 0:
-                continue
-            out[f"z{r['z']}-{r['tx']}-{r['ty']}"].append(
-                {
-                    "type": r["out_type"],
-                    "is_multi": r["is_multi"],
-                    "parts": [
-                        [[int(px), int(py)] for px, py in zip(xs, ys)]
-                        for xs, ys in zip(r["part_xs"], r["part_ys"])
-                    ],
-                    "poly_lens": list(r["poly_lens"]),
-                    "tags": json.loads(r["props_json"]),
-                    "id": r["feature_id"],
-                    "id_kind": r["id_kind"],
-                }
-            )
+        for (z, x, y), tile_rows in groupby(rows, lambda r: (r["z"], r["tx"], r["ty"])):
+            out[f"z{z}-{x}-{y}"].extend(_rows_to_features(tile_rows)[0])
         return out
 
     def _invalidate_tile_features(self) -> None:

@@ -103,6 +103,27 @@ def test_append_reads_back_untouched_manifests(spark, tmp_path):
     inc.close()
 
 
+def test_build_equals_append_onto_empty_index(spark):
+    """The build is an append onto an empty index: a pyramid built from no
+    features, then appended us-states ∪ dateline, equals the pyramid built
+    from us-states ∪ dateline — registry, stats, source retention and every
+    quantized tile feature."""
+    from geojson_vt_cpp_spark.operators.convert import extract_features
+
+    us = documents_from_fixture(spark, load_fixture("us-states.json"), "us-states")
+    dl = documents_from_fixture(spark, DATELINE_GEOJSON, "dateline")
+    docs = us.unionByName(dl)
+    o = Options(index_max_zoom=3, index_max_points=200)
+    tol = (o.tolerance / o.extent) / (1 << o.max_zoom)
+    inc = TilePyramid(extract_features(docs.limit(0), tol), o)
+    assert inc.stats == {0: 1} and inc.meta[(0, 0, 0)].rows == 0
+    inc.append(docs_df=docs)
+    full = TilePyramid(extract_features(docs, tol), o)
+    _assert_same(full, inc)
+    full.close()
+    inc.close()
+
+
 @pytest.mark.parametrize("seed", [7, 19, 42])
 def test_append_fuzz_equals_rebuild(spark, seed):
     """Seeded random-geometry append fuzz: arbitrary geometry mixes

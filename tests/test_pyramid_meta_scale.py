@@ -1,8 +1,8 @@
 """The tile registry: numpy blocks checked against the independent
 driver-side mirror, bounded driver state at deep index_max_zoom, the
-build's job floor of one Spark job per BFS level, and its partition
-sizing: one partition per stage for a small index, a grown z0 for a large
-one-partition input."""
+build's and the append's job floor of one Spark job per BFS level, and
+the build's partition sizing: one partition per stage for a small index,
+a grown z0 for a large one-partition input."""
 
 from __future__ import annotations
 
@@ -134,6 +134,24 @@ def test_build_runs_one_job_per_level(spark):
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
     assert len(pyr.stats) == 3, pyr.stats
     assert len(jobs) == 3, jobs
+    pyr.close()
+
+
+def test_append_runs_one_job_per_level(spark):
+    """The append's job floor: a batch runs wrap's deciding aggregate, into
+    which its lazy checkpoint fuses, then the build's level loop — one job
+    per level it descends, the level's stats aggregate. A second us-states
+    copy appended onto a 3-level index descends all three levels: 4 jobs.
+    Adaptive execution is off, as in perfbench."""
+    o = Options(index_max_zoom=2, index_max_points=1000)
+    text = load_fixture("us-states.json")
+    pyr = TilePyramid.from_documents(documents_from_fixture(spark, text, "us-states"), o)
+    batch = documents_from_fixture(spark, text, "us-states-copy")
+    group = "test-pyramid-append-jobs"
+    _without_aqe(spark, group, lambda: pyr.append(docs_df=batch))
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+    assert len(pyr.stats) == 3, pyr.stats
+    assert len(jobs) == 4, jobs
     pyr.close()
 
 
