@@ -143,18 +143,17 @@ class _MetaRef:
 class _MetaStore:
     """Tile registry: dict semantics over numpy blocks.
 
-    Every registration adds one block — a build or append level, or the
-    children one drill round registered at one zoom: packed-key-sorted
-    arrays of (key, num_points, rows, has_source), ~33 bytes/tile, with
-    O(log n) searchsorted lookups. Mutations (append growing a tile, a
-    drill retiring a source) write through the :class:`_MetaRef` view into
-    the block.
+    Every registration adds one block — the fresh tiles of one build or
+    append level, or the children one drill round registered at one zoom:
+    packed-key-sorted arrays of (key, num_points, rows, has_source), ~33
+    bytes/tile, with O(log n) searchsorted lookups. Mutations (append
+    growing a tile, a drill retiring a source) write through the
+    :class:`_MetaRef` view into the block.
     """
 
     def __init__(self):
         # z -> list of (packed_keys_sorted, npts, nrows, has_source,
-        #               container_df_or_None); multiple blocks per level:
-        # one per build / append level with fresh tiles and per drill round
+        #               container_df_or_None); multiple blocks per level
         self._levels: dict[int, list] = {}
         self._block_count = 0
 
