@@ -387,6 +387,9 @@ class TilePyramid:
         # registry vertices ("points") and the partitions that sized ("parts")
         self.drill_log: list[dict] = []
         self._drilled = False  # append() is defined on the eager index only
+        # the level aggregate's mid-row vertex sum, built once for the build
+        # and every append: its routing expressions cost ~1k Py4J calls
+        self._mid_col = split_mid_points_col(self.o.buffer, self.o.extent).alias("nmid")
         self._io = None
         self._fp = ""
         if workdir is not None:
@@ -547,7 +550,7 @@ class TilePyramid:
                 .agg(
                     F.sum("num_points").alias("npts"),
                     F.count("*").alias("nrows"),
-                    split_mid_points_col(o.buffer, o.extent).alias("nmid"),
+                    self._mid_col,
                 )
                 .toPandas()
             )
