@@ -6,8 +6,10 @@ point-in-polygon join against synthetic points derived from the sf0.001
 customer table -> per-state aggregate.
 
 ``queries()`` / ``oracle_sql()`` — one entry per implemented operator family
-(SURVEY.md §2 + the north-rule §2.11 operators + training-data ops): 58
-queries, every one oracle-backed. Most are dual-dialect SQL generated from
+(SURVEY.md §2 + the north-rule §2.11 operators + training-data ops): 64
+queries, every one oracle-backed where the reference checkout exists; without
+it the three golden-derived oracles (``golden_oracle.GOLDEN_QUERIES``) are
+absent and those queries run rows-only. Most are dual-dialect SQL generated from
 ONE template (geojson_vt_cpp_spark/functions/dialect_sql.py) so the Spark
 plan and the DuckDB oracle compute bit-compatible values; the spatial-join
 (PIP / kNN / distance / bbox-overlap) / IVF / clustering / streaming
@@ -878,14 +880,15 @@ def oracle_sql() -> dict[str, str]:
     o["dedup_minhash_jaccard"] = " ".join(D.minhash_jaccard_sql("duckdb").split())
     o["stream_events_hourly"] = " ".join(STREAM_HOURLY_ORACLE.split())
     o["stream_pip_triangles"] = o["geo_pip_triangles"]
-    # pyramid_*: literal-VALUES oracles aggregated from the reference's own
-    # golden fixture; mm_image_features: literals precomputed from the
-    # deterministic stub decode (functions/golden_oracle.py)
+    # G.GOLDEN_QUERIES (pyramid_*, tile_mvt_roundtrip): literal-VALUES
+    # oracles aggregated from the reference's own golden fixture, present
+    # only with the reference checkout (without it those three queries run
+    # rows-only); mm_*: literals precomputed from the deterministic stub
+    # decode; geo_feature_stats: from the in-repo us-states fixture
+    # (functions/golden_oracle.py)
     from geojson_vt_cpp_spark.functions import golden_oracle as G
 
-    o["pyramid_tiles_per_zoom"] = G.pyramid_tiles_per_zoom_oracle_sql()
-    o["pyramid_tile_features"] = G.pyramid_tile_features_oracle_sql()
-    o["tile_mvt_roundtrip"] = G.tile_mvt_roundtrip_oracle_sql()
+    o.update(G.golden_oracle_sql())
     o["mm_image_features"] = G.mm_image_features_oracle_sql()
     o["mm_resize_features"] = G.mm_resize_features_oracle_sql()
     o["mm_video_frames"] = G.mm_video_frames_oracle_sql()

@@ -2,7 +2,7 @@
 
 Runs each query (Spark collect) plus its DuckDB oracle at sf0.01, in
 insertion order, printing per-query seconds and a cumulative total — the
-feedback loop for keeping all 58 rows inside the driver's global budget
+feedback loop for keeping all 64 rows inside the driver's global budget
 (round 4 truncated at 50).
 
 Usage: python3 scripts/time_driver_queries.py [--only name1,name2] [--cpus N]

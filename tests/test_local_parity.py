@@ -15,16 +15,24 @@ import pytest
 
 from geojson_vt_cpp_spark.config import Options, TileOptions
 
-from .golden_utils import compare_tiles, load_fixture, load_golden_tiles
+from .golden_utils import (
+    compare_tiles,
+    load_fixture,
+    load_golden_tiles,
+    requires_fixtures,
+)
 from .local_pyramid import LocalPyramid, gen_tiles, geojson_to_tile
 
 SUITES = [
-    ("us-states.json", "us-states-tiles.json", 7, 200, False),
-    ("dateline.json", "dateline-tiles.json", 7, 200, False),
-    ("dateline.json", "dateline-metrics-tiles.json", 0, 10000, True),
-    ("feature.json", "feature-tiles.json", 0, 10000, False),
-    ("collection.json", "collection-tiles.json", 0, 10000, False),
-    ("single-geom.json", "single-geom-tiles.json", 0, 10000, False),
+    pytest.param(inp, gold, mz, mp, lm, marks=requires_fixtures(inp, gold))
+    for (inp, gold, mz, mp, lm) in [
+        ("us-states.json", "us-states-tiles.json", 7, 200, False),
+        ("dateline.json", "dateline-tiles.json", 7, 200, False),
+        ("dateline.json", "dateline-metrics-tiles.json", 0, 10000, True),
+        ("feature.json", "feature-tiles.json", 0, 10000, False),
+        ("collection.json", "collection-tiles.json", 0, 10000, False),
+        ("single-geom.json", "single-geom-tiles.json", 0, 10000, False),
+    ]
 ]
 
 
@@ -36,6 +44,7 @@ def test_golden_tiles(inp, gold, mz, mp, lm):
     assert not errs, errs[:10]
 
 
+@requires_fixtures("us-states-z7-37-48.json", "us-states-square.json")
 def test_get_tile_us_states():
     idx = LocalPyramid(load_fixture("us-states.json"), Options())
     golden = json.loads(load_fixture("us-states-z7-37-48.json"))
@@ -46,6 +55,7 @@ def test_get_tile_us_states():
     assert idx.total == 37
 
 
+@requires_fixtures("us-states-z7-37-48-gen-ids.json")
 def test_get_tile_generate_ids():
     # the checked-in golden was generated with DEFAULT options + generateId
     # (its geometry equals us-states-z7-37-48.json); the C++ test's
@@ -65,6 +75,7 @@ def test_get_tile_generate_ids():
     )
 
 
+@requires_fixtures("dateline-triangle.json")
 def test_antimeridian_triangle():
     idx = LocalPyramid(load_fixture("dateline-triangle.json"), Options())
     for z, x, y in [(1, 0, 0), (1, 0, 1), (1, 1, 0), (1, 1, 1)]:
@@ -73,6 +84,7 @@ def test_antimeridian_triangle():
         assert len(t.features) == 1
 
 
+@requires_fixtures("polygon-bug.json")
 def test_polygon_clipping_bug():
     idx = LocalPyramid(load_fixture("polygon-bug.json"), Options(buffer=1024))
     t = idx.get_tile(5, 19, 9)
@@ -83,6 +95,7 @@ def test_polygon_clipping_bug():
     ]
 
 
+@requires_fixtures("linestring.json")
 def test_projection_roundtrip():
     idx = LocalPyramid(
         load_fixture("linestring.json"),
@@ -117,6 +130,7 @@ def test_projection_roundtrip():
             assert abs(lat - elat) < tol
 
 
+@requires_fixtures("single-tile.json")
 def test_geojson_to_tile_simple():
     t = geojson_to_tile(load_fixture("single-tile.json"), 12, 1171, 1566)
     assert len(t.features) == 1
@@ -136,6 +150,7 @@ def test_geojson_to_tile_clips():
     assert t.features[0]["tags"]["name"] == "District of Columbia"
 
 
+@requires_fixtures("single-tile.json")
 def test_geojson_to_tile_metrics():
     opts = TileOptions(line_metrics=True, buffer=64, tolerance=3)
     left = geojson_to_tile(load_fixture("single-tile.json"), 13, 2342, 3133, opts)
@@ -168,6 +183,7 @@ def test_clip_vertex_on_tile_border():
     assert abs(f["tags"]["mapbox_clip_end"] - 1.0) < 1e-5
 
 
+@requires_fixtures("empty.json")
 def test_empty_geojson():
     assert len(gen_tiles(load_fixture("empty.json"))) == 1
 

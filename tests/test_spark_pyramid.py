@@ -16,7 +16,12 @@ from geojson_vt_cpp_spark.sources.documents import (
     span_sequence_fingerprint,
 )
 
-from .golden_utils import compare_tiles, load_fixture, load_golden_tiles
+from .golden_utils import (
+    compare_tiles,
+    load_fixture,
+    load_golden_tiles,
+    requires_fixtures,
+)
 
 pytestmark = pytest.mark.spark
 
@@ -45,12 +50,15 @@ def _gen_tiles(spark, fixture, max_zoom=0, max_points=10000, line_metrics=False)
 
 
 SUITES = [
-    ("us-states.json", "us-states-tiles.json", 7, 200, False),
-    ("dateline.json", "dateline-tiles.json", 7, 200, False),
-    ("dateline.json", "dateline-metrics-tiles.json", 0, 10000, True),
-    ("feature.json", "feature-tiles.json", 0, 10000, False),
-    ("collection.json", "collection-tiles.json", 0, 10000, False),
-    ("single-geom.json", "single-geom-tiles.json", 0, 10000, False),
+    pytest.param(inp, gold, mz, mp, lm, marks=requires_fixtures(inp, gold))
+    for (inp, gold, mz, mp, lm) in [
+        ("us-states.json", "us-states-tiles.json", 7, 200, False),
+        ("dateline.json", "dateline-tiles.json", 7, 200, False),
+        ("dateline.json", "dateline-metrics-tiles.json", 0, 10000, True),
+        ("feature.json", "feature-tiles.json", 0, 10000, False),
+        ("collection.json", "collection-tiles.json", 0, 10000, False),
+        ("single-geom.json", "single-geom-tiles.json", 0, 10000, False),
+    ]
 ]
 
 
@@ -62,6 +70,7 @@ def test_spark_golden_tiles(spark, inp, gold, mz, mp, lm):
     assert not errs, errs[:10]
 
 
+@requires_fixtures("us-states-z7-37-48.json", "us-states-square.json")
 def test_spark_get_tile_us_states(spark):
     pyr = _pyramid(spark, "us-states.json", Options())
     golden = json.loads(load_fixture("us-states-z7-37-48.json"))
@@ -78,6 +87,7 @@ def test_spark_get_tile_us_states(spark):
     pyr.close()
 
 
+@requires_fixtures("us-states-z7-37-48-gen-ids.json")
 def test_spark_generate_ids(spark):
     golden = json.loads(load_fixture("us-states-z7-37-48-gen-ids.json"))
     pyr = _pyramid(spark, "us-states.json", Options(generate_id=True))
@@ -85,6 +95,7 @@ def test_spark_generate_ids(spark):
     pyr.close()
 
 
+@requires_fixtures("dateline-triangle.json")
 def test_spark_antimeridian_triangle(spark):
     pyr = _pyramid(spark, "dateline-triangle.json", Options())
     for z, x, y in [(1, 0, 0), (1, 0, 1), (1, 1, 0), (1, 1, 1)]:
@@ -94,6 +105,7 @@ def test_spark_antimeridian_triangle(spark):
     pyr.close()
 
 
+@requires_fixtures("polygon-bug.json")
 def test_spark_polygon_clipping_bug(spark):
     pyr = _pyramid(spark, "polygon-bug.json", Options(buffer=1024))
     t = pyr.get_tile(5, 19, 9)
@@ -104,10 +116,12 @@ def test_spark_polygon_clipping_bug(spark):
     pyr.close()
 
 
+@requires_fixtures("empty.json")
 def test_spark_empty_geojson(spark):
     assert len(_gen_tiles(spark, "empty.json")) == 1
 
 
+@requires_fixtures("single-tile.json")
 def test_spark_one_shot_simple_and_metrics(spark):
     docs = documents_from_fixture(spark, load_fixture("single-tile.json"), "single-tile")
     rows = geojson_to_tile_df(docs, 12, 1171, 1566).collect()
@@ -170,6 +184,7 @@ def test_span_sequence_invariant(spark):
     pyr.close()
 
 
+@requires_fixtures("linestring.json")
 def test_spark_projection_roundtrip(spark):
     """GetTile.Projection (test.cpp:282-338) through the SPARK pipeline:
     z0-z20 drill-down of linestring.json, int16 coords re-projected to
