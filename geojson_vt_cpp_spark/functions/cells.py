@@ -43,6 +43,13 @@ def spread_bits(col: Column) -> Column:
     return v
 
 
+def grid_index(v: Column, n: int) -> Column:
+    """Grid column/row of unit-square coordinate ``v`` on an ``n``-cell axis:
+    ``floor(v*n)`` clamped to [0, n-1], so out-of-range coordinates
+    (antimeridian world copies) land in the edge cells."""
+    return F.least(F.greatest(F.floor(v * n).cast("long"), F.lit(0)), F.lit(n - 1))
+
+
 def cell_id(x: Column, y: Column, res: int) -> Column:
     """Morton cell id at resolution ``res`` from unit-square coords.
 
@@ -51,10 +58,8 @@ def cell_id(x: Column, y: Column, res: int) -> Column:
     """
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res must be in [0, {MAX_RES}]")
-    n = float(1 << res)
-    cap = (1 << res) - 1
-    ix = F.least(F.greatest(F.floor(x * n).cast("long"), F.lit(0)), F.lit(cap))
-    iy = F.least(F.greatest(F.floor(y * n).cast("long"), F.lit(0)), F.lit(cap))
+    ix = grid_index(x, 1 << res)
+    iy = grid_index(y, 1 << res)
     return spread_bits(ix).bitwiseOR(F.shiftleft(spread_bits(iy), 1)).alias(
         f"cell_r{res}"
     )
@@ -121,10 +126,8 @@ def cell_xy_np(cell: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
 def quadkey(x: Column, y: Column, res: int) -> Column:
     """Quadkey string (tile address digits) — lexicographic prefixes nest,
     so ``repartitionByRange(quadkey)`` range-partitions spatially."""
-    n = float(1 << res)
-    cap = (1 << res) - 1
-    ix = F.least(F.greatest(F.floor(x * n).cast("long"), F.lit(0)), F.lit(cap))
-    iy = F.least(F.greatest(F.floor(y * n).cast("long"), F.lit(0)), F.lit(cap))
+    ix = grid_index(x, 1 << res)
+    iy = grid_index(y, 1 << res)
     digits = [
         (
             F.shiftright(ix, r).bitwiseAND(F.lit(1))

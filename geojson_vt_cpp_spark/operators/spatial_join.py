@@ -19,11 +19,13 @@ Design:
   the candidate side. Holes fall out of the even-odd rule. The strip key
   also splits a hot polygon's candidates 16 ways, which is the
   deterministic skew split; AQE handles the rest.
-- **kNN** adapts H3-style k-ring expansion to the batch model: a bounded
-  neighborhood join at a chosen resolution, a certification predicate
-  (kth-candidate distance < neighborhood safe radius), and ring doubling
-  for the (few) uncertified queries — ordinary equi-joins, exact at full
-  grid cover, with no site-table broadcast. Every point gets exact top-k.
+- **kNN** adapts H3-style k-ring expansion to the batch model: one
+  rank-and-certify round — a bounded neighborhood join at a chosen
+  resolution, one rank window that also carries the certification
+  predicate (kth-candidate distance < neighborhood safe radius) — repeated
+  with ring doubling for the (few) uncertified queries, which an anti-join
+  picks out. Ordinary equi-joins, exact at full grid cover, with no
+  site-table broadcast. Every point gets exact top-k.
 - **distance_join / bbox_overlap_join** reuse the same cell machinery for
   radius and rectangle-overlap (range) joins; the bbox join dedupes
   multi-cell matches with a report-once responsibility cell instead of a
@@ -32,6 +34,7 @@ Design:
 
 from __future__ import annotations
 
+import math
 from typing import Iterator
 
 import numpy as np
@@ -47,8 +50,6 @@ DEFAULT_RESOLUTIONS = (4, 7, 10)
 def project_cols(lon: Column, lat: Column) -> tuple[Column, Column]:
     """WGS84 -> unit Web-Mercator as native column expressions (P1,
     convert.hpp:23-29) — stays in whole-stage codegen."""
-    import math
-
     x = lon / 360.0 + 0.5
     sine = F.sin(lat * math.pi / 180.0)
     y = 0.5 - 0.25 * F.log((1.0 + sine) / (1.0 - sine)) / math.pi
@@ -321,6 +322,33 @@ def point_in_polygon_join(
 # kNN via bounded neighborhood join + certification + ring doubling
 # ---------------------------------------------------------------------------
 
+def density_res(n_sites: int) -> int:
+    """Grid resolution with about two sites per cell: ``round(log4(n/2))``,
+    at least 1. Results of the cell-neighborhood joins are exact at any
+    resolution; this only sizes the plan (candidates per cell against
+    neighborhood width)."""
+    return max(1, round(math.log(max(n_sites, 4) / 2.0, 4)))
+
+
+def _cell_neighborhood(qcell: DataFrame, r: int, n: int) -> DataFrame:
+    """Each query row of ``qcell`` (cell ``qix``, ``qiy``) once per cell
+    ``ix``, ``iy`` of its (2r+1)^2 neighborhood, clamped to the n x n grid:
+    two ``sequence`` explodes, so wide rings never build literal arrays."""
+    return qcell.withColumn(
+        "ix",
+        F.explode(F.sequence(
+            F.greatest(F.col("qix") - r, F.lit(0)),
+            F.least(F.col("qix") + r, F.lit(n - 1)),
+        )),
+    ).withColumn(
+        "iy",
+        F.explode(F.sequence(
+            F.greatest(F.col("qiy") - r, F.lit(0)),
+            F.least(F.col("qiy") + r, F.lit(n - 1)),
+        )),
+    ).drop("qix", "qiy")
+
+
 def knn_join(
     queries_df: DataFrame,
     sites_df: DataFrame,
@@ -332,24 +360,27 @@ def knn_join(
 ) -> DataFrame:
     """Exact k-nearest-sites per query (Euclidean in projected space).
 
-    Phase 1: join each query's (2*ring+1)^2 cell neighborhood at ``res``
-    against site cells; a query is CERTIFIED when it has >= k candidates and
-    its kth candidate distance < ring*cell_size (any site close enough to
-    beat the kth must then lie inside the joined neighborhood).
+    One rank-and-certify round, repeated with ring doubling: join each
+    pending query's (2r+1)^2 cell neighborhood at ``res`` against the site
+    cells, rank each query's candidates in one window, and mark the query
+    CERTIFIED in the same window pass when its kth candidate distance is
+    < r*cell_size (any site close enough to beat the kth must then lie
+    inside the joined neighborhood; a query with fewer than k candidates
+    has no kth distance and never certifies). The first round runs at
+    ``ring``; the queries that did not certify (including those with no
+    candidate at all) are the next round's pending set, at 2r, 4r, ...
+    When the ring covers the whole grid the join IS the exhaustive join
+    and every remaining query is exact by construction. O(log(n/ring))
+    rounds, all ordinary equi-joins Catalyst/AQE can shuffle or broadcast
+    by its own sizing — nothing forces the full site table through one
+    executor. Certification is density-sized, so usually the only extra
+    cost is one emptiness probe of the straggler set.
 
-    Phase 2 (the uncertified stragglers — certification is density-sized so
-    these are rare): iterative ring doubling — re-join only the pending
-    queries at ring 2r, 4r, ... (cell-clamped ``sequence`` explodes, so wide
-    rings never build giant literal arrays), accepting each query as soon as
-    it certifies at its ring; when the ring covers the whole grid the join
-    IS the exhaustive join and every remaining query is exact by
-    construction. O(log(n/ring)) rounds, all ordinary equi-joins
-    Catalyst/AQE can shuffle or broadcast by its own sizing — nothing forces
-    the full site table through one executor. When every query certifies in
-    phase 1 the only extra cost is one emptiness probe of the straggler set.
-
-    Ties break on (dist2, site_id), so results are deterministic.
+    Output columns: query id, qx, qy, site id, dist2, knn_rank. Ties break
+    on (dist2, site_id), so results are deterministic.
     """
+    from pyspark.sql.window import Window
+
     qid, qx, qy = query_cols
     sid, sx, sy = site_cols
     n = 1 << res
@@ -357,30 +388,13 @@ def knn_join(
 
     qcell = queries_df.select(
         qid, qx, qy,
-        F.least(F.greatest(F.floor(F.col(qx) * n).cast("long"), F.lit(0)), F.lit(n - 1)).alias("qix"),
-        F.least(F.greatest(F.floor(F.col(qy) * n).cast("long"), F.lit(0)), F.lit(n - 1)).alias("qiy"),
+        C.grid_index(F.col(qx), n).alias("qix"),
+        C.grid_index(F.col(qy), n).alias("qiy"),
     )
-    offs = [(dx, dy) for dx in range(-ring, ring + 1) for dy in range(-ring, ring + 1)]
-    nbr = qcell.withColumn(
-        "nbr",
-        F.explode(F.array(*[
-            F.struct(
-                (F.col("qix") + dx).alias("ix"),
-                (F.col("qiy") + dy).alias("iy"),
-            )
-            for dx, dy in offs
-        ])),
-    ).select(
-        qid, qx, qy,
-        F.col("nbr.ix").alias("ix"), F.col("nbr.iy").alias("iy"),
-    ).where(
-        (F.col("ix") >= 0) & (F.col("ix") < n) & (F.col("iy") >= 0) & (F.col("iy") < n)
-    )
-
     scell = sites_df.select(
         sid, sx, sy,
-        F.least(F.greatest(F.floor(F.col(sx) * n).cast("long"), F.lit(0)), F.lit(n - 1)).alias("ix"),
-        F.least(F.greatest(F.floor(F.col(sy) * n).cast("long"), F.lit(0)), F.lit(n - 1)).alias("iy"),
+        C.grid_index(F.col(sx), n).alias("ix"),
+        C.grid_index(F.col(sy), n).alias("iy"),
     )
 
     # plain products, not pow(x,2): pow goes through libm and is not
@@ -388,88 +402,46 @@ def knn_join(
     d2 = (F.col(qx) - F.col(sx)) * (F.col(qx) - F.col(sx)) + (
         F.col(qy) - F.col(sy)
     ) * (F.col(qy) - F.col(sy))
-    cand = (
-        nbr.join(scell, ["ix", "iy"], "inner")
-        .select(qid, qx, qy, sid, d2.alias("dist2"))
-    )
-
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy(qid).orderBy(F.col("dist2").asc(), F.col(sid).asc())
-    # materialize the ranked candidates once: cert, the certified output and
-    # the straggler set all read it — without this the neighborhood join +
-    # window would recompute for each consumer. eager=False: the checkpoint
-    # write fuses into the first consuming job (cert / the straggler probe)
-    # instead of paying a separate whole-plan checkpoint job; under AQE the
-    # upstream shuffle stages still run at construction, but the result
-    # stage (the expensive window pass over every candidate) runs once,
-    # inside the consumer.
-    ranked = (
-        cand.withColumn("knn_rank", F.row_number().over(w))
-        .where(F.col("knn_rank") <= k)
-        .localCheckpoint(eager=False)
-    )
-    safe2 = (ring * cell_size) ** 2
-    # materialized once: good and the straggler set both read cert —
-    # without this each consumer re-runs the certification aggregate over
-    # the ranked checkpoint (lazy for the same job-fusion reason; KB-sized
-    # per-query rows)
-    cert = ranked.groupBy(qid).agg(
-        F.count("*").alias("n_cand"), F.max("dist2").alias("kth_d2")
-    ).withColumn(
-        "certified", (F.col("n_cand") >= k) & (F.col("kth_d2") < safe2)
-    ).localCheckpoint(eager=False)
-    good = ranked.join(cert.where("certified").select(qid), qid, "inner")
-
-    # stragglers: uncertified queries plus queries with zero candidates
-    bad_q = qcell.join(
-        cert.where(~F.col("certified")).select(qid), qid, "inner"
-    ).unionByName(
-        qcell.join(cert.select(qid), qid, "left_anti")
+    # null (not certified) when the query has fewer than k candidates
+    kth_d2 = F.max(F.when(F.col("knn_rank") == k, F.col("dist2"))).over(
+        Window.partitionBy(qid)
     )
 
-    def neighborhood(qdf: DataFrame, r: int) -> DataFrame:
-        # clamped sequences: (2r+1)^2 neighbor cells without literal arrays
-        return qdf.withColumn(
-            "ix",
-            F.explode(F.sequence(
-                F.greatest(F.col("qix") - r, F.lit(0)),
-                F.least(F.col("qix") + r, F.lit(n - 1)),
-            )),
-        ).withColumn(
-            "iy",
-            F.explode(F.sequence(
-                F.greatest(F.col("qiy") - r, F.lit(0)),
-                F.least(F.col("qiy") + r, F.lit(n - 1)),
-            )),
-        ).select(qid, qx, qy, "ix", "iy")
-
-    parts = [good]
-    pending = bad_q
-    r = ring
-    # probe each straggler set before materializing it: the density-sized
-    # grid usually certifies every query, and then nothing is checkpointed
-    while not pending.isEmpty():
-        pending = pending.localCheckpoint(eager=False)
-        r *= 2
-        ranked_r = (
-            neighborhood(pending, r)
+    def ranked_round(pending: DataFrame, r: int) -> DataFrame:
+        # materialized once: the certified output and the straggler set
+        # both read it — without this the neighborhood join + window would
+        # recompute for each consumer. eager=False: the checkpoint write
+        # fuses into the first consuming job (the straggler probe) instead
+        # of paying a separate whole-plan checkpoint job.
+        return (
+            _cell_neighborhood(pending, r, n)
             .join(scell, ["ix", "iy"], "inner")
             .select(qid, qx, qy, sid, d2.alias("dist2"))
             .withColumn("knn_rank", F.row_number().over(w))
             .where(F.col("knn_rank") <= k)
+            .withColumn("certified", kth_d2 < F.lit((r * cell_size) ** 2))
             .localCheckpoint(eager=False)
         )
+
+    parts = []
+    pending, r = qcell, ring
+    while True:
+        ranked = ranked_round(pending, r)
         if r >= n:  # ring covers the grid: exhaustive, exact by construction
-            parts.append(ranked_r)
+            parts.append(ranked.drop("certified"))
             break
-        cert_r = ranked_r.groupBy(qid).agg(
-            F.count("*").alias("n_cand"), F.max("dist2").alias("kth_d2")
-        ).where(
-            (F.col("n_cand") >= k) & (F.col("kth_d2") < F.lit((r * cell_size) ** 2))
-        ).select(qid)
-        parts.append(ranked_r.join(cert_r, qid, "inner"))
-        pending = pending.join(cert_r, qid, "left_anti")
+        good = ranked.where("certified").drop("certified")
+        parts.append(good)
+        # stragglers: uncertified queries and queries with no candidate.
+        # Probe each straggler set before materializing it: the
+        # density-sized grid usually certifies every query, and then
+        # nothing more is checkpointed.
+        pending = pending.join(good.select(qid), qid, "left_anti")
+        if pending.isEmpty():
+            break
+        pending = pending.localCheckpoint(eager=False)
+        r *= 2
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -496,53 +468,37 @@ def distance_join(
     one cell ~ the radius (ring 1-2), trading neighborhood width against
     cell population like the kNN join does.
     """
-    import math
-
     qid, qx, qy = query_cols
     sid, sx, sy = site_cols
     if res is None:
         # radius-based anchor: one cell ~ the radius (ring 1-2)
         r_res = max(1, min(12, int(math.floor(math.log2(1.0 / radius)))))
-        # density adjustment (mirrors kNN's sizing): aim for ~2 sites/cell
-        # so hot grids refine (fewer candidates per cell, slightly wider
-        # ring) and sparse grids coarsen (fewer explode rows). Bounded to
-        # r_res +/- 2 so ring = ceil(radius * n) never exceeds ~4 cells —
-        # results are EXACT at any res; this only shapes the plan.
-        n_sites = sites_df.count()
-        d_res = max(1, round(math.log(max(n_sites, 4) / 2.0, 4)))
+        # density adjustment (the kNN sizing): hot grids refine (fewer
+        # candidates per cell, slightly wider ring) and sparse grids
+        # coarsen (fewer explode rows). Bounded to r_res +/- 2 so ring =
+        # ceil(radius * n) never exceeds ~4 cells — results are EXACT at
+        # any res; this only shapes the plan.
+        d_res = density_res(sites_df.count())
         res = max(1, min(12, max(r_res - 2, min(r_res + 2, d_res))))
     n = 1 << res
     ring = max(1, int(math.ceil(radius * n)))
 
     qcell = queries_df.select(
         qid, qx, qy,
-        F.least(F.greatest(F.floor(F.col(qx) * n).cast("long"), F.lit(0)), F.lit(n - 1)).alias("qix"),
-        F.least(F.greatest(F.floor(F.col(qy) * n).cast("long"), F.lit(0)), F.lit(n - 1)).alias("qiy"),
+        C.grid_index(F.col(qx), n).alias("qix"),
+        C.grid_index(F.col(qy), n).alias("qiy"),
     )
-    nbr = qcell.withColumn(
-        "ix",
-        F.explode(F.sequence(
-            F.greatest(F.col("qix") - ring, F.lit(0)),
-            F.least(F.col("qix") + ring, F.lit(n - 1)),
-        )),
-    ).withColumn(
-        "iy",
-        F.explode(F.sequence(
-            F.greatest(F.col("qiy") - ring, F.lit(0)),
-            F.least(F.col("qiy") + ring, F.lit(n - 1)),
-        )),
-    ).select(qid, qx, qy, "ix", "iy")
     scell = sites_df.select(
         sid, sx, sy,
-        F.least(F.greatest(F.floor(F.col(sx) * n).cast("long"), F.lit(0)), F.lit(n - 1)).alias("ix"),
-        F.least(F.greatest(F.floor(F.col(sy) * n).cast("long"), F.lit(0)), F.lit(n - 1)).alias("iy"),
+        C.grid_index(F.col(sx), n).alias("ix"),
+        C.grid_index(F.col(sy), n).alias("iy"),
     )
     # x*x products, not pow: bit parity with the DuckDB oracle
     d2 = (F.col(qx) - F.col(sx)) * (F.col(qx) - F.col(sx)) + (
         F.col(qy) - F.col(sy)
     ) * (F.col(qy) - F.col(sy))
     return (
-        nbr.join(scell, ["ix", "iy"], "inner")
+        _cell_neighborhood(qcell, ring, n).join(scell, ["ix", "iy"], "inner")
         .select(qid, qx, qy, sid, d2.alias("dist2"))
         .where(F.col("dist2") <= float(radius) * float(radius))
         .select(qid, sid, "dist2")
@@ -570,30 +526,23 @@ def bbox_overlap_join(
     bid, bx1, by1, bx2, by2 = b_cols
     n = 1 << res
 
-    def cells(df: DataFrame, idc: str, x1: str, y1: str, x2: str, y2: str) -> DataFrame:
-        def c(col):
-            return F.least(F.greatest(F.floor(F.col(col) * n).cast("long"), F.lit(0)), F.lit(n - 1))
-
+    def cells(df: DataFrame, x1: str, y1: str, x2: str, y2: str) -> DataFrame:
         return df.withColumn(
-            "ix", F.explode(F.sequence(c(x1), c(x2)))
+            "ix", F.explode(F.sequence(C.grid_index(F.col(x1), n), C.grid_index(F.col(x2), n)))
         ).withColumn(
-            "iy", F.explode(F.sequence(c(y1), c(y2)))
+            "iy", F.explode(F.sequence(C.grid_index(F.col(y1), n), C.grid_index(F.col(y2), n)))
         )
 
-    ac = cells(a_df.select(aid, ax1, ay1, ax2, ay2), aid, ax1, ay1, ax2, ay2)
-    bc = cells(b_df.select(bid, bx1, by1, bx2, by2), bid, bx1, by1, bx2, by2)
+    ac = cells(a_df.select(aid, ax1, ay1, ax2, ay2), ax1, ay1, ax2, ay2)
+    bc = cells(b_df.select(bid, bx1, by1, bx2, by2), bx1, by1, bx2, by2)
     joined = ac.join(bc, ["ix", "iy"], "inner")
     overlap = (
         (F.col(ax1) <= F.col(bx2)) & (F.col(bx1) <= F.col(ax2))
         & (F.col(ay1) <= F.col(by2)) & (F.col(by1) <= F.col(ay2))
     )
-
-    def clamp_cell(expr):
-        return F.least(F.greatest(F.floor(expr * n).cast("long"), F.lit(0)), F.lit(n - 1))
-
     responsible = (
-        (F.col("ix") == clamp_cell(F.greatest(F.col(ax1), F.col(bx1))))
-        & (F.col("iy") == clamp_cell(F.greatest(F.col(ay1), F.col(by1))))
+        (F.col("ix") == C.grid_index(F.greatest(F.col(ax1), F.col(bx1)), n))
+        & (F.col("iy") == C.grid_index(F.greatest(F.col(ay1), F.col(by1)), n))
     )
     return joined.where(overlap & responsible).select(aid, bid)
 

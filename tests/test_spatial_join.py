@@ -145,7 +145,11 @@ def test_point_in_polygon_vs_brute_force(spark, us_polys, broadcast, broadcast_e
     assert len(want_pairs) > 200  # the sample really lands inside states
 
 
-def test_knn_vs_exhaustive(spark):
+@pytest.mark.parametrize("ring,rounds", [(1, 4), (2, 3), (8, 1), (1 << 5, 1)])
+def test_knn_vs_exhaustive(spark, ring, rounds):
+    """At res 5: rings 1 and 2 leave stragglers for ring doubling, ring 8
+    certifies every query in the first round, ring 32 covers the grid at
+    once. Every query's (rank, site, dist2) matches the oracle exactly."""
     rng = np.random.RandomState(1)
     queries = rng.uniform(0.2, 0.8, size=(300, 2))
     sites = rng.uniform(0.2, 0.8, size=(150, 2))
@@ -157,17 +161,23 @@ def test_knn_vs_exhaustive(spark):
         [(f"s{i:04d}", float(x), float(y)) for i, (x, y) in enumerate(sites)],
         "site_id string, sx double, sy double",
     )
-    got = knn_join(qdf, sdf, k=5, res=5, ring=1)
-    rows = got.collect()
+    got = knn_join(qdf, sdf, k=5, res=5, ring=ring)
+    assert got.columns == ["query_id", "qx", "qy", "site_id", "dist2", "knn_rank"]
+    # one union child per round
+    plan = got._jdf.queryExecution().optimizedPlan()
+    assert (plan.children().size() if plan.nodeName() == "Union" else 1) == rounds
     by_q = {}
-    for r in rows:
+    for r in got.collect():
         by_q.setdefault(r["query_id"], []).append((r["knn_rank"], r["site_id"], r["dist2"]))
-    # oracle
-    d2 = ((queries[:, None, :] - sites[None, :, :]) ** 2).sum(axis=2)
+    # oracle: the same x*x products in the same order as the engine
+    dx = queries[:, None, 0] - sites[None, :, 0]
+    dy = queries[:, None, 1] - sites[None, :, 1]
+    d2 = dx * dx + dy * dy
+    assert len(by_q) == len(queries)
     for i in range(len(queries)):
         order = sorted(range(len(sites)), key=lambda j: (d2[i, j], f"s{j:04d}"))[:5]
-        want = [f"s{j:04d}" for j in order]
-        gotl = [s for _, s, _ in sorted(by_q[f"q{i:04d}"])]
+        want = [(rank, f"s{j:04d}", float(d2[i, j])) for rank, j in enumerate(order, 1)]
+        gotl = sorted(by_q[f"q{i:04d}"])
         assert gotl == want, f"query {i}: {gotl} != {want}"
 
 
