@@ -136,39 +136,3 @@ def quadkey(x: Column, y: Column, res: int) -> Column:
         for r in range(res - 1, -1, -1)
     ]
     return F.concat(*digits).alias(f"quadkey_r{res}")
-
-
-def bbox_cell_cover_np(
-    minx: float, miny: float, maxx: float, maxy: float, res: int
-) -> np.ndarray:
-    """All cells at ``res`` intersecting the bbox (conservative cover)."""
-    n = 1 << res
-    x0 = min(max(int(np.floor(minx * n)), 0), n - 1)
-    x1 = min(max(int(np.floor(maxx * n)), 0), n - 1)
-    y0 = min(max(int(np.floor(miny * n)), 0), n - 1)
-    y1 = min(max(int(np.floor(maxy * n)), 0), n - 1)
-    xs, ys = np.meshgrid(np.arange(x0, x1 + 1), np.arange(y0, y1 + 1))
-    xs = xs.ravel().astype(np.int64)
-    ys = ys.ravel().astype(np.int64)
-
-    def spread(v):
-        for s, m in _SPREAD:
-            v = (v | (v << s)) & m
-        return v
-
-    return spread(xs) | (spread(ys) << 1)
-
-
-def pick_cover_res(
-    minx: float, miny: float, maxx: float, maxy: float,
-    resolutions: tuple[int, ...], max_cells: int = 16,
-) -> int:
-    """Adaptive multi-resolution assignment: the finest resolution whose
-    bbox cover stays within ``max_cells`` (coarsest as fallback)."""
-    for r in sorted(resolutions, reverse=True):
-        n = 1 << r
-        cx = int(np.floor(maxx * n)) - int(np.floor(minx * n)) + 1
-        cy = int(np.floor(maxy * n)) - int(np.floor(miny * n)) + 1
-        if cx * cy <= max_cells:
-            return r
-    return min(resolutions)

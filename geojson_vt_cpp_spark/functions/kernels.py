@@ -753,7 +753,13 @@ def transform_tile(
         # IEEE values (same elementwise ops, exact int->double offsets),
         # ~half the ufunc dispatches on the typical small part
         v = (kept[:, :2] * z2 - txy) * extent
-        qq = np.trunc(v + np.copysign(0.5, v)).astype(np.int16)
+        t = np.trunc(v + np.copysign(0.5, v))
+        # the scalar path's (int16)(int32)double, stated explicitly (a
+        # float -> int16 cast outside int16 range is undefined in numpy):
+        # the low 16 bits inside int32 range, else (non-finite included)
+        # 0. The int32 minimum wraps to 0 as well, so |t| bounds it.
+        t = np.where(np.abs(t) <= 2147483647.0, t, 0.0)
+        qq = t.astype(np.int64).astype(np.int16)
         return qq[:, 0].tolist(), qq[:, 1].tolist()
 
     def q_part(part: np.ndarray, filtered: bool) -> tuple[list, list]:

@@ -17,7 +17,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from geojson_vt_cpp_spark.functions import kernels as K
 from geojson_vt_cpp_spark.operators import codec
@@ -51,13 +50,32 @@ def max_stage_parts(spark) -> int:
     return 2 * spark.sparkContext.defaultParallelism
 
 
-def fit_parts(df: DataFrame, n: int) -> tuple[DataFrame, bool]:
+def fit_parts(df: DataFrame, n: int, parts_at_least: int = 0) -> tuple[DataFrame, bool]:
     """``df`` on ``n`` partitions, and whether that took a shuffle: coalesce
     to shrink (narrow), round-robin repartition to grow — coalesce alone
-    cannot fan a few-partition input out."""
-    if n > df.rdd.getNumPartitions():
+    cannot fan a few-partition input out.
+
+    ``parts_at_least`` is a lower bound on ``df``'s partition count that
+    the caller knows without planning. At or under it, ``df`` coalesces
+    without a probe: ``df.rdd.getNumPartitions()`` plans and builds the
+    whole Dataset through ``javaToPython`` only to read a count, and the
+    caller's checkpoint plans it again. The level loop passes its previous
+    level's count, because a split output always has at least its parent
+    level's partitions: its native side is a narrow transform of that
+    level, and a union never has fewer partitions than a child. (It may
+    have fewer than the sum of its children's, so that sum is no bound.)
+    """
+    if n > parts_at_least and n > df.rdd.getNumPartitions():
         return df.repartition(n), True
     return df.coalesce(n), False
+
+
+def sql_double(v: float) -> str:
+    """``v`` as a Spark SQL DOUBLE literal. Spark parses a bare decimal
+    literal as DECIMAL; the quoted cast parses the shortest round-trip
+    ``repr`` back to the same float, and constant folding leaves the
+    literal a plain double in the optimized plan."""
+    return f"CAST('{float(v)!r}' AS DOUBLE)"
 
 
 def iter_rows(pdf: pd.DataFrame) -> Iterator[dict]:
@@ -106,10 +124,7 @@ def clip_fixed_window(features_df, axis: int, k1: float, k2: float,
     dateline; the side windows trivially reject it).
     """
     schema = features_df.schema
-    minc = F.col("minx") if axis == 0 else F.col("miny")
-    maxc = F.col("maxx") if axis == 0 else F.col("maxy")
-    acc = (minc >= F.lit(k1)) & (maxc < F.lit(k2))
-    rej = (maxc < F.lit(k1)) | (minc >= F.lit(k2))
+    acc, rej = _window_routing(axis, k1, k2)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -122,7 +137,7 @@ def clip_fixed_window(features_df, axis: int, k1: float, k2: float,
                 rows.extend(_emit_clipped(row, res, line_metrics))
             yield codec.rows_to_pdf(rows, schema)
 
-    mid_in = features_df.where(~acc & ~rej)
+    mid_in = features_df.where(f"NOT {acc} AND NOT {rej}")
     if kernel_parts is not None:
         # the mid set is usually tiny (boundary crossers): a full-width
         # Python stage pays its per-task cost on every upstream partition
@@ -131,42 +146,62 @@ def clip_fixed_window(features_df, axis: int, k1: float, k2: float,
     return features_df.where(acc).unionByName(mid)
 
 
-def _split_routing(p: float):
-    """(native, x_acc, y_acc) routing predicates for the 4-way split of a
-    row's tile (z/tx/ty columns) with buffer margin ``p``: ``native`` is
-    true when every child window trivially accepts or rejects the row's
-    bbox — the exact IEEE operation sequence of the kernel's Python floats
-    (see split_children docstring)."""
-    z2 = F.expr("shiftleft(1L, z)").cast("double")
-    xw = [
-        ((F.col("tx") - F.lit(p)) / z2, (F.col("tx") + F.lit(0.5) + F.lit(p)) / z2),
-        ((F.col("tx") + F.lit(0.5) - F.lit(p)) / z2, (F.col("tx") + F.lit(1) + F.lit(p)) / z2),
+def _acc_sql(lo: str, hi: str, k1: str, k2: str) -> str:
+    """Trivial accept of the bbox (``lo``, ``hi``) by the window [k1, k2),
+    as ``kernels.clip_feature`` tests it."""
+    return f"({lo} >= {k1} AND {hi} < {k2})"
+
+
+def _rej_sql(lo: str, hi: str, k1: str, k2: str) -> str:
+    """Trivial reject, as ``kernels.clip_feature`` tests it."""
+    return f"({hi} < {k1} OR {lo} >= {k2})"
+
+
+def _child_windows(c: str, p: float) -> list[tuple[str, str]]:
+    """The [k1, k2) bounds of the two child windows along tile column
+    ``c`` (tx or ty) — split_children's kernel floats as SQL: a BIGINT
+    tile coordinate converted to double, ``+ 1`` kept a BIGINT + INT add,
+    and the same association."""
+    ps, half = sql_double(p), sql_double(0.5)
+    z2 = "CAST(shiftleft(1L, z) AS DOUBLE)"
+    return [
+        (f"(({c} - {ps}) / {z2})", f"((({c} + {half}) + {ps}) / {z2})"),
+        (f"((({c} + {half}) - {ps}) / {z2})", f"((({c} + 1) + {ps}) / {z2})"),
     ]
-    yw = [
-        ((F.col("ty") - F.lit(p)) / z2, (F.col("ty") + F.lit(0.5) + F.lit(p)) / z2),
-        ((F.col("ty") + F.lit(0.5) - F.lit(p)) / z2, (F.col("ty") + F.lit(1) + F.lit(p)) / z2),
-    ]
-
-    def acc(minc, maxc, w):
-        return (F.col(minc) >= w[0]) & (F.col(maxc) < w[1])
-
-    def rej(minc, maxc, w):
-        return (F.col(maxc) < w[0]) | (F.col(minc) >= w[1])
-
-    x_acc = [acc("minx", "maxx", w) for w in xw]
-    x_trv = [x_acc[i] | rej("minx", "maxx", xw[i]) for i in (0, 1)]
-    y_acc = [acc("miny", "maxy", w) for w in yw]
-    y_trv = [y_acc[i] | rej("miny", "maxy", yw[i]) for i in (0, 1)]
-    return x_trv[0] & x_trv[1] & y_trv[0] & y_trv[1], x_acc, y_acc
 
 
-def split_mid_points_col(buffer: int, extent: int):
-    """Aggregation column summing the vertices of the rows a subsequent
-    :func:`split_children` would send through the Python kernel (not
-    natively routable) — lets callers size the kernel stage with
+def _window_routing(axis: int, k1: float, k2: float) -> tuple[str, str]:
+    """(accept, reject) predicates, as SQL text, of the fixed window
+    [k1, k2) on ``axis`` (see clip_fixed_window)."""
+    lo, hi = ("minx", "maxx") if axis == 0 else ("miny", "maxy")
+    k1s, k2s = sql_double(k1), sql_double(k2)
+    return _acc_sql(lo, hi, k1s, k2s), _rej_sql(lo, hi, k1s, k2s)
+
+
+def _split_routing(p: float) -> tuple[str, list[str], list[str]]:
+    """(native, x_acc, y_acc) routing predicates, as SQL text, for the
+    4-way split of a row's tile (z/tx/ty columns) with buffer margin
+    ``p``: ``native`` is true when every child window trivially accepts or
+    rejects the row's bbox — the exact IEEE operation sequence of the
+    kernel's Python floats (see split_children docstring)."""
+    xw, yw = _child_windows("tx", p), _child_windows("ty", p)
+
+    def trivial(lo: str, hi: str, w: tuple[str, str]) -> str:
+        return f"({_acc_sql(lo, hi, *w)} OR {_rej_sql(lo, hi, *w)})"
+
+    trv = [trivial("minx", "maxx", w) for w in xw] + [trivial("miny", "maxy", w) for w in yw]
+    native = f"((({trv[0]} AND {trv[1]}) AND {trv[2]}) AND {trv[3]})"
+    return (native, [_acc_sql("minx", "maxx", *w) for w in xw],
+            [_acc_sql("miny", "maxy", *w) for w in yw])
+
+
+def split_mid_points_sql(buffer: int, extent: int) -> str:
+    """Aggregate, as SQL text, summing the vertices of the rows a
+    subsequent :func:`split_children` would send through the Python kernel
+    (not natively routable) — lets callers size the kernel stage with
     :func:`stage_parts` from an aggregate they already run."""
     native, _x, _y = _split_routing(0.5 * buffer / extent)
-    return F.sum(F.when(~native, F.col("num_points")).otherwise(0))
+    return f"sum(CASE WHEN NOT {native} THEN num_points ELSE 0 END)"
 
 
 def split_children(assigned_df, buffer: int, extent: int, line_metrics: bool,
@@ -193,7 +228,7 @@ def split_children(assigned_df, buffer: int, extent: int, line_metrics: bool,
     boundary (guide §4: fewer rows and bytes per crossing).
 
     ``kernel_parts`` (the pyramid build passes :func:`stage_parts` of the
-    :func:`split_mid_points_col` sum) reshuffles the kernel's rows onto
+    :func:`split_mid_points_sql` sum) reshuffles the kernel's rows onto
     that many partitions; None keeps the input's partitioning, which the
     caller already sized.
     """
@@ -235,30 +270,26 @@ def split_children(assigned_df, buffer: int, extent: int, line_metrics: bool,
                                 rows.append(out)
             yield codec.rows_to_pdf(rows, schema)
 
-    # native trivial routing (see docstring): window bounds as column
-    # expressions, same IEEE op order as the kernel's Python floats
+    # native trivial routing (see docstring): window bounds as SQL text,
+    # same IEEE op order as the kernel's Python floats
     native, x_acc, y_acc = _split_routing(p)
-
-    quads = F.array(*[
-        F.struct(
-            F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-            (x_acc[dx] & y_acc[dy]).alias("keep"),
-        )
+    quads = ", ".join(
+        f"struct({dx} AS dx, {dy} AS dy, ({x_acc[dx]} AND {y_acc[dy]}) AS keep)"
         for dx in (0, 1)
         for dy in (0, 1)
-    ])
-    feature_cols = [f.name for f in schema.fields if f.name not in ("z", "tx", "ty")]
+    )
+    feature_cols = [f"`{f.name}`" for f in schema.fields if f.name not in ("z", "tx", "ty")]
     native_out = (
         assigned_df.where(native)
-        .withColumn("q", F.explode(F.filter(quads, lambda s: s["keep"])))
-        .select(
-            (F.col("z") + F.lit(1)).cast("int").alias("z"),
-            (F.col("tx") * 2 + F.col("q.dx")).cast("long").alias("tx"),
-            (F.col("ty") * 2 + F.col("q.dy")).cast("long").alias("ty"),
+        .selectExpr("*", f"explode(filter(array({quads}), s -> s.keep)) AS q")
+        .selectExpr(
+            "CAST(z + 1 AS INT) AS z",
+            "CAST(tx * 2 + q.dx AS BIGINT) AS tx",
+            "CAST(ty * 2 + q.dy AS BIGINT) AS ty",
             *feature_cols,
         )
     )
-    kernel_in = assigned_df.where(~native)
+    kernel_in = assigned_df.where(f"NOT {native}")
     if kernel_parts is not None:
         # boundary-crossing rows are the minority AND spatially clustered:
         # a round-robin repartition of just this small set both sizes the

@@ -53,16 +53,6 @@ FEATURE_FIELDS = [
 
 FEATURES_SCHEMA = T.StructType(FEATURE_FIELDS)
 
-# features assigned to a pyramid tile during the BFS split
-ASSIGNED_SCHEMA = T.StructType(
-    [
-        T.StructField("z", T.IntegerType()),
-        T.StructField("tx", T.LongType()),
-        T.StructField("ty", T.LongType()),
-    ]
-    + FEATURE_FIELDS
-)
-
 # quantized tile output (reference Tile / tile-JSON shape, int16 coords)
 TILE_FEATURES_SCHEMA = T.StructType(
     [

@@ -62,10 +62,22 @@ from geojson_vt_cpp_spark.functions import kernels as K
 from geojson_vt_cpp_spark.operators import codec
 from geojson_vt_cpp_spark.operators.clip_stage import (
     fit_parts, iter_rows, max_stage_parts, split_children,
-    split_mid_points_col, stage_parts,
+    split_mid_points_sql, stage_parts,
 )
 from geojson_vt_cpp_spark.operators.convert import extract_features
 from geojson_vt_cpp_spark.operators.wrap import wrap_with_points
+
+# Per-call expressions of the level loop and the drill rounds are SQL text:
+# a Column-builder call costs a Py4J round trip per node, and these are
+# rebuilt on every level, append level and drill round.
+# (z, tx, ty) packed into one BIGINT: z < 64, tx, ty < 2^29
+_PACKED_KEY = "shiftleft(CAST(z AS BIGINT), 58) + shiftleft(tx, 29) + ty"
+# the per-tile stats of a level or drill round
+_TILE_STATS = ("sum(num_points) AS npts", "count(*) AS nrows")
+
+
+def _tile_eq(z: int, x: int, y: int) -> str:
+    return f"z = {z} AND tx = {x} AND ty = {y}"
 
 
 @dataclass
@@ -387,9 +399,6 @@ class TilePyramid:
         # registry vertices ("points") and the partitions that sized ("parts")
         self.drill_log: list[dict] = []
         self._drilled = False  # append() is defined on the eager index only
-        # the level aggregate's mid-row vertex sum, built once for the build
-        # and every append: its routing expressions cost ~1k Py4J calls
-        self._mid_col = split_mid_points_col(self.o.buffer, self.o.extent).alias("nmid")
         self._io = None
         self._fp = ""
         if workdir is not None:
@@ -496,13 +505,14 @@ class TilePyramid:
         its old rows pulled back from the level it was registered in.
         """
         o = self.o
-        level = feats.select(
-            F.lit(0).alias("z"),
-            F.lit(0).cast("long").alias("tx"),
-            F.lit(0).cast("long").alias("ty"),
-            "*",
+        level = feats.selectExpr(
+            "0 AS z", "CAST(0 AS BIGINT) AS tx", "CAST(0 AS BIGINT) AS ty", "*"
         )
+        stats = [F.expr(e) for e in _TILE_STATS] + [
+            F.expr(split_mid_points_sql(o.buffer, o.extent) + " AS nmid")
+        ]
         z = 0
+        parts = 0  # partitions the current level is known to have at least
         while True:
             if staged:
                 # manifest-gated level checkpoint: a killed build resumes
@@ -524,11 +534,12 @@ class TilePyramid:
                 # an uncounted (pre-wrapped) z0: __init__ coalesced it to
                 # the rule's cap and checkpointed it; its stats aggregate
                 # sizes every level after it
-                n = level.rdd.getNumPartitions()
+                n = parts = level.rdd.getNumPartitions()
             else:
                 # coalesce when the level shrinks, which is the usual case
                 # (a split output has at least its parent level's
-                # partitions): per-level Python work (only the rows native
+                # partitions, so the shrink needs no partition-count probe,
+                # see fit_parts): per-level Python work (only the rows native
                 # routing cannot clip) is too small to justify a
                 # full-payload shuffle per zoom. A round-robin repartition
                 # only where the level holds fewer partitions than its
@@ -539,21 +550,14 @@ class TilePyramid:
                 # blocks); the staged branch above is the
                 # reliable-checkpoint cluster path.
                 n = stage_parts(self.spark, points)
-                level, grew = fit_parts(level, n)
+                level, grew = fit_parts(level, n, parts)
+                parts = n
                 if grew or not materialized:
                     level = level.localCheckpoint(eager=False)
             materialized = False
             old = self._level_assigned.get(z)  # rows registered before
             self._level_assigned[z] = level if old is None else old.unionByName(level)
-            pdf = (
-                level.groupBy("tx", "ty")
-                .agg(
-                    F.sum("num_points").alias("npts"),
-                    F.count("*").alias("nrows"),
-                    self._mid_col,
-                )
-                .toPandas()
-            )
+            pdf = level.groupBy("tx", "ty").agg(*stats).toPandas()
             sxs = pdf["tx"].to_numpy().astype(np.int64)
             sys_ = pdf["ty"].to_numpy().astype(np.int64)
             snpts = pdf["npts"].to_numpy().astype(np.int64)
@@ -793,7 +797,7 @@ class TilePyramid:
             cstats = {
                 (r["z"], r["tx"], r["ty"]): (r["npts"], r["nrows"])
                 for r in children.groupBy("z", "tx", "ty")
-                .agg(F.sum("num_points").alias("npts"), F.count("*").alias("nrows"))
+                .agg(*[F.expr(e) for e in _TILE_STATS])
                 .collect()
             }
             nxt: dict[tuple[int, int, int], set] = {}
@@ -850,31 +854,25 @@ class TilePyramid:
         the level loop's splits and old-leaf pulls and of the drill rounds,
         whose children union mixes levels, so tx/ty alone would collide.
 
-        Small key sets compile to an InSet probe; large ones become a
-        broadcast left-semi join against an Arrow-built key table —
-        ``Column.isin`` marshals every literal through Py4J one element at a
-        time (measured ~1 ms/key: a 151k-key traversal filter cost 150 s of
-        driver time before this), while one Arrow batch ships in
-        milliseconds and BroadcastHashJoin probes the same way at any
-        executor count.
+        Small key sets compile to an InSet probe over packed keys, written
+        as one SQL ``IN`` list; large ones become a broadcast left-semi
+        join against an Arrow-built key table, which ships in milliseconds
+        and probes the same way at any executor count. The 2048-key
+        threshold dates from an ``IN`` list built with ``Column.isin``,
+        which marshals every literal through Py4J (measured ~1 ms/key: a
+        151k-key traversal filter cost 150 s of driver time); a SQL-text
+        list of that size has not been measured against the join.
         """
         if len(keys) == 1:
-            z, x, y = keys[0]
-            return df.where(
-                (F.col("z") == z) & (F.col("tx") == x) & (F.col("ty") == y)
-            )
+            return df.where(_tile_eq(*keys[0]))
         if len(keys) > 2048:
             kpdf = pd.DataFrame(keys, columns=["z", "tx", "ty"]).astype(
                 {"z": "int32", "tx": "int64", "ty": "int64"}
             )
             kdf = df.sparkSession.createDataFrame(kpdf)
             return df.join(F.broadcast(kdf), ["z", "tx", "ty"], "leftsemi")
-        packed = (
-            F.shiftleft(F.col("z").cast("long"), 58)
-            + F.shiftleft(F.col("tx"), 29)
-            + F.col("ty")
-        )
-        return df.where(packed.isin([(z << 58) + (x << 29) + y for z, x, y in keys]))
+        packed = ", ".join(str((z << 58) + (x << 29) + y) for z, x, y in keys)
+        return df.where(f"{_PACKED_KEY} IN ({packed})")
 
     # --------------------------------------------------------------- output
 
@@ -983,15 +981,10 @@ class TilePyramid:
 
         import pyarrow.parquet as _pq
 
-        pk = (
-            F.shiftleft(F.col("z").cast("long"), 58)
-            + F.shiftleft(F.col("tx"), 29)
-            + F.col("ty")
-        ).alias("pk")
         nfiles = min(max_stage_parts(self.spark), self.meta.total_rows() // 4096 + 1)
         (
             self.tile_features()
-            .select(pk, "*")
+            .selectExpr(f"{_PACKED_KEY} AS pk", "*")
             .repartitionByRange(nfiles, "pk")
             .sortWithinPartitions("pk", *codec.SORT_KEYS)
             .write.mode("overwrite")
@@ -1077,7 +1070,7 @@ class TilePyramid:
             m = self.meta[key]
             rows = (
                 self.tile_features()
-                .where((F.col("z") == z) & (F.col("tx") == x) & (F.col("ty") == y))
+                .where(_tile_eq(z, x, y))
                 .orderBy(*codec.SORT_KEYS)
                 .collect()
             )

@@ -47,16 +47,6 @@ from geojson_vt_cpp_spark.functions import cells as C
 DEFAULT_RESOLUTIONS = (4, 7, 10)
 
 
-def project_cols(lon: Column, lat: Column) -> tuple[Column, Column]:
-    """WGS84 -> unit Web-Mercator as native column expressions (P1,
-    convert.hpp:23-29) — stays in whole-stage codegen."""
-    x = lon / 360.0 + 0.5
-    sine = F.sin(lat * math.pi / 180.0)
-    y = 0.5 - 0.25 * F.log((1.0 + sine) / (1.0 - sine)) / math.pi
-    y = F.least(F.greatest(y, F.lit(0.0)), F.lit(1.0))
-    return x, y
-
-
 # ---------------------------------------------------------------------------
 # polygon covering cells (native column expressions)
 # ---------------------------------------------------------------------------

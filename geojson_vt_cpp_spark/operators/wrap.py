@@ -6,7 +6,9 @@ rewrites, mirroring the reference's early return at ``wrap.hpp:25-26``);
 otherwise three fixed-window clip passes produce left/center/right copies,
 the side copies shifted by +-1 world width with JVM-native array transforms
 (no Python for the shift). Output order is carried by ``copy_tag``
-(left=0, center=1, right=2; ``wrap.hpp:31-40``).
+(left=0, center=1, right=2; ``wrap.hpp:31-40``). The expressions are SQL
+text, so each crosses Py4J once rather than once per ``Column``-builder
+node.
 """
 
 from __future__ import annotations
@@ -14,18 +16,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geojson_vt_cpp_spark.operators.clip_stage import clip_fixed_window, stage_parts
+from geojson_vt_cpp_spark.operators.clip_stage import (
+    clip_fixed_window, sql_double, stage_parts,
+)
 
 
 def _shift(df: DataFrame, offset: float, copy_tag: int) -> DataFrame:
-    """shiftCoords (wrap.hpp:10-17) — pure column expressions."""
-    off = F.lit(float(offset))
-    return (
-        df.withColumn("xs", F.transform("xs", lambda v: v + off))
-        .withColumn("minx", F.col("minx") + off)
-        .withColumn("maxx", F.col("maxx") + off)
-        .withColumn("copy_tag", F.lit(copy_tag))
-    )
+    """shiftCoords (wrap.hpp:10-17) — pure SQL expressions."""
+    off = sql_double(offset)
+    return df.withColumns({
+        "xs": F.expr(f"transform(xs, v -> v + {off})"),
+        "minx": F.expr(f"minx + {off}"),
+        "maxx": F.expr(f"maxx + {off}"),
+        "copy_tag": F.expr(str(copy_tag)),
+    })
 
 
 def wrap_features(feats: DataFrame, buffer: float, line_metrics: bool,
@@ -66,20 +70,19 @@ def wrap_with_points(feats: DataFrame, buffer: float,
 def _wrap(feats: DataFrame, buffer: float, line_metrics: bool,
           sized: bool) -> tuple[DataFrame, int]:
     spark = feats.sparkSession
-    npts = F.col("num_points")
-    left = (F.col("maxx") >= -1 - buffer) & (F.col("minx") < buffer)
-    right = (F.col("maxx") >= 1 - buffer) & (F.col("minx") < 2 + buffer)
+    left = f"(maxx >= {sql_double(-1 - buffer)} AND minx < {sql_double(buffer)})"
+    right = f"(maxx >= {sql_double(1 - buffer)} AND minx < {sql_double(2 + buffer)})"
     # rows the CENTER window cannot trivially accept (its Python-kernel
     # upper bound)
-    center_mid = ~((F.col("minx") >= -buffer) & (F.col("maxx") < 1 + buffer))
-    agg = feats.agg(
-        F.sum(left.cast("int")).alias("n_left"),
-        F.sum(right.cast("int")).alias("n_right"),
-        F.sum((F.col("minx") > F.col("maxx")).cast("int")).alias("n_empty"),
-        F.sum(npts).alias("p_all"),
-        F.sum(F.when(left, npts).otherwise(0)).alias("p_left"),
-        F.sum(F.when(right, npts).otherwise(0)).alias("p_right"),
-        F.sum(F.when(center_mid, npts).otherwise(0)).alias("p_center_mid"),
+    center_mid = f"NOT (minx >= {sql_double(-buffer)} AND maxx < {sql_double(1 + buffer)})"
+    agg = feats.selectExpr(
+        f"sum(CAST({left} AS INT)) AS n_left",
+        f"sum(CAST({right} AS INT)) AS n_right",
+        "sum(CAST(minx > maxx AS INT)) AS n_empty",
+        "sum(num_points) AS p_all",
+        f"sum(CASE WHEN {left} THEN num_points ELSE 0 END) AS p_left",
+        f"sum(CASE WHEN {right} THEN num_points ELSE 0 END) AS p_right",
+        f"sum(CASE WHEN {center_mid} THEN num_points ELSE 0 END) AS p_center_mid",
     ).first()
     p_all = int(agg["p_all"] or 0)
     n_left = (agg["n_left"] or 0) + (agg["n_empty"] or 0)

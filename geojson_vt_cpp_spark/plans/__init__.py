@@ -1,9 +1,9 @@
 """Plan inspection + partitioning strategies.
 
 Helpers used by tests and the benchmark to assert the physical plans we
-designed for actually materialize: pushed filters reach the parquet scan,
-joins broadcast when requested, and spatial tables are range-partitioned by
-quadkey/cell prefix so parquet min/max stats prune spatially.
+designed for actually materialize: joins broadcast when requested, and
+spatial tables are range-partitioned by quadkey/cell prefix so parquet
+min/max stats prune spatially.
 """
 
 from __future__ import annotations
@@ -16,10 +16,6 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), mode
     )
-
-
-def has_pushed_filters(df: DataFrame) -> bool:
-    return "PushedFilters: [" in explain_str(df) and "PushedFilters: []" not in explain_str(df)
 
 
 def is_broadcast_join(df: DataFrame) -> bool:

@@ -216,13 +216,17 @@ def test_simplify_scalar_numpy_paths_bit_identical(monkeypatch):
 
 # --- transform_tile scalar/numpy quantize parity (round-6 optimization) -----
 
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 def test_transform_scalar_numpy_paths_bit_identical(monkeypatch):
     """The short-part scalar quantize walk and the numpy chain must emit
     identical int values (same C-double op order; the & 0xFFFF wrap must
-    match astype(np.int16)), the same importance filtering, and the same
-    n_simplified accounting — for every geometry type, at real and extreme
-    coordinates (incl. out-of-int16-range values from unclipped transforms
-    and non-finite coordinates, where the scalar path must fall back)."""
+    match the low 16 bits of the int32 conversion), the same importance
+    filtering, and the same n_simplified accounting — for every geometry
+    type, at real and extreme coordinates (incl. out-of-int16-range values
+    from unclipped transforms and non-finite coordinates, where the scalar
+    path must fall back). Out of int32 range and non-finite values
+    quantize to 0 on both paths by an explicit rule, not an undefined
+    numpy cast: any RuntimeWarning fails the test."""
     import geojson_vt_cpp_spark.functions.kernels as KK
 
     rng = np.random.default_rng(7)

@@ -1,12 +1,13 @@
 """The one partition-sizing rule of the tile stages, checked without Spark:
-a stand-in session carries only ``sparkContext.defaultParallelism``."""
+a stand-in session carries only ``sparkContext.defaultParallelism``, a
+stand-in DataFrame only its partition count."""
 
 from __future__ import annotations
 
 from types import SimpleNamespace
 
 from geojson_vt_cpp_spark.operators.clip_stage import (
-    POINTS_PER_PART, max_stage_parts, stage_parts,
+    POINTS_PER_PART, fit_parts, max_stage_parts, stage_parts,
 )
 
 
@@ -47,3 +48,40 @@ def test_documents_at_10_12_give_thousands_of_partitions():
     assert stage_parts(s, 3 * 10**12) == 4096 == max_stage_parts(s)
     assert stage_parts(s, 100 * POINTS_PER_PART) == 100
     assert stage_parts(s, 100 * POINTS_PER_PART + 1) == 101
+
+
+class _Levels:
+    """A stand-in DataFrame with ``parts`` partitions that counts the
+    partition-count probes (``df.rdd`` reads) fit_parts makes."""
+
+    def __init__(self, parts: int):
+        self.parts = parts
+        self.probes = 0
+
+    @property
+    def rdd(self):
+        self.probes += 1
+        return SimpleNamespace(getNumPartitions=lambda: self.parts)
+
+    def coalesce(self, n):
+        return ("coalesce", n)
+
+    def repartition(self, n):
+        return ("repartition", n)
+
+
+def test_fit_parts_probes_only_above_the_known_lower_bound():
+    # no bound known (z0): probe, then grow or shrink
+    df = _Levels(2)
+    assert fit_parts(df, 5) == (("repartition", 5), True)
+    assert fit_parts(df, 2) == (("coalesce", 2), False)
+    assert df.probes == 2
+    # at or under the parent level's partitions: coalesce, no probe
+    df = _Levels(6)
+    assert fit_parts(df, 4, 4) == (("coalesce", 4), False)
+    assert fit_parts(df, 1, 4) == (("coalesce", 1), False)
+    assert df.probes == 0
+    # above it: probe, and grow only past the real count
+    assert fit_parts(df, 6, 4) == (("coalesce", 6), False)
+    assert fit_parts(df, 8, 4) == (("repartition", 8), True)
+    assert df.probes == 2
