@@ -17,6 +17,7 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from geojson_vt_cpp_spark.functions import kernels as K
 from geojson_vt_cpp_spark.operators import codec
@@ -278,16 +279,17 @@ def split_children(assigned_df, buffer: int, extent: int, line_metrics: bool,
         for dx in (0, 1)
         for dy in (0, 1)
     )
-    feature_cols = [f"`{f.name}`" for f in schema.fields if f.name not in ("z", "tx", "ty")]
+    # replacing z/tx/ty in place keeps the schema's column order without
+    # listing every feature column (a Py4J round trip per list element)
     native_out = (
         assigned_df.where(native)
         .selectExpr("*", f"explode(filter(array({quads}), s -> s.keep)) AS q")
-        .selectExpr(
-            "CAST(z + 1 AS INT) AS z",
-            "CAST(tx * 2 + q.dx AS BIGINT) AS tx",
-            "CAST(ty * 2 + q.dy AS BIGINT) AS ty",
-            *feature_cols,
-        )
+        .withColumns({
+            "z": F.expr("CAST(z + 1 AS INT)"),
+            "tx": F.expr("CAST(tx * 2 + q.dx AS BIGINT)"),
+            "ty": F.expr("CAST(ty * 2 + q.dy AS BIGINT)"),
+        })
+        .drop("q")
     )
     kernel_in = assigned_df.where(f"NOT {native}")
     if kernel_parts is not None:

@@ -43,13 +43,11 @@ def extract_features(
     ``genId++`` over the input collection (``convert.hpp:105-110``);
     GeometryCollection members share their feature's id.
     """
-    spans = docs_df.select(
-        "doc_id", F.posexplode("spans").alias("span_idx", "span")
-    )
-    gj = spans.where(F.col("span.kind") == kind).select(
-        "doc_id",
-        F.col("span_idx").cast("int").alias("span_idx"),
-        F.col("span.text").alias("gj_text"),
+    # SQL text: one Py4J round trip per expression, not one per node
+    gj = (
+        docs_df.selectExpr("doc_id", "posexplode(spans) AS (span_idx, span)")
+        .where(F.col("span.kind") == kind)
+        .selectExpr("doc_id", "CAST(span_idx AS INT) AS span_idx", "span.text AS gj_text")
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

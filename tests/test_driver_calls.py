@@ -11,6 +11,7 @@ building or a per-level probe returning to the loop.
 
 from __future__ import annotations
 
+import gc
 import inspect
 
 import pytest
@@ -56,9 +57,13 @@ def test_warm_build_and_append_driver_calls(spark, monkeypatch):
     dl = documents_from_fixture(spark, DATELINE_GEOJSON, "dateline")
     TilePyramid.from_documents(us, OPTS)  # warm-up
 
+    # a collected Py4J object is released with a round trip of its own:
+    # collect earlier calls' garbage first, so each call pays for its own
+    gc.collect()
     calls = _counters(monkeypatch, type(us))
     pyr = TilePyramid.from_documents(us, OPTS)
     build = dict(calls)
+    gc.collect()
     calls.update(py4j=0, rdd=0)
     pyr.append(docs_df=dl)
     append = dict(calls)
