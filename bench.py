@@ -265,8 +265,8 @@ def run_micro(spark, cpus: int) -> dict:
 
     # TraverseTilePyramid getTile shape (benchmark.cpp:30-50): every z0..z10
     # tile requested — 1.4M getTile calls in the reference — through the
-    # batched get_tiles miss path: drill jobs bounded by LEVELS (one
-    # mixed-frontier split per round), never by the ~560k misses drilled
+    # get_tiles miss path: drill jobs bounded by LEVELS (one split per
+    # zoom of the level loop), never by the ~560k misses drilled
     t0 = time.time()
     reqs = [(z, x, y) for z in range(11) for x in range(1 << z) for y in range(1 << z)]
     out["traverse_gettile_rows"] = pyr.get_tiles(reqs).count()

@@ -1,50 +1,50 @@
 """The tile pyramid: BFS-per-zoom index build + lazy drill-down ``get_tile``.
 
 Spark re-expression of ``GeoJSONVT`` (``include/mapbox/geojsonvt.hpp:94-258``).
-The reference's recursive DFS ``splitTile`` becomes one per-zoom level loop
-(``TilePyramid._descend``), which the build and ``append`` both run — the
-build is an append onto an empty index:
+The reference splits tiles in one recursive DFS, ``splitTile``, for both
+the index build and the ``getTile`` drill-down; here it is one per-zoom
+level loop (``TilePyramid._descend``), which the build, ``append`` and the
+drill-down all run — the build is an append onto an empty index, and a
+drill starts the loop at the zoom of its shallowest sourced ancestor:
 
 - one narrow ``mapInPandas`` pass clips every assigned feature into its four
   buffered child quadrants (no shuffle — features never leave their
   partitions),
 - one small aggregate per level (sum of per-feature ``num_points`` per tile)
-  drives the stop conditions (``z == indexMaxZoom`` /
-  ``num_points <= indexMaxPoints``, ``geojsonvt.hpp:210-215``) on the driver,
+  drives the stop conditions on the driver: the build's
+  (``z == indexMaxZoom`` / ``num_points <= indexMaxPoints``,
+  ``geojsonvt.hpp:210-215``) or the drill's (a target below the tile,
+  ``geojsonvt.hpp:219-234``),
 - quantization to int16 tile features is deferred and runs as one job over
   the union of all levels when output is first requested.
-
-Drill-down (``_drill_batch``) keeps its own loop: its levels mix zooms and
-are driven by the requested tiles.
 
 Every stage is sized by one rule, ``clip_stage.stage_parts`` (one
 partition per ``POINTS_PER_PART`` vertices, capped at two per core), from a
 vertex count the operator already aggregated: wrap's deciding aggregate
 sizes z0 and the wrap windows, each level's stats aggregate sizes the next
-level and its split kernel, the registry sizes drill rounds, quantize and
-selective reads. Until the first aggregate nothing is counted, so the
-input keeps its partitioning; a 13-tile index runs every stage on one
-partition.
+level and its split kernel, and the registry sizes a drill's first split,
+quantize and selective reads. Until the first aggregate nothing is
+counted, so the input keeps its partitioning; a 13-tile index runs every
+stage on one partition.
 
 Tile metadata (num_points, row counts, source retention) lives on the
 driver in one registry, the analogue of the reference's single tile map
-(``geojsonvt.hpp:157``): every build level, append level and drill round
-registers into a compact numpy block (~33 bytes/tile, searchsorted
-lookups), and a level evaluates the stop conditions of its fresh tiles in
-vectorized numpy over its one aggregate, so deep indexes (index_max_zoom
->= 8) never build per-tile Python objects or loop the visit set on the
-driver; only tiles an append reaches that are already registered take a
-per-tile Python path, bounded by the new features' cover. Empty
-tiles ARE materialized (the reference constructs an InternalTile for every
-child before checking ``features.empty()``, ``geojsonvt.hpp:189-206`` — the
-us-states golden contains 19 empty tiles).
+(``geojsonvt.hpp:157``): every level of the loop registers its fresh tiles
+into a compact numpy block (~33 bytes/tile, searchsorted lookups), and a
+level evaluates the stop conditions of its fresh tiles in vectorized numpy
+over its one aggregate, so deep indexes (index_max_zoom >= 8) and
+traversal-sized drills never build per-tile Python objects or loop the
+visit set on the driver; only tiles an append reaches that are already
+registered take a per-tile Python path, bounded by the new features'
+cover. Empty tiles ARE materialized (the reference constructs an
+InternalTile for every child before checking ``features.empty()``,
+``geojsonvt.hpp:189-206`` — the us-states golden contains 19 empty tiles).
 
 ``get_tile`` mirrors ``geojsonvt.hpp:117-150``: x wraparound, ancestor walk,
 targeted drill-down re-running the split from the nearest retained source,
 ancestor-path pruning (only ancestors of the target recurse,
 ``geojsonvt.hpp:228-234``), and the canonical empty tile for misses.
 """
-
 from __future__ import annotations
 
 import json
@@ -67,13 +67,11 @@ from geojson_vt_cpp_spark.operators.clip_stage import (
 from geojson_vt_cpp_spark.operators.convert import extract_features
 from geojson_vt_cpp_spark.operators.wrap import wrap_with_points
 
-# Per-call expressions of the level loop and the drill rounds are SQL text:
-# a Column-builder call costs a Py4J round trip per node, and these are
-# rebuilt on every level, append level and drill round.
+# Per-call expressions of the level loop are SQL text: a Column-builder
+# call costs a Py4J round trip per node, and these are rebuilt on every
+# level of a build, append or drill.
 # (z, tx, ty) packed into one BIGINT: z < 64, tx, ty < 2^29
 _PACKED_KEY = "shiftleft(CAST(z AS BIGINT), 58) + shiftleft(tx, 29) + ty"
-# the per-tile stats of a level or drill round
-_TILE_STATS = ("sum(num_points) AS npts", "count(*) AS nrows")
 
 
 def _tile_eq(z: int, x: int, y: int) -> str:
@@ -155,22 +153,31 @@ class _MetaRef:
 class _MetaStore:
     """Tile registry: dict semantics over numpy blocks.
 
-    Every registration adds one block — the fresh tiles of one build or
-    append level, or the children one drill round registered at one zoom:
-    packed-key-sorted arrays of (key, num_points, rows, has_source), ~33
-    bytes/tile, with O(log n) searchsorted lookups. Mutations (append
-    growing a tile, a drill retiring a source) write through the
-    :class:`_MetaRef` view into the block.
+    Every registration adds one block — the fresh tiles of one level of
+    the level loop (a build, append or drill level): packed-key-sorted
+    arrays of (key, num_points, rows, has_source), ~33 bytes/tile, with
+    O(log n) searchsorted lookups. Mutations (append growing a tile, a
+    split retiring a source) write through the :class:`_MetaRef` view into
+    the block.
     """
 
     def __init__(self):
-        # z -> list of (packed_keys_sorted, npts, nrows, has_source,
-        #               container_df_or_None); multiple blocks per level
+        # z -> list of (packed_keys_sorted, npts, nrows, has_source);
+        # multiple blocks per level
         self._levels: dict[int, list] = {}
         self._block_count = 0
 
-    def add_level(self, z, xs, ys, npts, nrows, src, container=None) -> None:
+    def add_level(self, z, xs, ys, npts, nrows, src) -> None:
         packed = (xs.astype(np.int64) << 29) + ys.astype(np.int64)
+        for lv in self._levels.get(z, ()):
+            # fresh tiles are children of tiles that had none: a sourced
+            # leaf or a tile this level loop created
+            dup = np.flatnonzero(np.isin(packed, lv[0]))
+            if len(dup):
+                i = int(dup[0])
+                raise AssertionError(
+                    f"tile {(z, int(xs[i]), int(ys[i]))} already registered"
+                )
         order = np.argsort(packed)
         self._levels.setdefault(z, []).append(
             (
@@ -178,7 +185,6 @@ class _MetaStore:
                 npts[order].astype(np.int64),
                 nrows[order].astype(np.int64),
                 src[order].astype(bool).copy(),
-                container,
             )
         )
         self._block_count += len(packed)
@@ -191,13 +197,6 @@ class _MetaStore:
             if i < len(lv[0]) and lv[0][i] == p:
                 return lv, i
         return None, None
-
-    def block_container(self, key):
-        """The drill-round children df that registered this tile, or None
-        for tiles of build/append levels (their rows live in the level
-        checkpoint)."""
-        lv, _i = self._find(key)
-        return None if lv is None else lv[4]
 
     def __contains__(self, key) -> bool:
         return self._find(key)[0] is not None
@@ -391,12 +390,11 @@ class TilePyramid:
         self.spark = features_df.sparkSession
         self.meta: _MetaStore = _MetaStore()
         self._level_assigned: dict[int, DataFrame] = {}
-        self._extra_assigned: list[DataFrame] = []
         self._tile_features: DataFrame | None = None
         self._tile_cache: dict[tuple[int, int, int], Tile] = {}
         self._serving: tuple[list[int], list[tuple[int, str]]] | None = None
-        # one entry per batched-drill round: tiles split ("active"), their
-        # registry vertices ("points") and the partitions that sized ("parts")
+        # one entry per drill level: tiles split ("active"), their vertices
+        # ("points") and the partitions of the split's input ("parts")
         self.drill_log: list[dict] = []
         self._drilled = False  # append() is defined on the eager index only
         self._io = None
@@ -434,7 +432,10 @@ class TilePyramid:
             base = self._io.run_stage("pyr_base", base_stage, fingerprint=self._fp)
             self._prev_snap = base.snapshot_id
             # a resumed base was not counted in this process
-            self._descend(base.df, counted.get("points"), True, root, staged=True)
+            self._descend(
+                base.df, counted.get("points"), True, root, self._index_rule,
+                staged=True,
+            )
             return
         # lazy (eager=False) localCheckpoint: wrap's deciding aggregate (or
         # the z0 stats aggregate) is the materializing action, so the cache
@@ -447,7 +448,10 @@ class TilePyramid:
             # no count until the z0 stats aggregate: the input keeps its
             # partitioning, bounded by the rule's cap
             base = features_df.coalesce(max_stage_parts(self.spark))
-            self._descend(base.localCheckpoint(eager=False), None, True, root)
+            self._descend(
+                base.localCheckpoint(eager=False), None, True, root,
+                self._index_rule,
+            )
             return
         features_df = features_df.localCheckpoint(eager=False)
         feats, points = wrap_with_points(
@@ -455,7 +459,7 @@ class TilePyramid:
         )
         # wrap returning its input unchanged (no dateline features) means the
         # base is already materialized — z0 needs no second checkpoint
-        self._descend(feats, points, feats is features_df, root)
+        self._descend(feats, points, feats is features_df, root, self._index_rule)
 
     @classmethod
     def from_documents(cls, docs_df: DataFrame, options: Options | None = None,
@@ -479,160 +483,224 @@ class TilePyramid:
 
     # ------------------------------------------------------------ level loop
 
-    def _descend(self, feats: DataFrame, points: int | None, materialized: bool,
-                 fresh: tuple, staged: bool = False) -> None:
-        """The BFS from z0, one zoom per step — the build, and an append
-        onto a built index. ``points`` is the vertex count of ``feats``, or
+    def _index_rule(self, z: int, xs, ys, npts, nrows) -> tuple:
+        """The build's split-and-keep masks over a level's fresh tiles
+        (``geojsonvt.hpp:210-215``): a non-empty tile splits below
+        ``indexMaxZoom`` over ``indexMaxPoints`` points and keeps its source
+        otherwise."""
+        o = self.o
+        nonempty = nrows > 0
+        split = nonempty & (z < o.index_max_zoom) & (npts > o.index_max_points)
+        keep = nonempty & ((z == o.index_max_zoom) | (npts <= o.index_max_points))
+        return split, keep
+
+    def _descend(self, feats: DataFrame | None, points: int | None,
+                 materialized: bool, fresh: tuple, rule, z: int = 0,
+                 pull: dict | None = None, staged: bool = False) -> list[dict]:
+        """The BFS level loop, one zoom per step: the build, an append onto
+        a built index, and a drill-down (the reference's ``splitTile``,
+        ``geojsonvt.hpp:217-257``, serves the build and getTile alike).
+
+        The build and an append start at z0 with ``feats``; ``fresh`` is
+        the (xs, ys) of the z0 tiles to register: the root for a build,
+        none for an append. ``points`` is the vertex count of ``feats``, or
         None when nothing counted it (pre-wrapped input, a resumed base):
         z0 then stays on at most the rule's cap of partitions, and its
         stats aggregate sizes every level after it. ``materialized`` says
-        ``feats`` is already checkpointed. ``fresh`` is the (xs, ys) of the
-        z0 tiles to register: the root for a build, none for an append.
-        ``staged`` checkpoints each level as a manifest-gated TableIO stage
-        (the workdir build) instead of a lazy ``localCheckpoint``.
+        ``feats`` is already checkpointed. ``staged`` checkpoints each level
+        as a manifest-gated TableIO stage (the workdir build) instead of a
+        lazy ``localCheckpoint``. A drill passes no ``feats`` and starts at
+        zoom ``z`` with ``pull``: its sourced ancestors, z -> {(x, y)}.
+
+        ``rule(z, xs, ys, npts, nrows) -> (split, keep)`` gives, as
+        vectorized masks over a level's fresh tiles, which split and which
+        keep their source: :meth:`_index_rule` for the build and append,
+        the target rule of :meth:`_drill` for a drill.
 
         Each level runs one aggregate — per-tile num_points sum, row count
         and the vertices of the next split's mid rows (rows the native
         routing cannot clip, see split_children/kernel_parts) — as its
         first action, so the lazy level checkpoint fuses into it. Fresh
         tiles (children of this loop's splits, empties included) register
-        as one numpy block; a non-empty one keeps its source at
-        ``indexMaxZoom`` or at most ``indexMaxPoints`` points and splits
-        otherwise (``geojsonvt.hpp:210-215``). Every other tile of the
-        aggregate must already be registered (new rows reaching an index):
-        an interior tile passes only the new rows to its children, a leaf
-        stays a leaf, and a leaf newly over ``indexMaxPoints`` splits with
-        its old rows pulled back from the level it was registered in.
+        as one numpy block. Every other tile of the aggregate must already
+        be registered (new rows reaching an index): an interior tile passes
+        only the new rows to its children, a leaf stays a leaf, and a leaf
+        newly over ``indexMaxPoints`` splits with its old rows pulled back
+        from the level it was registered in. A drill's ancestor joins the
+        split set at its own zoom the same way, its rows pulled back; a
+        zoom that no rows reach is skipped.
+
+        Returns one ``{active, points, parts}`` record per split: the tiles
+        whose children registered, the vertices that split and the
+        partitions of the split's input.
         """
         o = self.o
-        level = feats.selectExpr(
+        pull = pull or {}
+        level = None if feats is None else feats.selectExpr(
             "0 AS z", "CAST(0 AS BIGINT) AS tx", "CAST(0 AS BIGINT) AS ty", "*"
         )
-        stats = [F.expr(e) for e in _TILE_STATS] + [
-            F.expr(split_mid_points_sql(o.buffer, o.extent) + " AS nmid")
+        # the level aggregate's columns, built once for every level
+        tile = [F.expr("tx"), F.expr("ty")]
+        stats = [
+            F.expr("sum(num_points) AS npts"),
+            F.expr("count(*) AS nrows"),
+            F.expr(split_mid_points_sql(o.buffer, o.extent) + " AS nmid"),
         ]
-        z = 0
+        none = np.zeros(0, dtype=np.int64)
+        rounds: list[dict] = []
         parts = 0  # partitions the current level is known to have at least
         while True:
-            if staged:
-                # manifest-gated level checkpoint: a killed build resumes
-                # here — completed levels read back, this one re-runs
-                n = (
-                    max_stage_parts(self.spark) if points is None
-                    else stage_parts(self.spark, points)
-                )
-                lvl_df = level  # bind before reassignment (closure)
-                res = self._io.run_stage(
-                    f"pyr_level_{z:02d}",
-                    lambda: lvl_df.repartition(n),
-                    inputs=(self._prev_snap,),
-                    fingerprint=self._fp,
-                )
-                level = res.df
-                self._prev_snap = res.snapshot_id
-            elif points is None:
-                # an uncounted (pre-wrapped) z0: __init__ coalesced it to
-                # the rule's cap and checkpointed it; its stats aggregate
-                # sizes every level after it
-                n = parts = level.rdd.getNumPartitions()
-            else:
-                # coalesce when the level shrinks, which is the usual case
-                # (a split output has at least its parent level's
-                # partitions, so the shrink needs no partition-count probe,
-                # see fit_parts): per-level Python work (only the rows native
-                # routing cannot clip) is too small to justify a
-                # full-payload shuffle per zoom. A round-robin repartition
-                # only where the level holds fewer partitions than its
-                # points ask for: a few-partition convert output at z0, or
-                # the children of a one-partition pre-wrapped z0. Lazy
-                # checkpoint: the level materializes inside its stats
-                # aggregate below (one fused pass, ContextCleaner-managed
-                # blocks); the staged branch above is the
-                # reliable-checkpoint cluster path.
-                n = stage_parts(self.spark, points)
-                level, grew = fit_parts(level, n, parts)
-                parts = n
-                if grew or not materialized:
-                    level = level.localCheckpoint(eager=False)
-            materialized = False
             old = self._level_assigned.get(z)  # rows registered before
-            self._level_assigned[z] = level if old is None else old.unionByName(level)
-            pdf = level.groupBy("tx", "ty").agg(*stats).toPandas()
-            sxs = pdf["tx"].to_numpy().astype(np.int64)
-            sys_ = pdf["ty"].to_numpy().astype(np.int64)
-            snpts = pdf["npts"].to_numpy().astype(np.int64)
-            snrows = pdf["nrows"].to_numpy().astype(np.int64)
-            snmid = pdf["nmid"].fillna(0).to_numpy().astype(np.int64)
-            # fresh tiles, in vectorized numpy
-            fxs, fys = fresh
-            packed = (fxs << 29) + fys
-            order = np.argsort(packed)
-            fxs, fys, packed = fxs[order], fys[order], packed[order]
-            is_fresh = np.isin((sxs << 29) + sys_, packed)
-            idx = np.searchsorted(packed, (sxs[is_fresh] << 29) + sys_[is_fresh])
-            npts = np.zeros(len(packed), dtype=np.int64)
-            nrows = np.zeros(len(packed), dtype=np.int64)
-            nmid = np.zeros(len(packed), dtype=np.int64)
-            npts[idx] = snpts[is_fresh]
-            nrows[idx] = snrows[is_fresh]
-            nmid[idx] = snmid[is_fresh]
-            nonempty = nrows > 0
-            keep_src = nonempty & (
-                (z == o.index_max_zoom) | (npts <= o.index_max_points)
-            )
-            split_mask = nonempty & (z < o.index_max_zoom) & (npts > o.index_max_points)
-            if len(packed):
-                self.meta.add_level(z, fxs, fys, npts, nrows, keep_src)
-            descend = list(zip(fxs[split_mask].tolist(), fys[split_mask].tolist()))
-            points = int(npts[split_mask].sum())  # vertices reaching z + 1
-            mid_points = int(nmid[split_mask].sum())
-            new_splits: list[tuple[int, int]] = []  # registered, newly split
-            for i in np.flatnonzero(~is_fresh).tolist():
-                x, y = int(sxs[i]), int(sys_[i])
-                key = (z, x, y)
-                if key not in self.meta:
-                    raise AssertionError(f"level stats reached unregistered tile {key}")
-                m = self.meta[key]
-                was_interior = m.rows > 0 and not m.has_source
-                old_points = m.num_points
-                m.num_points += int(snpts[i])
-                m.rows += int(snrows[i])
-                if was_interior:
-                    descend.append((x, y))  # children exist: new rows only
-                    points += int(snpts[i])
-                    mid_points += int(snmid[i])
-                elif z == o.index_max_zoom or m.num_points <= o.index_max_points:
-                    m.has_source = True  # leaf stays leaf (empty becomes leaf)
+            descend: list[tuple[int, int]] = []  # tiles whose new rows split
+            pulled: list[tuple[int, int]] = []  # registered tiles that split
+            split_xs = split_ys = none  # fresh tiles that split
+            if level is not None:
+                if staged:
+                    # manifest-gated level checkpoint: a killed build resumes
+                    # here — completed levels read back, this one re-runs
+                    n = (
+                        max_stage_parts(self.spark) if points is None
+                        else stage_parts(self.spark, points)
+                    )
+                    lvl_df = level  # bind before reassignment (closure)
+                    res = self._io.run_stage(
+                        f"pyr_level_{z:02d}",
+                        lambda: lvl_df.repartition(n),
+                        inputs=(self._prev_snap,),
+                        fingerprint=self._fp,
+                    )
+                    level = res.df
+                    self._prev_snap = res.snapshot_id
+                elif points is None:
+                    # an uncounted (pre-wrapped) z0: __init__ coalesced it to
+                    # the rule's cap and checkpointed it; its stats aggregate
+                    # sizes every level after it
+                    n = parts = level.rdd.getNumPartitions()
                 else:
-                    # leaf newly exceeds the split threshold: its old rows
-                    # re-split with the new ones; their vertices bound
-                    # their mid-row vertices
-                    m.has_source = False
-                    descend.append((x, y))
-                    new_splits.append((x, y))
-                    points += m.num_points  # new rows and the old ones
-                    mid_points += int(snmid[i]) + old_points
-            if not descend:
-                break
-            split_df = self._filter_tiles_z(level, [(z, x, y) for x, y in descend])
-            if new_splits:
-                split_df = split_df.unionByName(
-                    self._filter_tiles_z(old, [(z, x, y) for x, y in new_splits])
+                    # coalesce when the level shrinks, which is the usual
+                    # case (a split output has at least its parent level's
+                    # partitions, so the shrink needs no partition-count
+                    # probe, see fit_parts): per-level Python work (only the
+                    # rows native routing cannot clip) is too small to
+                    # justify a full-payload shuffle per zoom. A round-robin
+                    # repartition only where the level holds fewer
+                    # partitions than its points ask for: a few-partition
+                    # convert output at z0, or the children of a
+                    # one-partition pre-wrapped z0. Lazy checkpoint: the
+                    # level materializes inside its stats aggregate below
+                    # (one fused pass, ContextCleaner-managed blocks); the
+                    # staged branch above is the reliable-checkpoint
+                    # cluster path.
+                    n = stage_parts(self.spark, points)
+                    level, grew = fit_parts(level, n, parts)
+                    parts = n
+                    if grew or not materialized:
+                        level = level.localCheckpoint(eager=False)
+                materialized = False
+                self._level_assigned[z] = (
+                    level if old is None else old.unionByName(level)
                 )
-            reg = np.array(new_splits, dtype=np.int64).reshape(-1, 2)
-            cxs = np.concatenate([fxs[split_mask], reg[:, 0]])
-            cys = np.concatenate([fys[split_mask], reg[:, 1]])
+                pdf = level.groupBy(*tile).agg(*stats).toPandas()
+                sxs = pdf["tx"].to_numpy().astype(np.int64)
+                sys_ = pdf["ty"].to_numpy().astype(np.int64)
+                snpts = pdf["npts"].to_numpy().astype(np.int64)
+                snrows = pdf["nrows"].to_numpy().astype(np.int64)
+                snmid = pdf["nmid"].fillna(0).to_numpy().astype(np.int64)
+                # fresh tiles, in vectorized numpy
+                fxs, fys = fresh
+                packed = (fxs << 29) + fys
+                order = np.argsort(packed)
+                fxs, fys, packed = fxs[order], fys[order], packed[order]
+                is_fresh = np.isin((sxs << 29) + sys_, packed)
+                idx = np.searchsorted(packed, (sxs[is_fresh] << 29) + sys_[is_fresh])
+                npts = np.zeros(len(packed), dtype=np.int64)
+                nrows = np.zeros(len(packed), dtype=np.int64)
+                nmid = np.zeros(len(packed), dtype=np.int64)
+                npts[idx] = snpts[is_fresh]
+                nrows[idx] = snrows[is_fresh]
+                nmid[idx] = snmid[is_fresh]
+                split_mask, keep_src = rule(z, fxs, fys, npts, nrows)
+                if len(packed):
+                    self.meta.add_level(z, fxs, fys, npts, nrows, keep_src)
+                split_xs, split_ys = fxs[split_mask], fys[split_mask]
+                descend = list(zip(split_xs.tolist(), split_ys.tolist()))
+                points = int(npts[split_mask].sum())  # vertices reaching z + 1
+                mid_points = int(nmid[split_mask].sum())
+                for i in np.flatnonzero(~is_fresh).tolist():
+                    x, y = int(sxs[i]), int(sys_[i])
+                    key = (z, x, y)
+                    if key not in self.meta:
+                        raise AssertionError(
+                            f"level stats reached unregistered tile {key}"
+                        )
+                    m = self.meta[key]
+                    was_interior = m.rows > 0 and not m.has_source
+                    old_points = m.num_points
+                    m.num_points += int(snpts[i])
+                    m.rows += int(snrows[i])
+                    if was_interior:
+                        descend.append((x, y))  # children exist: new rows only
+                        points += int(snpts[i])
+                        mid_points += int(snmid[i])
+                    elif z == o.index_max_zoom or m.num_points <= o.index_max_points:
+                        m.has_source = True  # leaf stays leaf (empty becomes leaf)
+                    else:
+                        # leaf newly exceeds the split threshold: its old rows
+                        # re-split with the new ones; their vertices bound
+                        # their mid-row vertices
+                        m.has_source = False
+                        descend.append((x, y))
+                        pulled.append((x, y))
+                        points += m.num_points  # new rows and the old ones
+                        mid_points += int(snmid[i]) + old_points
+            else:
+                points = mid_points = 0
+            for x, y in sorted(pull.pop(z, ())):
+                # a drill's sourced ancestor: it splits and retires its
+                # source (geojsonvt.hpp:256-257); its vertices bound its
+                # mid-row vertices
+                m = self.meta[(z, x, y)]
+                m.has_source = False
+                pulled.append((x, y))
+                points += m.num_points
+                mid_points += m.num_points
+            if not descend and not pulled:
+                if not pull:
+                    return rounds
+                z, level = min(pull), None  # no rows reach that ancestor's zoom
+                continue
+            pulled_df = (
+                self._filter_tiles_z(old, [(z, x, y) for x, y in pulled])
+                if pulled else None
+            )
+            if descend:
+                split_df = self._filter_tiles_z(level, [(z, x, y) for x, y in descend])
+                if pulled:
+                    split_df = split_df.unionByName(pulled_df)
+                # a split input on one partition (n is the level's partition
+                # count) feeds its kernel as it is: nothing to shrink or
+                # balance
+                one_part = n == 1 and not pulled
+            else:
+                # only pulled-back rows split (a drill's ancestor): sized
+                # like a level from their registered vertices. A DataFrame
+                # holding them has a partition, so a one-partition fit
+                # coalesces without a probe.
+                n = parts = stage_parts(self.spark, points)
+                split_df = fit_parts(pulled_df, n, 1)[0]
+                one_part = n == 1
+            reg = np.array(pulled, dtype=np.int64).reshape(-1, 2)
+            cxs = np.concatenate([split_xs, reg[:, 0]])
+            cys = np.concatenate([split_ys, reg[:, 1]])
+            rounds.append({"active": len(cxs), "points": points, "parts": n})
             fresh = (
                 np.repeat(cxs * 2, 4) + np.tile(np.array([0, 1, 0, 1]), len(cxs)),
                 np.repeat(cys * 2, 4) + np.tile(np.array([0, 0, 1, 1]), len(cys)),
             )
-            # a split input on one partition (n is the level's partition
-            # count) feeds its kernel as it is: nothing to shrink or balance
             level = split_children(
                 split_df, o.buffer, o.extent, o.line_metrics,
                 kernel_parts=(
-                    None if n == 1 and not new_splits
-                    else stage_parts(self.spark, mid_points)
+                    None if one_part else stage_parts(self.spark, mid_points)
                 ),
             )
             z += 1
@@ -697,162 +765,72 @@ class TilePyramid:
             features_df, o.buffer / o.extent, o.line_metrics
         )
         none = np.zeros(0, dtype=np.int64)
-        self._descend(feats, points, feats is features_df, (none, none))
+        self._descend(
+            feats, points, feats is features_df, (none, none), self._index_rule
+        )
 
     # ------------------------------------------------------------ drill-down
 
-    def _source_container(self, key: tuple[int, int, int]) -> DataFrame | None:
-        """The unfiltered DataFrame holding this sourced tile's rows: the
-        drill round's children df that registered its block, else its
-        build/append level.
-
-        A container, not a pre-filtered view: constructing one filtered
-        DataFrame per retained child would cost Py4J round trips per tile —
-        O(misses) driver work, exactly what the batched drill exists to
-        avoid. Filters are built lazily, grouped per container, only for
-        tiles that actually drill.
-        """
-        c = self.meta.block_container(key)
-        return self._level_assigned.get(key[0]) if c is None else c
-
-    def _drill_batch(self, targets: list[tuple[int, int, int]]) -> None:
-        """Batched drill-down: every miss drilled in ONE BFS — one
-        ``split_children`` job + one stats aggregate per LEVEL, not per miss.
+    def _drill(self, targets: list[tuple[int, int, int]]) -> None:
+        """Drill-down toward every unregistered target at once: the level
+        loop (:meth:`_descend`) from the zoom of the shallowest sourced
+        ancestor, one split job + one stats aggregate per LEVEL, not per
+        miss.
 
         Semantics are the confluent closure of the reference's per-miss
-        recursion (geojsonvt.hpp:217-257): at each level the frontier is
-        exactly the set of sourced tiles that are strict ancestors of at
-        least one unreached target; all of them split in one mixed-z job
-        (split_children reads z/tx/ty per row). Per split tile: all four
-        children materialize (stats registered), the split tile retires its
-        source, a child retains its source iff no target lies strictly below
-        it (this is order-independent — per-miss drilling in any order
-        reaches the same final meta/source state), children at maxZoom
-        retain nothing (geojsonvt.hpp:219-220), and empty children never
-        recurse, so targets under them stay genuine misses.
+        recursion (geojsonvt.hpp:217-257). Each target's nearest registered
+        ancestor (findParent, geojsonvt.hpp:159-176) splits at its own zoom
+        if it holds a source; a target under an empty or sourceless
+        ancestor stays a miss. Below it, a fresh tile splits iff it is
+        non-empty, under maxZoom and some target lies strictly below it,
+        and keeps its source iff it is non-empty, does not split and is
+        under maxZoom (none at maxZoom, geojsonvt.hpp:219-220); empty
+        children never split, so targets under them stay misses. Every
+        split registers all four children and retires the split tile's
+        source. This is order-independent: per-miss drilling in any order
+        reaches the same final registry.
         """
         o = self.o
-        # group targets under their nearest materialized ancestor
-        # (findParent, geojsonvt.hpp:159-176)
-        frontier: dict[tuple[int, int, int], set] = {}
-        containers: dict[tuple[int, int, int], DataFrame] = {}
+        pull: dict[int, set] = {}  # zoom -> sourced ancestors (x, y)
+        below = []  # targets under a sourced ancestor
         for t in dict.fromkeys(targets):
             if t in self.meta:
                 continue
-            pz, px, py = t
-            anc = None
-            while pz != 0:
-                pz -= 1
-                px //= 2
-                py //= 2
-                if (pz, px, py) in self.meta:
-                    anc = (pz, px, py)
+            z, x, y = t
+            while True:
+                if z == 0:
+                    raise ValueError("Parent tile not found")
+                z, x, y = z - 1, x >> 1, y >> 1
+                if (z, x, y) in self.meta:
                     break
-            if anc is None:
-                raise ValueError("Parent tile not found")
-            m = self.meta[anc]
-            if not m.has_source or m.rows == 0:
-                continue  # sourceless/empty ancestor: drill is a no-op
-            frontier.setdefault(anc, set()).add(t)
-            containers[anc] = self._source_container(anc)
-        if frontier:
-            self._drilled = True
-        while frontier:
-            active = {
-                key: below
-                for key, tset in frontier.items()
-                if key[0] < o.max_zoom
-                for below in [{t for t in tset if t[0] > key[0]}]
-                if below
-            }
-            if not active:
-                return
-            # ONE filter per distinct container df (not per tile), one
-            # mixed-z split job + one stats aggregate for the whole level
-            groups: dict[int, tuple[DataFrame, list]] = {}
-            for key in sorted(active):
-                c = containers[key]
-                groups.setdefault(id(c), (c, []))[1].append(key)
-            filtered = [self._filter_tiles_z(c, ks) for c, ks in groups.values()]
-            union = filtered[0]
-            for d in filtered[1:]:
-                union = union.unionByName(d)
-            # size the round from the registry's vertex counts: the
-            # filtered union inherits its containers' partitioning (hundreds
-            # of near-empty partitions after a few rounds) and mapInPandas
-            # pays its per-task cost on every one — measured 12 s/round on
-            # a 43k-row traversal before rounds were sized. The containers
-            # were usually sized from more vertices, so this coalesces; it
-            # grows only a union on fewer partitions than its points ask for.
-            points = sum(self.meta[k].num_points for k in active)
-            n = stage_parts(self.spark, points)
-            union = fit_parts(union, n)[0]
-            # lazy checkpoint, materialized by the stats aggregate below:
-            # the drill round's cache write fuses into the stats job
-            children = split_children(
-                union, o.buffer, o.extent, o.line_metrics
-            ).localCheckpoint(eager=False)
-            self._extra_assigned.append(children)
-            self._invalidate_tile_features()  # invalidate union cache
-            cstats = {
-                (r["z"], r["tx"], r["ty"]): (r["npts"], r["nrows"])
-                for r in children.groupBy("z", "tx", "ty")
-                .agg(*[F.expr(e) for e in _TILE_STATS])
-                .collect()
-            }
-            nxt: dict[tuple[int, int, int], set] = {}
-            containers = {}
-            # the round's children register as one block per zoom
-            # (traversal-shaped drills create hundreds of thousands of
-            # tiles), each block pointing at ``children`` as its container
-            pend: dict[int, list] = {}  # z+1 -> [(x, y, npts, nrows, src)]
-            for (z, x, y), tset in active.items():
-                # the split tile drops its source (geojsonvt.hpp:256-257)
-                self.meta[(z, x, y)].has_source = False
-                for dx in (0, 1):
-                    for dy in (0, 1):
-                        czx, czy = 2 * x + dx, 2 * y + dy
-                        key = (z + 1, czx, czy)
-                        npts, nrows = cstats.get(key, (0, 0))
-                        src = False
-                        below = None
-                        if nrows > 0 and z + 1 < o.max_zoom:
-                            # no source at maxZoom (geojsonvt.hpp:219-220)
-                            below = {
-                                t
-                                for t in tset
-                                if t[0] > z + 1
-                                and t[1] >> (t[0] - (z + 1)) == czx
-                                and t[2] >> (t[0] - (z + 1)) == czy
-                            }
-                            src = not below
-                        if key in self.meta:
-                            # a split tile was a sourced leaf: no children
-                            raise AssertionError(
-                                f"drill child {key} already registered"
-                            )
-                        pend.setdefault(z + 1, []).append(
-                            (czx, czy, int(npts or 0), int(nrows), src)
-                        )
-                        if below:
-                            nxt[key] = below  # recurses; no source kept
-                            containers[key] = children
-            for z1, regs in pend.items():
-                arr = np.array(regs, dtype=np.int64)
-                self.meta.add_level(
-                    z1, arr[:, 0], arr[:, 1], arr[:, 2], arr[:, 3], arr[:, 4],
-                    container=children,
-                )
-            self.drill_log.append(
-                {"active": len(active), "points": points, "parts": n}
-            )
-            frontier = nxt
+            m = self.meta[(z, x, y)]
+            if m.has_source and m.rows > 0:
+                pull.setdefault(z, set()).add((x, y))
+                below.append(t)
+        if not pull:
+            return
+        self._drilled = True
+        self._invalidate_tile_features()
+        tz, tx, ty = (np.array(c, dtype=np.int64) for c in zip(*below))
+
+        def rule(z: int, xs, ys, npts, nrows) -> tuple:
+            deeper = tz > z
+            d = tz[deeper] - z
+            ancestors = ((tx[deeper] >> d) << 29) + (ty[deeper] >> d)
+            live = (nrows > 0) & (z < o.max_zoom)
+            split = live & np.isin((xs << 29) + ys, ancestors)
+            return split, live & ~split
+
+        none = np.zeros(0, dtype=np.int64)
+        self.drill_log += self._descend(
+            None, 0, False, (none, none), rule, min(pull), pull
+        )
 
     @staticmethod
     def _filter_tiles_z(df: DataFrame, keys: list[tuple[int, int, int]]) -> DataFrame:
         """Tile membership filter keyed on (z, tx, ty) — the one filter of
-        the level loop's splits and old-leaf pulls and of the drill rounds,
-        whose children union mixes levels, so tx/ty alone would collide.
+        the level loop's splits and pulled-back rows and of tile reads,
+        whose unions mix levels, so tx/ty alone would collide.
 
         Small key sets compile to an InSet probe over packed keys, written
         as one SQL ``IN`` list; large ones become a broadcast left-semi
@@ -877,7 +855,7 @@ class TilePyramid:
     # --------------------------------------------------------------- output
 
     def _assigned_union(self) -> DataFrame:
-        dfs = list(self._level_assigned.values()) + self._extra_assigned
+        dfs = list(self._level_assigned.values())
         union = dfs[0]
         for d in dfs[1:]:
             union = union.unionByName(d)
@@ -910,8 +888,8 @@ class TilePyramid:
         key = (z, x, y)
         if key not in self.meta:
             # splitTile from the nearest sourced ancestor
-            # (geojsonvt.hpp:130-139): a batch of one
-            self._drill_batch([key])
+            # (geojsonvt.hpp:130-139): a drill toward one target
+            self._drill([key])
         if key not in self.meta:
             return EMPTY_TILE
         return self._collect_tile(key)
@@ -920,10 +898,10 @@ class TilePyramid:
         """Batch tile read: one DataFrame of tile features for many (z, x, y)
         requests — the Spark-shaped ``getTile`` (SURVEY.md §2 Q1 mapping).
 
-        Misses are grouped by their nearest sourced ancestor and drilled in
-        ONE batched BFS (:meth:`_drill_batch`): job/stage count is bounded
-        by the number of LEVELS between the shallowest ancestor and the
-        deepest miss, not by the number of misses. The hit lookup is ONE
+        Misses are drilled together in ONE run of the level loop
+        (:meth:`_drill`): job/stage count is bounded by the number of
+        LEVELS between the shallowest sourced ancestor and the deepest
+        miss, not by the number of misses. The hit lookup is ONE
         filter over the z-partitioned tile features (partition pruning on z,
         min/max pruning on tx/ty when persisted via TableIO).
         """
@@ -935,7 +913,7 @@ class TilePyramid:
             wanted.append((z, ((x % z2) + z2) % z2, y))
         missing = [k for k in dict.fromkeys(wanted) if k not in self.meta]
         if missing:
-            self._drill_batch(missing)  # one job chain per level, not per miss
+            self._drill(missing)  # one job chain per level, not per miss
         found = [k for k in dict.fromkeys(wanted) if k in self.meta]
         if not found:
             return self.tile_features().limit(0)
