@@ -21,36 +21,55 @@ Public API mirrors the reference's three entry points
 from geojson_vt_cpp_spark.config import Options, TileOptions, from_id, to_id
 
 
-def _stat_keyed_zip_invalidation() -> None:
-    """Inside a PySpark Python worker, re-read a zip's directory only when the
-    zip changed.
+def _task_start_hook() -> None:
+    """Inside a PySpark Python worker, make the per-task start cheap: freeze
+    the long-lived heap, and re-read a zip's directory only when the zip
+    changed.
 
-    The worker calls ``importlib.invalidate_caches()`` at the start of every
-    task (``pyspark.worker_util.setup_spark_files``). On CPython 3.11 every
-    ``zipimporter`` then re-reads the whole central directory of its archive
-    (3.12 made this lazy, gh-103200); the ~16 importers over ``pyspark.zip``
-    and its packages cost more CPU per task than the engine's kernels. The
-    wrapper re-reads only when the archive's ``(st_ino, st_size,
-    st_mtime_ns)`` differs from the last re-read; otherwise the importer takes
-    the shared directory that re-read cached. A rebuilt or replaced archive
-    (``addPyFile`` / ``--py-files``) is still re-read. Idempotent; the driver
-    (no active ``TaskContext``) is never patched.
+    A reused worker runs a full ``gc.collect()`` after every task
+    (``pyspark/daemon.py``) and calls ``importlib.invalidate_caches()`` at
+    the start of the next one (``pyspark.worker_util.setup_spark_files``).
+    Left alone, each costs more CPU per task than the engine's kernels:
+
+    - The collect traverses every tracked object, and a worker holding
+      pandas, pyarrow, numpy, ``pyspark.sql`` and the engine tracks ~73k.
+      At a task start the heap holds no cyclic garbage, as that collect has
+      just run, so the hook ``gc.freeze()``-s it there whenever the number
+      of loaded modules changed since the last freeze; later collects skip
+      the frozen objects. Not at import: the package is imported before
+      the kernels' pandas and pyarrow are.
+    - On CPython 3.11 every ``zipimporter`` re-reads the whole central
+      directory of its archive (3.12 made this lazy, gh-103200), and ~16
+      importers sit over ``pyspark.zip`` and its packages. The hook
+      re-reads only when the archive's ``(st_ino, st_size, st_mtime_ns)``
+      differs from the last re-read; otherwise the importer takes the
+      shared directory that re-read cached. A rebuilt or replaced archive
+      (``addPyFile`` / ``--py-files``) is still re-read.
+
+    Both run from the per-task ``zipimporter.invalidate_caches`` call.
+    Idempotent; the driver (no active ``TaskContext``) is never patched.
     """
     import sys
 
     tc = sys.modules.get("pyspark.taskcontext")
     if tc is None or tc.TaskContext.get() is None:
         return
+    import gc
     import os
     import zipimport
 
     cls = zipimport.zipimporter
-    if getattr(cls.invalidate_caches, "stat_keyed", False):
+    if getattr(cls.invalidate_caches, "task_start_hook", False):
         return
     reread = cls.invalidate_caches
     read_at = {}  # archive -> its stat key taken just before its last re-read
+    frozen_at = 0  # len(sys.modules) at the last freeze
 
     def invalidate_caches(self):
+        nonlocal frozen_at
+        if len(sys.modules) != frozen_at:
+            gc.freeze()
+            frozen_at = len(sys.modules)
         try:
             st = os.stat(self.archive)
             key = (st.st_ino, st.st_size, st.st_mtime_ns)
@@ -63,11 +82,11 @@ def _stat_keyed_zip_invalidation() -> None:
         reread(self)
         read_at[self.archive] = key
 
-    invalidate_caches.stat_keyed = True
+    invalidate_caches.task_start_hook = True
     cls.invalidate_caches = invalidate_caches
 
 
-_stat_keyed_zip_invalidation()
+_task_start_hook()
 
 __all__ = [
     "Options",

@@ -23,13 +23,18 @@ from geojson_vt_cpp_spark.functions import kernels as K
 from geojson_vt_cpp_spark.operators import codec
 
 # Vertices one task of a Python-kernel stage is sized to carry. A warm
-# mapInPandas task costs ~0.06 CPU-s however few rows it gets (local[4],
-# process-tree CPU: 4 -> 16 no-op tasks read 1.06 -> 1.75 CPU-s), and the
-# serial clip kernel runs at ~1.1 us per vertex (clip_feature on in-repo
-# us-states: 77 us per feature, 3,539 vertices over 52 features). 2^16
-# vertices are ~0.07 CPU-s of clipping, so a full task does at least as
-# much kernel work as it pays in fixed cost, and a 13-tile pyramid of a
-# few thousand vertices runs every stage on one partition.
+# mapInPandas task costs ~0.02 CPU-s however few rows it gets (local[4],
+# process-tree CPU less the JIT threads, medians of 10: 4 -> 16 no-op
+# engine tasks read 0.175-0.18 -> 0.36-0.415 CPU-s; ~0.055 before the
+# workers froze their heap, when the daemon's full collect after every task
+# traversed it), and the serial clip kernel runs at ~1.1 us per vertex
+# (clip_feature on in-repo us-states: 77 us per feature, 3,539 vertices
+# over 52 features). 2^16 vertices are ~0.07 CPU-s of clipping, so a full
+# task does at least as much kernel work as it pays in fixed cost, and a
+# 13-tile pyramid of a few thousand vertices runs every stage on one
+# partition. At ~0.02 CPU-s, 2^14 vertices would already do as much kernel
+# work as a task pays; re-sizing changes every tile stage's plan and needs
+# a measured change of its own.
 POINTS_PER_PART = 1 << 16
 
 

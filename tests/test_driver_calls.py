@@ -5,11 +5,14 @@ round trip each, and coalesces a level onto its parent's partitions
 without planning it to read a partition count (``clip_stage.fit_parts``).
 Built with the Column builder, a round trip per node, the same warm build
 and append cost ~11.7k and ~10.5k round trips and read ``DataFrame.rdd``
-on five levels each, so the budget below catches per-node expression
+on five levels each, so the budgets below catch per-node expression
 building or a per-level probe returning to the loop. A drill runs the same
 loop; as a second loop that probed every round, the 9-level cold drill
-below read ``DataFrame.rdd`` 9 times and made 1,675 round trips of its own
-thread, the drill budget.
+below read ``DataFrame.rdd`` 9 times. Each budget is the calling thread's
+round trips as measured (build 1,091, append 1,101, drill 1,579 with its
+tile read's sort keys as SQL text): py4j's server thread also sends object
+releases, at times of its own, which moved an all-thread count by ~400 from
+run to run.
 """
 
 from __future__ import annotations
@@ -30,9 +33,10 @@ pytestmark = pytest.mark.spark
 
 # deep enough for an append to reach interior tiles, leaves and new splits
 OPTS = Options(index_max_zoom=4, index_max_points=100)
-MAX_PY4J_CALLS = 2000
+MAX_BUILD_PY4J_CALLS = 1091
+MAX_APPEND_PY4J_CALLS = 1101
 DRILL_TARGET = (9, 80, 190)  # 9 levels below the default index's one tile
-MAX_DRILL_PY4J_CALLS = 1675
+MAX_DRILL_PY4J_CALLS = 1579
 
 
 def _counters(monkeypatch, df_cls, own_thread: bool = False) -> dict:
@@ -69,7 +73,7 @@ def test_warm_build_and_append_driver_calls(spark, monkeypatch):
     # a collected Py4J object is released with a round trip of its own:
     # collect earlier calls' garbage first, so each call pays for its own
     gc.collect()
-    calls = _counters(monkeypatch, type(us))
+    calls = _counters(monkeypatch, type(us), own_thread=True)
     pyr = TilePyramid.from_documents(us, OPTS)
     build = dict(calls)
     gc.collect()
@@ -79,8 +83,9 @@ def test_warm_build_and_append_driver_calls(spark, monkeypatch):
     monkeypatch.undo()
 
     assert len(pyr.stats) == OPTS.index_max_zoom + 1  # every level ran
-    for name, c in (("build", build), ("append", append)):
-        assert c["py4j"] < MAX_PY4J_CALLS, (name, c)
+    for name, c, budget in (("build", build, MAX_BUILD_PY4J_CALLS),
+                            ("append", append, MAX_APPEND_PY4J_CALLS)):
+        assert c["py4j"] <= budget, (name, c)
         # z0 is the one level whose partition count nothing has fixed
         assert c["rdd"] <= 1, (name, c)
 
@@ -94,9 +99,6 @@ def test_warm_cold_drill_driver_calls(spark, monkeypatch):
     pyr = TilePyramid.from_documents(docs, Options())
     assert pyr.total == 1
     gc.collect()
-    # the calling thread's round trips only: py4j's server thread also
-    # sends object releases, at times of its own, which moved an all-thread
-    # count of this drill by ~400 from run to run
     calls = _counters(monkeypatch, type(us), own_thread=True)
     tile = pyr.get_tile(*DRILL_TARGET)
     drill = dict(calls)
@@ -104,7 +106,7 @@ def test_warm_cold_drill_driver_calls(spark, monkeypatch):
 
     assert (tile.z, tile.x, tile.y) == DRILL_TARGET and tile.features
     assert len(pyr.drill_log) == DRILL_TARGET[0]  # one split per level
-    assert drill["py4j"] < MAX_DRILL_PY4J_CALLS, drill
+    assert drill["py4j"] <= MAX_DRILL_PY4J_CALLS, drill
     # a drill's first split is sized from the registry, and every level
     # after it from its parent's partitions
     assert drill["rdd"] <= 1, drill
