@@ -552,6 +552,25 @@ def _tile_mvt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TE.mvt_feature_summary(mvt_df)
 
 
+def _rel_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each purchase's user's most recent click at or before it, through
+    the ENGINE operator (operators/temporal.py as_of_join: tagged union +
+    keyed carry-forward window, clicks before purchases at equal ts, then
+    event_id). Oracle: the dual-dialect rel_events_asof template, the same
+    formula written as SQL."""
+    from geojson_vt_cpp_spark.operators.temporal import as_of_join
+
+    _register_views(spark, sf_dir)
+    events = spark.table("events")
+    clicks = events.where("event_type = 'click'").select("user_id", "ts", "event_id", "value")
+    purchases = events.where("event_type = 'purchase'").select("user_id", "ts", "event_id")
+    return as_of_join(purchases, clicks, "user_id", "ts", prefix="asof_click_").select(
+        F.col("event_id").cast("bigint").alias("purchase_id"),
+        F.col("user_id").cast("bigint").alias("user_id"),
+        F.col("asof_click_value").cast("double").alias("asof_click_value"),
+    )
+
+
 def _stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming windowed aggregate run availableNow over the
     static events table (file source staged to a temp dir); deterministic:
@@ -793,6 +812,7 @@ def _register_python_queries() -> dict[str, Callable[[SparkSession, str], DataFr
                 "dedup_minhash_pairs": _dedup_minhash_pairs,
                 "dedup_minhash_pairs_capped": _dedup_minhash_pairs_capped,
                 "dedup_cross_split_leakage": _dedup_cross_split_leakage,
+                "rel_events_asof": _rel_events_asof,
                 "stream_events_hourly": _stream_events_hourly,
                 "stream_pip_triangles": _stream_pip_triangles,
                 "pyramid_tiles_per_zoom": _pyramid_tiles_per_zoom,

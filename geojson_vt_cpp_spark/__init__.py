@@ -5,8 +5,8 @@ A from-scratch reimplementation of the capabilities of mapbox/geojson-vt-cpp
 Spark engine: columnar ragged-array geometry, vectorized numpy kernels inside
 Arrow-batched ``mapInPandas`` stages, a BFS-per-zoom tile pyramid instead of the
 reference's recursive DFS (``include/mapbox/geojsonvt.hpp:178-258``), and
-spatial-join operators (cell index, point-in-polygon, kNN, raster overlay) the
-reference does not have but the target workload demands.
+spatial-join operators (cell index, point-in-polygon, kNN, distance, bbox
+overlap) the reference does not have but the target workload demands.
 
 Public API mirrors the reference's three entry points
 (``include/mapbox/geojsonvt.hpp:70-150``):
@@ -15,7 +15,8 @@ Public API mirrors the reference's three entry points
   — stateless single-tile slice (``geoJSONToTile``).
 - :class:`geojson_vt_cpp_spark.operators.pyramid.TilePyramid`
   — index build + ``get_tile`` with lazy drill-down (``GeoJSONVT``).
-- :mod:`geojson_vt_cpp_spark.operators.spatial_join` — PIP / kNN / overlay.
+- :mod:`geojson_vt_cpp_spark.operators.spatial_join` — PIP / kNN / distance /
+  bbox overlap.
 """
 
 from geojson_vt_cpp_spark.config import Options, TileOptions, from_id, to_id
@@ -108,16 +109,12 @@ def __getattr__(name):
         "knn_join": "geojson_vt_cpp_spark.operators.spatial_join",
         "distance_join": "geojson_vt_cpp_spark.operators.spatial_join",
         "bbox_overlap_join": "geojson_vt_cpp_spark.operators.spatial_join",
-        "raster_vector_overlay": "geojson_vt_cpp_spark.operators.spatial_join",
         "as_of_join": "geojson_vt_cpp_spark.operators.temporal",
         "jaccard_refine": "geojson_vt_cpp_spark.operators.dedup",
         "minhash_near_dup_pairs": "geojson_vt_cpp_spark.operators.dedup",
         "connected_components": "geojson_vt_cpp_spark.operators.dedup",
         "dedup_clusters": "geojson_vt_cpp_spark.operators.dedup",
         "cross_split_leakage": "geojson_vt_cpp_spark.operators.dedup",
-        "text_chunks": "geojson_vt_cpp_spark.operators.dedup",
-        "changed_tiles": "geojson_vt_cpp_spark.operators.tile_diff",
-        "tile_digests": "geojson_vt_cpp_spark.operators.tile_diff",
         "decode_png": "geojson_vt_cpp_spark.functions.png",
         "decode_wav": "geojson_vt_cpp_spark.functions.wav",
         "documents_from_fixture": "geojson_vt_cpp_spark.sources.documents",

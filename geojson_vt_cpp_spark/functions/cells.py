@@ -7,7 +7,8 @@ floor(x*2^r), floor(y*2^r))`` — a 2r-bit key whose prefixes nest, so
 - equality joins on cell ids give spatial co-location,
 - ``repartitionByRange`` on the key (or a prefix) gives spatial
   partitioning with parquet min/max pruning,
-- the quadkey string prefix at resolution q is the tile address at zoom q.
+- a cell's 2q-bit prefix is its ancestor at resolution q, whose grid
+  indices are the tile address at zoom q.
 
 Everything here is PURE SPARK SQL column arithmetic (shifts/masks unrolled —
 whole-stage-codegen JVM path, no Python), with mirrored numpy and DuckDB-SQL
@@ -122,17 +123,3 @@ def cell_xy_np(cell: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
 
     return compact(cell), compact(cell >> 1)
 
-
-def quadkey(x: Column, y: Column, res: int) -> Column:
-    """Quadkey string (tile address digits) — lexicographic prefixes nest,
-    so ``repartitionByRange(quadkey)`` range-partitions spatially."""
-    ix = grid_index(x, 1 << res)
-    iy = grid_index(y, 1 << res)
-    digits = [
-        (
-            F.shiftright(ix, r).bitwiseAND(F.lit(1))
-            + F.shiftleft(F.shiftright(iy, r).bitwiseAND(F.lit(1)), 1)
-        ).cast("string")
-        for r in range(res - 1, -1, -1)
-    ]
-    return F.concat(*digits).alias(f"quadkey_r{res}")

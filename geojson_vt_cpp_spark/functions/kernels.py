@@ -685,23 +685,9 @@ def clip_feature(
     return [out]
 
 
-def shift_x(g: Geom, offset: float) -> Geom:
-    """Antimeridian world-copy shift (wrap.hpp:10-17)."""
-    pts = g.pts.copy()
-    pts[:, 0] += offset
-    return Geom(
-        g.gtype, pts, g.part_lens, g.part_meta, g.seg_start, g.seg_end, g.poly_lens
-    )
-
-
 # ---------------------------------------------------------------------------
 # tile quantization + emit filters (tile.hpp)
 # ---------------------------------------------------------------------------
-
-def _c_round(v: np.ndarray) -> np.ndarray:
-    """C ``round``: half away from zero (np.rint is half-even — wrong here)."""
-    return np.trunc(v + np.copysign(0.5, v))
-
 
 # Parts below this length take the scalar quantize walk in transform_tile;
 # numpy keeps longer ones. Bit-identical either way (Python float ops are the

@@ -46,31 +46,3 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
         )
     return arr.reshape(-1, nch), rate
 
-
-def encode_wav(
-    samples: np.ndarray, sample_rate: int, sample_width: int = 2
-) -> bytes:
-    """(n_frames,) or (n_frames, n_channels) int16 -> PCM WAV bytes.
-    ``sample_width`` 2 writes the int16 samples as-is; 3/4 widen them into
-    24/32-bit PCM (low bytes zero) for decoder round-trip tests."""
-    samples = np.ascontiguousarray(samples, dtype=np.int16)
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    if sample_width == 2:
-        raw = samples.tobytes()
-    elif sample_width == 3:
-        lo = samples.astype("<i2").view(np.uint8).reshape(-1, 2)
-        raw = np.concatenate(
-            [np.zeros((lo.shape[0], 1), dtype=np.uint8), lo], axis=1
-        ).tobytes()
-    elif sample_width == 4:
-        raw = (samples.astype("<i4") << 16).tobytes()
-    else:
-        raise ValueError(f"sample_width {sample_width} not supported (2/3/4)")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(samples.shape[1])
-        w.setsampwidth(sample_width)
-        w.setframerate(sample_rate)
-        w.writeframes(raw)
-    return buf.getvalue()

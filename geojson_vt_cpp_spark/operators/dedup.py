@@ -1,21 +1,19 @@
-"""Training-data operators as a DataFrame API: deduplication, similarity,
-text analysis.
+"""Training-data operators as a DataFrame API: deduplication and similarity.
 
-Each operator delegates to the dual-dialect SQL templates in
+The signature stages delegate to the dual-dialect SQL templates in
 :mod:`geojson_vt_cpp_spark.functions.dialect_sql` — fully declarative Spark
-SQL (Catalyst plans everything: the minhash explode is a Generate, the band
-join an ordinary equi-join it can broadcast or skew-split), with DuckDB
-oracle parity guaranteed by construction.
+SQL (Catalyst plans everything: the minhash explode is a Generate), with
+DuckDB oracle parity guaranteed by construction; the pair, refinement and
+clustering stages compose them as DataFrame joins and aggregates. The text
+analysis templates (lang-id, quality, tf-idf, chunks, ...) run as SQL
+queries only.
 
 Scale notes (10^12 docs):
-- exact dedup: hash-groupBy, map-side combine free;
 - minhash/LSH: shingle explode is narrow; the band self-join shuffles on
   (band values) — salted by band index by construction (two bands = two
   joins unioned), AQE handles residual hot buckets;
 - simhash: bit votes are a two-level aggregate (partial aggregation does
-  the heavy lifting before the shuffle);
-- embedding near-dup: hyperplane-LSH buckets bound the candidate pairs;
-  exact cosine refines only bucket mates.
+  the heavy lifting before the shuffle).
 
 Round 2 adds the clustering stage a production dedup runs after candidate
 generation: ``connected_components`` (iterative min-label propagation over
@@ -47,11 +45,6 @@ def _run(df: DataFrame, view: str, name: str, text_col: str = "text",
     sel.createOrReplaceTempView(tmp)
     sql = D.queries_sql("spark")[name].replace("documents", tmp)
     return df.sparkSession.sql(sql)
-
-
-def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, text_hash, n_copies) — exact duplicates share a hash."""
-    return _run(docs, "dedup_exact", "dedup_exact", text_col, id_col)
 
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -148,11 +141,6 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     return _run(docs, "simhash", "dedup_simhash", text_col, id_col)
 
 
-def ngram_jaccard(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact char-4-gram Jaccard over deterministic candidate pairs."""
-    return _run(docs, "jaccard", "dedup_ngram_jaccard", text_col, id_col)
-
-
 def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """SimHash near-dup pairs: 4x4-bit Hamming-LSH bands (guaranteed
     complete for distance <= 3 by pigeonhole) refined by exact popcount —
@@ -184,12 +172,6 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
             F.expr("cast(bit_count(sh_a ^ sh_b) as int)").alias("hamming"),
         )
     )
-
-
-def tfidf_top_terms(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-document top-3 distinctive terms by tf-idf (deterministic
-    rounded-score + term tie-break)."""
-    return _run(docs, "tfidf", "text_tfidf_top_terms", text_col, id_col)
 
 
 def jaccard_refine(
@@ -266,41 +248,6 @@ def jaccard_refine(
     )
 
 
-def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Marker-word language guess + per-language scores."""
-    return _run(docs, "langid", "text_lang_id", text_col, id_col)
-
-
-def quality_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Length / token / stopword quality features + combined score."""
-    return _run(docs, "quality", "text_quality_score", text_col, id_col)
-
-
-def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Whitespace-token counts, distinct tokens, length extremes."""
-    return _run(docs, "tokens", "text_token_stats", text_col, id_col)
-
-
-def fingerprint(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Normalized-text fingerprints (md5 + portable 60-bit)."""
-    return _run(docs, "fp", "text_fingerprint", text_col, id_col)
-
-
-def keep_corpus(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Post-dedup corpus selection: one keeper per simhash bucket."""
-    return _run(docs, "keep", "dedup_keep_corpus", text_col, id_col)
-
-
-def train_split(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Deterministic train/val assignment (portable doc-id hash), per-split stats."""
-    return _run(docs, "split", "text_train_split", text_col, id_col)
-
-
-def quality_filter(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Composite quality gate: per-doc features + keep_flag."""
-    return _run(docs, "qfilter", "text_quality_filter", text_col, id_col)
-
-
 def cross_split_leakage(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Train/val decontamination: near-dup candidate pairs (minhash LSH
     bands) that STRADDLE the deterministic split — (doc_a, doc_b, split_a,
@@ -322,22 +269,6 @@ def cross_split_leakage(docs: DataFrame, text_col: str = "text", id_col: str = "
         .where(F.col("split_a") != F.col("split_b"))
         .select("doc_a", "doc_b", "split_a", "split_b")
     )
-
-
-def text_chunks(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Overlapping training chunks: 200-char windows, stride 150, last
-    partial window kept — (doc_id, chunk_idx, chunk_text, chunk_chars).
-    The explode is narrow (no shuffle); chunking feeds tokenize/embed
-    stages downstream."""
-    return _run(docs, "chunks", "text_chunks", text_col, id_col)
-
-
-def _run_emb(df: DataFrame, name: str, vec_col: str = "embedding",
-             id_col: str = "vec_id") -> DataFrame:
-    tmp = f"emb_{uuid.uuid4().hex[:8]}"
-    df.selectExpr(f"{id_col} as vec_id", f"{vec_col} as embedding").createOrReplaceTempView(tmp)
-    sql = D.queries_sql("spark")[name].replace("embeddings", tmp)
-    return df.sparkSession.sql(sql)
 
 
 def cosine_top_k(embs: DataFrame, k: int = 10, vec_col: str = "embedding",
@@ -362,22 +293,6 @@ def cosine_top_k(embs: DataFrame, k: int = 10, vec_col: str = "embedding",
     return topk.withColumn("sim_rank", F.row_number().over(w)).select(
         "vec_id", "cosine", "sim_rank"
     )
-
-
-def lsh_buckets(embs: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
-    """8-bit random-hyperplane LSH bucket per vector (ANN scale path)."""
-    return _run_emb(embs, "sim_lsh_buckets", vec_col, id_col)
-
-
-def ann_bucket_top_k(embs: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
-    """All-pairs ANN: per-vector top-2 among LSH bucket mates (window
-    partitioned per vector; candidates bounded by the bucket size)."""
-    return _run_emb(embs, "sim_ann_bucket_topk", vec_col, id_col)
-
-
-def embedding_near_dup(embs: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
-    """LSH-bucketed candidate pairs refined by exact cosine threshold."""
-    return _run_emb(embs, "dedup_embedding_neardup", vec_col, id_col)
 
 
 def connected_components(

@@ -1,4 +1,4 @@
-"""Spatial-join operators: point-in-polygon, kNN, raster<->vector overlay.
+"""Spatial-join operators: point-in-polygon, kNN, distance and bbox overlap.
 
 North-rule operators with no reference implementation (the reference is a
 tiler; its only lookup is the tile-id hash probe, geojsonvt.hpp:117-150).
@@ -536,29 +536,3 @@ def bbox_overlap_join(
     )
     return joined.where(overlap & responsible).select(aid, bid)
 
-
-# ---------------------------------------------------------------------------
-# raster <-> vector overlay
-# ---------------------------------------------------------------------------
-
-def raster_tiles_from_documents(docs_df: DataFrame) -> DataFrame:
-    """media spans ('raster://{z}/{x}/{y}.png') -> raster tile table."""
-    spans = docs_df.select("doc_id", F.posexplode("spans").alias("span_idx", "span"))
-    m = spans.where(F.col("span.kind") == "media").select(
-        "doc_id",
-        "span_idx",
-        F.col("span.media_ref").alias("media_ref"),
-        F.regexp_extract("span.media_ref", r"raster://(\d+)/(\d+)/(\d+)", 1).cast("int").alias("z"),
-        F.regexp_extract("span.media_ref", r"raster://(\d+)/(\d+)/(\d+)", 2).cast("long").alias("tx"),
-        F.regexp_extract("span.media_ref", r"raster://(\d+)/(\d+)/(\d+)", 3).cast("long").alias("ty"),
-    )
-    return m.where(F.col("media_ref") != "")
-
-
-def raster_vector_overlay(raster_df: DataFrame, tile_features_df: DataFrame) -> DataFrame:
-    """Equi-join raster tiles to vector tile features on the pyramid address
-    (tile-id codec Q2, geojsonvt.hpp:66-68) — a plain broadcast/shuffle join
-    Catalyst plans freely."""
-    return raster_df.alias("r").join(
-        tile_features_df.alias("t"), ["z", "tx", "ty"], "inner"
-    )

@@ -4,9 +4,9 @@ Spark has no native as-of join; the scale-safe formulation is the tagged
 union + keyed carry-forward window (`last(value, ignoreNulls=True)` over
 rows unbounded-preceding): one shuffle on the key, per-key sorted scan, no
 range join, no broadcast requirement, state bounded by the partition. The
-same formula renders to the DuckDB oracle via
-:func:`geojson_vt_cpp_spark.functions.dialect_sql.last_ignore_nulls`
-(`rel_events_asof`).
+driver query `rel_events_asof` runs through it; its DuckDB oracle is the
+same formula written as SQL, with
+:func:`geojson_vt_cpp_spark.functions.dialect_sql.last_ignore_nulls`.
 
 Tie policy: right rows sort BEFORE left rows at equal timestamps, so a
 right row exactly at the left's time matches ("at or before", pandas

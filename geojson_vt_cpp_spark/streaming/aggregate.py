@@ -1,29 +1,21 @@
-"""Streaming aggregation + custom stateful sessionization over the events
-stream (Structured Streaming axis of the north rule's pipeline surface).
+"""Streaming aggregation over the events stream (Structured Streaming axis
+of the north rule's pipeline surface).
 
-- ``stream_events_hourly``: watermarked tumbling-window count/sum. With an
-  ``availableNow`` run over a static source this is deterministic and equal
-  to the batch GROUP BY — which is how the driver oracle checks it
-  (``stream_events_hourly`` in ``__spark_entry__``); in continuous mode the
-  watermark bounds state and drops rows later than ``late_threshold``.
-- ``stream_sessionize``: applyInPandasWithState session windows per user —
-  the 'custom stateful operator' slot. State = (open-session start, last ts,
-  event count); a gap > ``gap`` closes the session; processing-time timeout
-  flushes idle users. Arrow-batched per group, numpy inside.
+``stream_events_hourly``: watermarked tumbling-window count/sum. With an
+``availableNow`` run over a static source this is deterministic and equal to
+the batch GROUP BY — which is how the driver oracle checks it
+(``stream_events_hourly`` in ``__spark_entry__``); in continuous mode the
+watermark bounds state and drops rows later than ``late_threshold``.
 
-Scale shape: both are keyed-state operators — state is partitioned by the
-grouping key across executors, and the watermark/timeout bound its size;
-nothing accumulates on the driver.
+Scale shape: a keyed-state operator — state is partitioned by the grouping
+key across executors, and the watermark bounds its size; nothing
+accumulates on the driver.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
 def stream_events_hourly(
@@ -51,91 +43,3 @@ def stream_events_hourly(
         )
     )
 
-
-SESSION_SCHEMA = (
-    "user_id long, session_start timestamp, session_end timestamp, n_events int"
-)
-_STATE_SCHEMA = "start long, last long, n int"
-
-
-GAP_US = 1_800_000_000  # 30 min, matches rel_events_sessions
-
-
-def _session_rows(rows: list[tuple]) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "user_id": [r[0] for r in rows],
-            "session_start": [pd.Timestamp(r[1], unit="us") for r in rows],
-            "session_end": [pd.Timestamp(r[2], unit="us") for r in rows],
-            "n_events": [r[3] for r in rows],
-        }
-    )
-
-
-def make_sessionizer(timeout_ms: int | None):
-    """Build the per-group kernel; ``timeout_ms`` arms a processing-time
-    flush of idle users (None disables — deterministic availableNow runs)."""
-
-    def sessionize_group(
-        key: Any,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        (user_id,) = key
-        if state.hasTimedOut:
-            if state.exists:
-                start, last, n = state.get
-                state.remove()
-                yield _session_rows([(user_id, start, last, n)])
-            return
-        ts_all = np.sort(
-            np.concatenate(
-                [pdf["ts"].astype("datetime64[us]").to_numpy().astype("int64") for pdf in pdfs]
-            )
-        )
-        if state.exists:
-            start, last, n = state.get
-        else:
-            start, last, n = int(ts_all[0]), int(ts_all[0]) - 1, 0
-        out = []
-        for t in ts_all:
-            t = int(t)
-            if n and t - last > GAP_US:
-                out.append((user_id, start, last, n))
-                start, n = t, 0
-            n += 1
-            last = t
-        state.update((start, last, n))
-        if timeout_ms is not None:
-            state.setTimeoutDuration(timeout_ms)
-        if out:
-            yield _session_rows(out)
-
-    return sessionize_group
-
-
-def stream_sessionize(
-    events_stream: DataFrame, timeout_ms: int | None = 60_000
-) -> DataFrame:
-    """Custom stateful operator: per-user 30-minute-gap sessions via
-    applyInPandasWithState. With ``timeout_ms`` set, a processing-time
-    timeout flushes each idle user's trailing open session; ``None``
-    disables the flush (closed sessions only — deterministic for
-    availableNow replays)."""
-    return (
-        events_stream.select("user_id", F.col("ts").cast("timestamp").alias("ts"))
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            make_sessionizer(timeout_ms),
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_ms is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )

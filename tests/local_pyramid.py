@@ -72,15 +72,24 @@ def clip_feats(feats, axis, k1, k2, line_metrics):
     return out
 
 
+def shift_x(g: K.Geom, offset: float) -> K.Geom:
+    """Antimeridian world-copy shift (wrap.hpp:10-17)."""
+    pts = g.pts.copy()
+    pts[:, 0] += offset
+    return K.Geom(
+        g.gtype, pts, g.part_lens, g.part_meta, g.seg_start, g.seg_end, g.poly_lens
+    )
+
+
 def wrap(feats, buffer, line_metrics):
     left = clip_feats(feats, 0, -1 - buffer, buffer, line_metrics)
     right = clip_feats(feats, 0, 1 - buffer, 2 + buffer, line_metrics)
     if not left and not right:
         return feats
     merged = clip_feats(feats, 0, -buffer, 1 + buffer, line_metrics)
-    out = [Feat(K.shift_x(f.geom, 1.0), f.props_json, f.fid, f.id_kind) for f in left]
+    out = [Feat(shift_x(f.geom, 1.0), f.props_json, f.fid, f.id_kind) for f in left]
     out += merged
-    out += [Feat(K.shift_x(f.geom, -1.0), f.props_json, f.fid, f.id_kind) for f in right]
+    out += [Feat(shift_x(f.geom, -1.0), f.props_json, f.fid, f.id_kind) for f in right]
     return out
 
 

@@ -1,10 +1,14 @@
-"""DataFrame-API wrappers over the training-data operators: results must be
-identical to the dual-dialect SQL the oracle harness already validates."""
+"""The training-data operators' DataFrame API, and the dual-dialect SQL
+templates the oracle harness validates, run over custom inputs through the
+operators' own SQL runner."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
+from geojson_vt_cpp_spark.functions import dialect_sql as D
 from geojson_vt_cpp_spark.operators import dedup as DD
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -22,18 +26,30 @@ def embs(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
 
+def _sql(docs, name: str):
+    """Template ``name`` over ``docs`` (doc_id, text[, lang])."""
+    return DD._run(docs, "t", name)
+
+
+def _sql_emb(embs, name: str):
+    """Template ``name`` over ``embs`` (vec_id, embedding)."""
+    tmp = f"emb_{uuid.uuid4().hex[:8]}"
+    embs.select("vec_id", "embedding").createOrReplaceTempView(tmp)
+    return embs.sparkSession.sql(D.queries_sql("spark")[name].replace("embeddings", tmp))
+
+
 def test_text_operators_run_and_agree(spark, docs):
     n = docs.count()
-    assert DD.dedup_exact(docs).count() == n
+    assert _sql(docs, "dedup_exact").count() == n
     sig = DD.minhash_signatures(docs)
     assert sig.count() == n and set(sig.columns) == {"doc_id", "mh0", "mh1", "mh2", "mh3"}
     assert DD.simhash(docs).count() == n
-    assert DD.lang_id(docs).count() == n
-    assert DD.quality_score(docs).count() == n
-    assert DD.token_stats(docs).count() == n
-    fp = DD.fingerprint(docs)
+    assert _sql(docs, "text_lang_id").count() == n
+    assert _sql(docs, "text_quality_score").count() == n
+    assert _sql(docs, "text_token_stats").count() == n
+    fp = _sql(docs, "text_fingerprint")
     assert fp.select("fingerprint").distinct().count() == n  # no dups at sf0.01
-    assert DD.ngram_jaccard(docs).count() > 0
+    assert _sql(docs, "dedup_ngram_jaccard").count() > 0
 
 
 def test_simhash_pairs_exhaustive_completeness(spark, docs):
@@ -63,7 +79,7 @@ def test_tfidf_top_terms_hand_computed(spark):
     )
     got = {
         (r["doc_id"], r["term_rank"]): (r["term"], r["tfidf"])
-        for r in DD.tfidf_top_terms(docs).collect()
+        for r in _sql(docs, "text_tfidf_top_terms").collect()
     }
     ln3 = round(math.log(3.0), 6)
     assert got == {
@@ -77,8 +93,6 @@ def test_cross_split_leakage_straddles_only(spark, docs):
     """Decontamination: every reported pair is a minhash candidate whose
     endpoints land in DIFFERENT deterministic splits — and the set equals
     the brute composition of the two underlying queries."""
-    from geojson_vt_cpp_spark.functions import dialect_sql as D
-
     docs.createOrReplaceTempView("documents")
     spark_sqls = D.queries_sql("spark")
     pairs = {
@@ -113,7 +127,7 @@ def test_text_chunks_windows(spark):
     )
     got = {
         (r["doc_id"], r["chunk_idx"]): r["chunk_chars"]
-        for r in DD.text_chunks(docs).collect()
+        for r in _sql(docs, "text_chunks").collect()
     }
     # len 500: idx 0 [1..200], 1 [151..350], 2 [301..500], 3 [451..500]
     assert got == {
@@ -193,8 +207,6 @@ def test_jaccard_refine_randomized_vs_python(spark):
 def test_minhash_jaccard_chain_matches_declarative_twin(spark, docs):
     """The chained operator (minhash pairs -> jaccard_refine) must equal
     the declarative dual-dialect template run through Spark SQL."""
-    from geojson_vt_cpp_spark.functions import dialect_sql as D
-
     docs.createOrReplaceTempView("documents")
     want = {
         tuple(r) for r in spark.sql(D.minhash_jaccard_sql("spark")).collect()
@@ -219,21 +231,21 @@ def test_embedding_operators(spark, embs):
     topk = topk_df.collect()
     assert len(topk) == 10
     assert [r["sim_rank"] for r in sorted(topk, key=lambda r: r["sim_rank"])] == list(range(1, 11))
-    assert DD.lsh_buckets(embs).count() == embs.count()
-    nd = DD.embedding_near_dup(embs)
+    assert _sql_emb(embs, "sim_lsh_buckets").count() == embs.count()
+    nd = _sql_emb(embs, "dedup_embedding_neardup")
     assert nd.count() > 0
     assert all(r["cosine"] >= 0.35 for r in nd.collect())
 
 
 def test_pipeline_composition_operators(spark, docs, embs):
     n = docs.count()
-    kept = DD.keep_corpus(docs)
+    kept = _sql(docs, "dedup_keep_corpus")
     assert 0 < kept.count() < n  # simhash buckets genuinely merge
-    splits = {r["split"]: r["n_docs"] for r in DD.train_split(docs).collect()}
+    splits = {r["split"]: r["n_docs"] for r in _sql(docs, "text_train_split").collect()}
     assert set(splits) == {"train", "val"} and sum(splits.values()) == n
-    qf = DD.quality_filter(docs)
+    qf = _sql(docs, "text_quality_filter")
     assert qf.count() == n and set(qf.columns) >= {"doc_id", "keep_flag"}
-    ann = DD.ann_bucket_top_k(embs)
+    ann = _sql_emb(embs, "sim_ann_bucket_topk")
     rows = ann.collect()
     assert all(1 <= r["ann_rank"] <= 2 for r in rows)
     per_vec = {}
@@ -244,7 +256,7 @@ def test_pipeline_composition_operators(spark, docs, embs):
 
 def test_custom_column_names(spark, docs):
     renamed = docs.selectExpr("doc_id as id", "text as body", "lang")
-    out = DD.dedup_exact(renamed, text_col="body", id_col="id")
+    out = DD.minhash_signatures(renamed, text_col="body", id_col="id")
     assert out.count() == docs.count()
 
 

@@ -159,10 +159,21 @@ def test_clip_points():
 # --- quantization rounding (tile.hpp:136-140, C round semantics) ------------
 
 def test_c_round_half_away_from_zero():
+    """transform_tile rounds like C ``round`` (half away from zero; np.rint
+    is half-even) on both live walks: a part shorter than
+    ``_TRANSFORM_NP_MIN`` takes the scalar walk, a longer one the numpy
+    chain. At z0 with extent 4096 every coordinate lands exactly on ``v``."""
     v = np.array([0.5, 1.5, 2.5, -0.5, -1.5, -2.5, 0.49999, -0.49999, 0.0])
-    np.testing.assert_array_equal(
-        K._c_round(v), [1, 2, 3, -1, -2, -3, 0, 0, 0]
-    )
+    want = [1, 2, 3, -1, -2, -3, 0, 0, 0]
+    for reps in (1, K._TRANSFORM_NP_MIN // len(v) + 1):
+        n = len(v) * reps
+        assert (n < K._TRANSFORM_NP_MIN) == (reps == 1)
+        pts = np.zeros((n, 3))
+        pts[:, 0] = np.tile(v, reps) / 4096
+        pts[:, 1] = -pts[:, 0]
+        g = K.Geom(K.GT_MULTIPOINT, pts, np.array([n], np.int32))
+        out, _ = K.transform_tile(g, 1.0, 0, 0, 4096, 0.0, False)
+        assert out.parts == [(want * reps, [-w for w in want] * reps)]
 
 
 def test_projection_poles():

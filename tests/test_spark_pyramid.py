@@ -17,6 +17,7 @@ from geojson_vt_cpp_spark.sources.documents import (
 )
 
 from .golden_utils import (
+    DATELINE_GEOJSON,
     compare_tiles,
     load_fixture,
     load_golden_tiles,
@@ -150,6 +151,34 @@ def test_spark_one_shot_clips(spark):
     )
     assert len(rows) == 2
     assert json.loads(rows[0]["props_json"])["name"] == "District of Columbia"
+
+
+@pytest.mark.parametrize("line_metrics", [False, True])
+def test_spark_one_shot_wrap_matches_mirror(spark, line_metrics):
+    """The one-shot ``wrap=True`` path (extract -> wrap_features -> the two
+    fixed-window clips -> quantize) equals the local geoJSONToTile mirror
+    with wrap and clip on, over the antimeridian-crossing inputs: the z0
+    tile and the edge columns x = 0 and x = 2^z - 1 at z1-z2, in the row of
+    tiles the inputs lie in (y = 0 at z1, y = 1 at z2). Each tile is one
+    job of ~40 Python nodes (the staged plan is not checkpointed), so the
+    targets are kept to these five."""
+    from geojson_vt_cpp_spark.operators import codec
+    from geojson_vt_cpp_spark.operators.pyramid import _rows_to_features
+
+    from .local_pyramid import geojson_to_tile
+
+    docs = documents_from_fixture(spark, DATELINE_GEOJSON, "dateline")
+    opts = TileOptions(line_metrics=line_metrics)
+    for z, x, y in [(0, 0, 0), (1, 0, 0), (1, 1, 0), (2, 0, 1), (2, 3, 1)]:
+        rows = (
+            geojson_to_tile_df(docs, z, x, y, opts, wrap=True, clip=True)
+            .orderBy(*codec.SORT_KEYS)
+            .collect()
+        )
+        want = geojson_to_tile(DATELINE_GEOJSON, z, x, y, opts, wrap_=True, clip=True)
+        feats, nsimp = _rows_to_features(rows)
+        assert feats == want.features and feats, (z, x, y)
+        assert nsimp == want.num_simplified, (z, x, y)
 
 
 def test_spark_error_paths(spark):

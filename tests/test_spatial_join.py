@@ -1,21 +1,17 @@
 """Spatial-join operators vs in-memory brute-force oracles (FIXTURES.md §4):
 point-in-polygon over the us-states polygons, kNN vs exhaustive sort,
-raster<->vector overlay vs direct equi-join, cell-id codec roundtrips."""
+cell-id codec roundtrips."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from geojson_vt_cpp_spark.config import Options
 from geojson_vt_cpp_spark.functions import cells as C
 from geojson_vt_cpp_spark.operators.convert import extract_features
-from geojson_vt_cpp_spark.operators.pyramid import TilePyramid
 from geojson_vt_cpp_spark.operators.spatial_join import (
     knn_join,
     point_in_polygon_join,
-    raster_tiles_from_documents,
-    raster_vector_overlay,
 )
 from geojson_vt_cpp_spark.sources.documents import documents_from_fixture
 
@@ -281,18 +277,3 @@ def test_knn_ring_fallback_exact_no_site_broadcast(spark):
     for r in got_all:
         per_q.setdefault(r["query_id"], []).append(r["site_id"])
     assert all(sorted(v) == ["s0000", "s0001", "s0002"] for v in per_q.values())
-
-
-def test_raster_vector_overlay(spark):
-    docs = documents_from_fixture(spark, load_fixture("us-states.json"), "us-states")
-    pyr = TilePyramid.from_documents(docs, Options(index_max_zoom=7, index_max_points=200, max_zoom=14))
-    rast = raster_tiles_from_documents(docs)
-    tf = pyr.tile_features()
-    got = raster_vector_overlay(rast, tf)
-    # oracle: plain equi-join row count computed independently
-    want = (
-        rast.join(tf, ["z", "tx", "ty"]).count()
-    )
-    assert got.count() == want
-    assert want > 0
-    pyr.close()

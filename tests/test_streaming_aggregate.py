@@ -1,20 +1,15 @@
-"""Streaming windowed aggregation (watermark) + stateful sessionization
-(applyInPandasWithState) — availableNow runs over the static events table,
-checked against batch recomputations of the same semantics."""
+"""Streaming windowed aggregation (watermark) — an availableNow run over the
+static events table checked against the batch recomputation of the same
+semantics, and real processing-time triggers dropping late rows."""
 
 from __future__ import annotations
 
-import os
 import shutil
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from geojson_vt_cpp_spark.streaming.aggregate import (
-    stream_events_hourly,
-    stream_sessionize,
-)
+from geojson_vt_cpp_spark.streaming.aggregate import stream_events_hourly
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -81,76 +76,6 @@ def test_stream_hourly_matches_batch_up_to_watermark(spark, events_stream_dir, t
     }
     assert got_map == want
     assert len(got_map) > 50  # non-trivial window count actually emitted
-
-
-def test_stream_sessionize_closed_sessions_match_pandas(spark, events_stream_dir, tmp_path):
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    schema = events.schema
-    stream = spark.readStream.schema(schema).parquet(events_stream_dir)
-    # timeout disabled: closed sessions only — deterministic regardless of
-    # wall time (the timeout flush path is unit-tested below)
-    got = _run_available_now(
-        spark, stream_sessionize(stream, timeout_ms=None), "sess_sink", str(tmp_path / "ck2")
-    ).collect()
-
-    # pandas reference: per-user 30-min-gap sessions; ONLY closed sessions
-    # (append mode leaves each user's trailing session in state)
-    pdf = events.select("user_id", "ts").toPandas()
-    want = set()
-    for uid, grp in pdf.groupby("user_id"):
-        ts = sorted(grp["ts"].astype("datetime64[us]").tolist())
-        start, last, n = ts[0], ts[0], 1
-        for t in ts[1:]:
-            if (t - last).total_seconds() * 1e6 > 1_800_000_000:
-                want.add((uid, start, last, n))
-                start, n = t, 0
-            n += 1
-            last = t
-        # trailing open session NOT expected in append output
-    got_set = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in got
-    }
-    assert got_set == want
-    assert len(got_set) > 100  # the sf0.01 events table closes many sessions
-
-
-def test_sessionize_timeout_flushes_open_session():
-    """Unit test of the timed-out branch: a stub GroupState with an open
-    session must be flushed as one session row and removed."""
-    from geojson_vt_cpp_spark.streaming.aggregate import make_sessionizer
-
-    class StubState:
-        def __init__(self, value):
-            self._v = value
-            self.hasTimedOut = True
-            self.removed = False
-
-        @property
-        def exists(self):
-            return self._v is not None and not self.removed
-
-        @property
-        def get(self):
-            return self._v
-
-        def remove(self):
-            self.removed = True
-
-    kern = make_sessionizer(timeout_ms=1000)
-    start, last = 1_700_000_000_000_000, 1_700_000_900_000_000
-    state = StubState((start, last, 7))
-    out = list(kern((42,), iter(()), state))
-    assert state.removed
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert (row["user_id"], row["n_events"]) == (42, 7)
-    assert row["session_start"] == pd.Timestamp(start, unit="us")
-    assert row["session_end"] == pd.Timestamp(last, unit="us")
-
-    # empty state times out -> nothing emitted
-    empty = StubState(None)
-    assert list(kern((43,), iter(()), empty)) == []
 
 
 # ------------------------------------------------------------------ real
@@ -241,55 +166,3 @@ def test_stream_hourly_drops_late_rows_real_triggers(spark, tmp_path):
     assert list(spark.table("rt_hourly").columns) == [
         "event_type", "hour_bucket", "n_events", "sum_value"
     ]
-
-
-def test_stream_sessionize_timeout_flush_real_triggers(spark, tmp_path):
-    """ProcessingTimeTimeout under REAL triggers: an idle user's open
-    session flushes through a live multi-batch query (not the unit-tested
-    kernel branch) once the timeout elapses and a later batch runs."""
-    import datetime as dt
-
-    src = str(tmp_path / "in")
-    ck = str(tmp_path / "ck")
-    t0 = dt.datetime(2024, 1, 1, 12, 0)
-    # batch 1: user 1's open session (3 events inside the 30-min gap)
-    _write_events(spark, src, [
-        (1, t0, "click", 1.0),
-        (1, t0 + dt.timedelta(minutes=1), "click", 1.0),
-        (1, t0 + dt.timedelta(minutes=2), "click", 1.0),
-    ])
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp_ntz, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream_sessionize(stream, timeout_ms=1500)
-        .writeStream.format("memory")
-        .queryName("rt_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", ck)
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        assert _wait_until(
-            lambda: any(p["numInputRows"] > 0 for p in q.recentProgress)
-        ), "first batch never ran"
-        import time
-
-        time.sleep(2.5)  # let user 1's 1.5 s processing-time timeout expire
-        # a later batch (different user) arms the timeout sweep
-        _write_events(spark, src, [(999, t0, "click", 1.0)])
-        assert _wait_until(
-            lambda: spark.sql(
-                "select * from rt_sessions where user_id = 1"
-            ).count() == 1
-        ), "idle user's open session was not timeout-flushed"
-    finally:
-        q.stop()
-    row = spark.sql("select * from rt_sessions where user_id = 1").first()
-    assert row["n_events"] == 3
-    assert (row["session_end"] - row["session_start"]).total_seconds() == 120.0

@@ -1,5 +1,5 @@
-"""Streaming ingest + physical-plan assertions (pushdown, broadcast,
-spatial range partitioning)."""
+"""Streaming ingest + physical-plan assertions (parquet pushdown on a
+range-partitioned cell column)."""
 
 from __future__ import annotations
 
@@ -9,17 +9,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from geojson_vt_cpp_spark.functions import cells as C
-from geojson_vt_cpp_spark.plans import (
-    explain_str,
-    is_broadcast_join,
-    spatial_repartition,
-)
 from geojson_vt_cpp_spark.sources.documents import docs_rows_from_fixture
 from geojson_vt_cpp_spark.streaming.ingest import stream_extract_features
 
 from .golden_utils import load_fixture
 
 pytestmark = pytest.mark.spark
+
+
+def explain_str(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
 def test_stream_extract_features(spark, tmp_path):
@@ -85,7 +84,7 @@ def test_parquet_pushdown_on_cell_column(spark, tmp_path):
         ((F.col("id") * 2246822519) % 99989 / 99989.0).alias("py"),
     )
     df = df.withColumn("cell", C.cell_id(F.col("px"), F.col("py"), 10))
-    spatial_repartition(df, "cell", 16).write.mode("overwrite").parquet(path)
+    df.repartitionByRange(16, "cell").write.mode("overwrite").parquet(path)
 
     back = spark.read.parquet(path).where(F.col("cell") < 1000)
     plan = explain_str(back)
@@ -94,13 +93,6 @@ def test_parquet_pushdown_on_cell_column(spark, tmp_path):
     # rows than a full scan would (verified via count correctness here; file
     # pruning itself is a parquet min/max effect visible in metrics)
     assert back.count() == df.where(F.col("cell") < 1000).count()
-
-
-def test_broadcast_join_is_planned(spark):
-    big = spark.range(10000).select(F.col("id"), (F.col("id") % 100).alias("k"))
-    small = spark.range(100).select(F.col("id").alias("k"), F.lit("x").alias("v"))
-    j = big.join(F.broadcast(small), "k")
-    assert is_broadcast_join(j)
 
 
 def test_stream_pip_multibatch_matches_batch(spark, tmp_path):

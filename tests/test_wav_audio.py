@@ -4,10 +4,42 @@ for the new mm_audio_features query."""
 
 from __future__ import annotations
 
+import io
+import wave
+
 import numpy as np
 import pytest
 
-from geojson_vt_cpp_spark.functions.wav import decode_wav, encode_wav
+from geojson_vt_cpp_spark.functions.wav import decode_wav
+
+
+def encode_wav(
+    samples: np.ndarray, sample_rate: int, sample_width: int = 2
+) -> bytes:
+    """(n_frames,) or (n_frames, n_channels) int16 -> PCM WAV bytes.
+    ``sample_width`` 2 writes the int16 samples as-is; 3/4 widen them into
+    24/32-bit PCM (low bytes zero) for decoder round-trip tests."""
+    samples = np.ascontiguousarray(samples, dtype=np.int16)
+    if samples.ndim == 1:
+        samples = samples[:, None]
+    if sample_width == 2:
+        raw = samples.tobytes()
+    elif sample_width == 3:
+        lo = samples.astype("<i2").view(np.uint8).reshape(-1, 2)
+        raw = np.concatenate(
+            [np.zeros((lo.shape[0], 1), dtype=np.uint8), lo], axis=1
+        ).tobytes()
+    elif sample_width == 4:
+        raw = (samples.astype("<i4") << 16).tobytes()
+    else:
+        raise ValueError(f"sample_width {sample_width} not supported (2/3/4)")
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(samples.shape[1])
+        w.setsampwidth(sample_width)
+        w.setframerate(sample_rate)
+        w.writeframes(raw)
+    return buf.getvalue()
 
 
 def test_wav_round_trip_mono_and_stereo():
@@ -117,10 +149,6 @@ def test_mm_audio_features_oracle_parity(spark):
 
 
 def test_24_and_32_bit_round_trip_top_bytes():
-    import numpy as np
-
-    from geojson_vt_cpp_spark.functions.wav import decode_wav, encode_wav
-
     s = np.array([[0, 32767], [-32768, -1], [1234, -4321]], dtype=np.int16)
     for sw in (3, 4):
         out, rate = decode_wav(encode_wav(s, 8000, sample_width=sw))
