@@ -11,7 +11,7 @@ overlap) the reference does not have but the target workload demands.
 Public API mirrors the reference's three entry points
 (``include/mapbox/geojsonvt.hpp:70-150``):
 
-- :func:`geojson_vt_cpp_spark.operators.tile_one_shot.geojson_to_tile`
+- :func:`geojson_vt_cpp_spark.operators.tile_one_shot.geojson_to_tile_df`
   — stateless single-tile slice (``geoJSONToTile``).
 - :class:`geojson_vt_cpp_spark.operators.pyramid.TilePyramid`
   — index build + ``get_tile`` with lazy drill-down (``GeoJSONVT``).

@@ -1,5 +1,4 @@
-"""Arrow-batched clip stages shared by wrap, the pyramid split, and one-shot
-tile slicing.
+"""Arrow-batched clip stages of wrap and the pyramid split.
 
 Each stage is a ``mapInPandas`` kernel: whole Arrow batches cross the
 Python boundary once, then the per-feature clip runs in numpy
@@ -112,12 +111,11 @@ def _emit_clipped(row: dict, geoms, line_metrics: bool) -> list[dict]:
 
 
 def clip_fixed_window(features_df, axis: int, k1: float, k2: float,
-                      line_metrics: bool, kernel_parts: int | None = None):
-    """Clip every feature to one fixed slab [k1, k2) — used by wrap and the
-    one-shot tile path, where the window does not depend on the row.
-    ``kernel_parts`` (wrap sizes it with :func:`stage_parts`) reshuffles
-    the rows that need the kernel onto that many partitions; None keeps
-    the input's partitioning.
+                      line_metrics: bool, kernel_parts: int):
+    """Clip every feature to one fixed slab [k1, k2) — wrap's windows, which
+    do not depend on the row. The rows that need the kernel are reshuffled
+    onto ``kernel_parts`` partitions (wrap sizes it with
+    :func:`stage_parts`).
 
     Trivially accepted rows (``min >= k1 and max < k2`` on the clip axis —
     the exact predicate ``kernels.clip_feature`` applies, including the
@@ -143,12 +141,13 @@ def clip_fixed_window(features_df, axis: int, k1: float, k2: float,
                 rows.extend(_emit_clipped(row, res, line_metrics))
             yield codec.rows_to_pdf(rows, schema)
 
-    mid_in = features_df.where(f"NOT {acc} AND NOT {rej}")
-    if kernel_parts is not None:
-        # the mid set is usually tiny (boundary crossers): a full-width
-        # Python stage pays its per-task cost on every upstream partition
-        mid_in = mid_in.repartition(kernel_parts)
-    mid = mid_in.mapInPandas(kernel, schema)
+    # the mid set is usually tiny (boundary crossers): a full-width Python
+    # stage pays its per-task cost on every upstream partition
+    mid = (
+        features_df.where(f"NOT {acc} AND NOT {rej}")
+        .repartition(kernel_parts)
+        .mapInPandas(kernel, schema)
+    )
     return features_df.where(acc).unionByName(mid)
 
 

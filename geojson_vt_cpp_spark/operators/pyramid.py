@@ -285,8 +285,8 @@ def quantize_one(
 ) -> dict | None:
     """Quantize ONE assigned feature to its tile-feature output row (or a
     stat-only row, or None when nothing is emitted). ``row`` supplies the
-    identity/props columns; ``g`` the geometry. Shared by the pyramid/one-
-    shot quantize kernels and the fused one-shot kernel so the emit logic
+    identity/props columns; ``g`` the geometry. Shared by the pyramid's
+    quantize kernel and the fused one-shot kernel so the emit logic
     (metrics props, accounting) exists exactly once."""
     tf, nsimp = K.transform_tile(g, float(1 << z), tx, ty, extent, tol, lm)
     if tf is None:

@@ -2,23 +2,26 @@
 
 The minimum end-to-end pipeline: documents -> extract/convert at the
 z-scaled tolerance -> optional antimeridian wrap -> optional x/y clip to the
-buffered tile window -> quantize. One linear DataFrame plan, no pyramid, no
-driver state; used by the flagship ``entry()`` smoke query.
+buffered tile window -> quantize. No pyramid, no driver state; used by the
+flagship ``entry()`` smoke query.
 
-Since round 6 the no-wrap path (the common one) runs as ONE fused
-``mapInPandas`` kernel — parse -> convert -> x-clip -> y-clip -> quantize
-per span row — instead of four chained Python stages: the per-stage Arrow
-round trips and Python-runner startups dominated this stateless shape's
-wall time (guide §4: one boundary crossing per stage; fewer stages, fewer
-crossings). The fused kernel calls the SAME per-feature helpers as the
-staged pipeline (``GJ.parse_geojson``/``convert_geom``, ``K.clip_feature``
-via ``clip_stage._emit_clipped`` semantics, ``pyramid.quantize_one``), so
-the two formulations are row-identical; the wrap=True variant keeps the
-staged pipeline (wrap needs a corpus-wide aggregate between stages).
+It runs as ONE fused ``mapInPandas`` kernel per span row — parse ->
+convert -> wrap windows -> x-clip -> y-clip -> quantize — instead of
+chained Python stages: the per-stage Arrow round trips and Python-runner
+startups dominated this stateless shape's wall time (guide §4: one
+boundary crossing per stage; fewer stages, fewer crossings). The kernel
+calls the same per-feature helpers as the pyramid's stages
+(``GJ.parse_geojson``/``convert_geom``, ``K.clip_feature`` with
+``clip_stage._emit_clipped``'s ``slice_path`` fan-out,
+``pyramid.quantize_one``). Wrap is the one corpus-wide rule: whether any
+feature reaches a side window is decided on the driver by
+``wrap.decide`` over the extracted features, and the kernel gets the
+answer as a literal.
 """
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Iterator
 
 import pandas as pd
@@ -27,10 +30,9 @@ from pyspark.sql import functions as F
 
 from geojson_vt_cpp_spark.config import TileOptions
 from geojson_vt_cpp_spark.operators import codec
-from geojson_vt_cpp_spark.operators.clip_stage import clip_fixed_window
 from geojson_vt_cpp_spark.operators.convert import extract_features
-from geojson_vt_cpp_spark.operators.pyramid import quantize, quantize_one
-from geojson_vt_cpp_spark.operators.wrap import wrap_features
+from geojson_vt_cpp_spark.operators.pyramid import quantize_one
+from geojson_vt_cpp_spark.operators.wrap import decide, windows
 
 
 def geojson_to_tile_df(
@@ -48,61 +50,29 @@ def geojson_to_tile_df(
     Mirrors geoJSONToTile: convert tolerance ``(tolerance/extent)/2^z``,
     clip window ``[(x-p)/z2, (x+1+p)/z2] x [(y-p)/z2, (y+1+p)/z2]`` with
     p = buffer/extent; clip is forced on when lineMetrics. The reference
-    passes (minAll,maxAll)=(-1,2) so clips always run per-feature.
+    passes (minAll,maxAll)=(-1,2) so clips always run per-feature. With
+    ``wrap``, one driver-side aggregate over the extracted features decides
+    whether every feature goes through wrap's three windows.
     """
-    o = options or TileOptions()
-    if not wrap:
-        return _fused_tile_df(docs_df, z, x, y, o, clip or o.line_metrics, on_error)
-    z2 = 1 << z
-    tolerance = (o.tolerance / o.extent) / z2
-    feats = extract_features(docs_df, tolerance, on_error=on_error)
-    feats = wrap_features(feats, o.buffer / o.extent, o.line_metrics)
-    if clip or o.line_metrics:
-        p = o.buffer / o.extent
-        feats = clip_fixed_window(feats, 0, (x - p) / z2, (x + 1 + p) / z2, o.line_metrics)
-        feats = clip_fixed_window(feats, 1, (y - p) / z2, (y + 1 + p) / z2, o.line_metrics)
-    assigned = feats.select(
-        F.lit(z).alias("z"),
-        F.lit(x).cast("long").alias("tx"),
-        F.lit(y).cast("long").alias("ty"),
-        "*",
-    )
-
-    # the one-shot path quantizes at the z-scaled tolerance for EVERY z
-    # (geojsonvt.hpp:80,91 — not the maxZoom-zero rule), so fake max_zoom
-    from geojson_vt_cpp_spark.config import Options
-
-    qopts = Options(
-        tolerance=o.tolerance, extent=o.extent, buffer=o.buffer,
-        line_metrics=o.line_metrics, max_zoom=z + 1,
-    )
-    return quantize(assigned, qopts)
-
-
-def _fused_tile_df(
-    docs_df: DataFrame,
-    z: int,
-    x: int,
-    y: int,
-    o: TileOptions,
-    do_clip: bool,
-    on_error: str,
-) -> DataFrame:
-    """The fused no-wrap one-shot kernel (see module docstring)."""
     from geojson_vt_cpp_spark.functions import geojson_io as GJ
     from geojson_vt_cpp_spark.functions import kernels as K
 
+    o = options or TileOptions()
     z2 = 1 << z
-    z2f = float(z2)
     tolerance = (o.tolerance / o.extent) / z2
-    # quantize tolerance: the staged path quantizes with max_zoom=z+1, so
-    # the z-scaled tolerance applies at every z (never the maxZoom-zero rule)
-    q_tol = o.tolerance / (z2f * o.extent)
+    # quantize tolerance: the z-scaled tolerance at every z, never the
+    # maxZoom-zero rule (geojsonvt.hpp:80,91)
+    q_tol = o.tolerance / (float(z2) * o.extent)
     p = o.buffer / o.extent
     xk1, xk2 = (x - p) / z2, (x + 1 + p) / z2
     yk1, yk2 = (y - p) / z2, (y + 1 + p) / z2
     lm = o.line_metrics
+    do_clip = clip or lm
     extent = o.extent
+    wrap_active = wrap and decide(
+        extract_features(docs_df, tolerance, on_error=on_error), p
+    )[0]
+    wins = windows(p)
 
     spans = docs_df.select(
         "doc_id", F.posexplode("spans").alias("span_idx", "span")
@@ -121,10 +91,16 @@ def _fused_tile_df(
         maxv = maxx if axis == 0 else maxy
         res = K.clip_feature(g, minv, maxv, axis, k1, k2, lm)
         if res == "accept":
-            return [(g, None)]
+            return [(g, "")]
         if len(res) > 1:
             return [(gg, f"|{j:04d}") for j, gg in enumerate(res)]
-        return [(gg, None) for gg in res]
+        return [(gg, "") for gg in res]
+
+    def shift(g, offset):
+        """shiftCoords (wrap.hpp:10-17) on a copy of ``g``."""
+        pts = g.pts.copy()
+        pts[:, 0] = g.pts[:, 0] + offset
+        return replace(g, pts=pts)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -140,22 +116,28 @@ def _fused_tile_df(
                     raise
                 for rf in raws:
                     g0 = GJ.convert_geom(rf.geom, tolerance)
+                    copies = [(g0, "", 1)]
+                    if wrap_active:
+                        copies = [
+                            (shift(gw, off) if off else gw, sw, tag)
+                            for k1, k2, off, tag in wins
+                            for gw, sw in clip_geoms(g0, 0, k1, k2)
+                        ]
                     if do_clip:
-                        staged = [
-                            (gy, (sx or "") + (sy or ""))
-                            for gx, sx in clip_geoms(g0, 0, xk1, xk2)
+                        copies = [
+                            (gy, sw + sx + sy, tag)
+                            for gw, sw, tag in copies
+                            for gx, sx in clip_geoms(gw, 0, xk1, xk2)
                             for gy, sy in clip_geoms(gx, 1, yk1, yk2)
                         ]
-                    else:
-                        staged = [(g0, "")]
-                    for g, slice_path in staged:
+                    for g, slice_path, tag in copies:
                         meta = {
                             "doc_id": doc_id,
                             "span_idx": int(span_idx),
                             "feature_idx": rf.feature_idx,
                             "member_seq": rf.member_seq,
-                            "copy_tag": 1,
-                            "slice_path": slice_path or "",
+                            "copy_tag": tag,
+                            "slice_path": slice_path,
                             "feature_id": rf.feature_id,
                             "id_kind": rf.id_kind,
                             "props_json": rf.props_json,

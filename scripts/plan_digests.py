@@ -1,9 +1,10 @@
 """Normalized Spark plans of every pyramid action, for plan-identity checks.
 
-Runs four pyramid scenarios offline on in-repo inputs and writes, for every
-action and ``localCheckpoint`` the engine issues (``toPandas``, ``collect``,
-``count``, ``take``, ``localCheckpoint`` and ``DataFrame.rdd`` partition
-probes), the optimized and the physical plan of the DataFrame it ran on:
+Runs four pyramid scenarios and one one-shot scenario offline on in-repo
+inputs and writes, for every action and ``localCheckpoint`` the engine
+issues (``toPandas``, ``collect``, ``count``, ``take``, ``localCheckpoint``
+and ``DataFrame.rdd`` partition probes), the optimized and the physical
+plan of the DataFrame it ran on:
 
   build      us-states, ``index_max_zoom=4``, ``index_max_points=100``
   append     the ``DATELINE_GEOJSON`` append onto that build
@@ -11,6 +12,10 @@ probes), the optimized and the physical plan of the DataFrame it ran on:
              drills, (7, 37, 48) then (9, 148, 192)
   prewrap    the first scenario's build through ``wrap_features`` and
              ``TilePyramid(pre_wrapped=True)``
+  oneshot    ``geojson_to_tile_df(...).count()`` of the benchmarks' tile,
+             us-states (12, 1171, 1566) with ``wrap=False, clip=True``,
+             and of the ``DATELINE_GEOJSON`` tile (1, 0, 0) with
+             ``wrap=True, clip=True``
 
 Plans are normalized so that two runs of the same code print the same
 text: expression ids (``#123``), plan ids and numbered lambda variables
@@ -21,7 +26,9 @@ an adaptive plan, its initial plan).
 
 writes ``OUT_DIR/<scenario>/<NNN>_<call>.txt`` per call,
 ``OUT_DIR/<scenario>/registry.txt`` (stats, total and digests of the
-registry and of ``all_tiles()``, read with recording paused) and
+registry and of ``all_tiles()``, read with recording paused),
+``OUT_DIR/oneshot/rows.txt`` (row count and digest of each one-shot tile's
+sorted rows, read with recording paused) and
 ``OUT_DIR/digests.txt``, one ``sha256  path`` line per file. Run it on two
 checkouts and compare them with ``diff -r OUT_A OUT_B``.
 """
@@ -151,6 +158,7 @@ def main() -> None:
     from geojson_vt_cpp_spark.config import Options
     from geojson_vt_cpp_spark.operators.convert import extract_features
     from geojson_vt_cpp_spark.operators.pyramid import TilePyramid
+    from geojson_vt_cpp_spark.operators.tile_one_shot import geojson_to_tile_df
     from geojson_vt_cpp_spark.operators.wrap import wrap_features
     from geojson_vt_cpp_spark.sources.documents import documents_from_fixture
     from tests.golden_utils import DATELINE_GEOJSON, load_fixture
@@ -161,13 +169,15 @@ def main() -> None:
     rec = Recorder(type(us), out_dir)  # the session's concrete DataFrame class
     rec.install()
 
-    def finish(pyr) -> None:
-        with rec.paused():
-            text = registry_text(pyr)
-        rel = os.path.join(rec.scenario, "registry.txt")
+    def save(name: str, text: str) -> None:
+        rel = os.path.join(rec.scenario, name)
         with open(os.path.join(out_dir, rel), "w") as f:
             f.write(text)
         rec.paths.append(rel)
+
+    def finish(pyr) -> None:
+        with rec.paused():
+            save("registry.txt", registry_text(pyr))
 
     rec.start("build")
     pyr = TilePyramid.from_documents(us, opts)
@@ -191,6 +201,22 @@ def main() -> None:
     pyr = TilePyramid(wrapped, opts, pre_wrapped=True)
     finish(pyr)
     pyr.close()
+
+    rec.start("oneshot")
+    lines = []
+    for name, docs, (z, x, y), wrap in [
+        ("us-states", us, (12, 1171, 1566), False),
+        ("dateline", dl, (1, 0, 0), True),
+    ]:
+        tile = geojson_to_tile_df(docs, z, x, y, wrap=wrap, clip=True)
+        tile.count()
+        with rec.paused():
+            rows = sorted(
+                json.dumps(r.asDict(recursive=True), sort_keys=True) for r in tile.collect()
+            )
+        digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()
+        lines.append(f"{name} {z}/{x}/{y} wrap={wrap} rows {len(rows)} {digest}\n")
+    save("rows.txt", "".join(lines))
 
     with open(os.path.join(out_dir, "digests.txt"), "w") as f:
         for rel in rec.paths:

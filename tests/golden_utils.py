@@ -98,6 +98,25 @@ DATELINE_GEOJSON = json.dumps(
 )
 
 
+# A two-vertex LineString at constant latitude 38.9081°N, from lon
+# -77.06 to -77.01. It lies inside z12 tile (1171, 1566) and crosses from
+# z13 tile (2342, 3133) into (2343, 3133), so both z13 tiles clip it
+# under lineMetrics. Written from the GeoJSON spec for the one-shot tile
+# tests.
+CROSSING_LINE_GEOJSON = json.dumps(
+    {
+        "type": "Feature",
+        "properties": {"name": "inline street"},
+        "geometry": {
+            "type": "LineString",
+            "coordinates": [[-77.06, 38.9081], [-77.01, 38.9081]],
+        },
+    }
+)
+
+EMPTY_COLLECTION_GEOJSON = json.dumps({"type": "FeatureCollection", "features": []})
+
+
 def load_golden_tiles(name: str) -> dict:
     return json.loads(load_fixture(name))
 

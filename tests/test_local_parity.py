@@ -16,6 +16,8 @@ import pytest
 from geojson_vt_cpp_spark.config import Options, TileOptions
 
 from .golden_utils import (
+    CROSSING_LINE_GEOJSON,
+    EMPTY_COLLECTION_GEOJSON,
     compare_tiles,
     load_fixture,
     load_golden_tiles,
@@ -162,6 +164,38 @@ def test_geojson_to_tile_metrics():
     assert right.features[0]["tags"]["mapbox_clip_end"] == 1.0
 
 
+def test_geojson_to_tile_simple_inline_line():
+    """Runnable counterpart of test_geojson_to_tile_simple on the inline
+    CROSSING_LINE_GEOJSON: the one-shot z12 tile holds the one line with
+    its properties. Weaker than the fixture test: the input is written
+    from the spec, not the reference's, and there is no golden."""
+    t = geojson_to_tile(CROSSING_LINE_GEOJSON, 12, 1171, 1566)
+    assert len(t.features) == 1
+    assert t.features[0]["tags"] == {"name": "inline street"}
+
+
+def test_geojson_to_tile_metrics_inline_line():
+    """Runnable counterpart of test_geojson_to_tile_metrics on the inline
+    CROSSING_LINE_GEOJSON, at the same options. The expectations are
+    derived by hand: at constant latitude the projected line length is
+    x1 - x0, so a window edge k cuts the line at (k - x0) / (x1 - x0); the
+    left tile's slice ends on its buffered right edge (extent + buffer)
+    and the right tile's starts on -buffer."""
+    opts = TileOptions(line_metrics=True, buffer=64, tolerance=3)
+    left = geojson_to_tile(CROSSING_LINE_GEOJSON, 13, 2342, 3133, opts)
+    right = geojson_to_tile(CROSSING_LINE_GEOJSON, 13, 2343, 3133, opts)
+    assert len(left.features) == 1 and len(right.features) == 1
+    x0, x1 = -77.06 / 360 + 0.5, -77.01 / 360 + 0.5
+    p = 64 / 4096
+    lt, rt = left.features[0]["tags"], right.features[0]["tags"]
+    assert lt["mapbox_clip_start"] == 0.0
+    assert lt["mapbox_clip_end"] == pytest.approx(((2343 + p) / 8192 - x0) / (x1 - x0), abs=1e-9)
+    assert rt["mapbox_clip_start"] == pytest.approx(((2343 - p) / 8192 - x0) / (x1 - x0), abs=1e-9)
+    assert rt["mapbox_clip_end"] == 1.0
+    assert left.features[0]["parts"][0][-1][0] == 4096 + 64
+    assert right.features[0]["parts"][0][0][0] == -64
+
+
 def test_clip_vertex_on_tile_border():
     data = json.dumps({
         "type": "Feature",
@@ -186,6 +220,12 @@ def test_clip_vertex_on_tile_border():
 @requires_fixtures("empty.json")
 def test_empty_geojson():
     assert len(gen_tiles(load_fixture("empty.json"))) == 1
+
+
+def test_empty_feature_collection():
+    """Runnable counterpart of test_empty_geojson on an inline empty
+    FeatureCollection: genTiles still returns the one empty z0 tile."""
+    assert gen_tiles(EMPTY_COLLECTION_GEOJSON) == {"z0-0-0": []}
 
 
 def test_invalid_geojson_errors():

@@ -17,12 +17,15 @@ from geojson_vt_cpp_spark.sources.documents import (
 )
 
 from .golden_utils import (
+    CROSSING_LINE_GEOJSON,
     DATELINE_GEOJSON,
+    EMPTY_COLLECTION_GEOJSON,
     compare_tiles,
     load_fixture,
     load_golden_tiles,
     requires_fixtures,
 )
+from .local_pyramid import gen_tiles, geojson_to_tile
 
 pytestmark = pytest.mark.spark
 
@@ -153,32 +156,142 @@ def test_spark_one_shot_clips(spark):
     assert json.loads(rows[0]["props_json"])["name"] == "District of Columbia"
 
 
-@pytest.mark.parametrize("line_metrics", [False, True])
-def test_spark_one_shot_wrap_matches_mirror(spark, line_metrics):
-    """The one-shot ``wrap=True`` path (extract -> wrap_features -> the two
-    fixed-window clips -> quantize) equals the local geoJSONToTile mirror
-    with wrap and clip on, over the antimeridian-crossing inputs: the z0
-    tile and the edge columns x = 0 and x = 2^z - 1 at z1-z2, in the row of
-    tiles the inputs lie in (y = 0 at z1, y = 1 at z2). Each tile is one
-    job of ~40 Python nodes (the staged plan is not checkpointed), so the
-    targets are kept to these five."""
+def _one_shot(docs, z, x, y, opts, **kw):
+    """The one-shot tile's (features, num_simplified), decoded like
+    get_tile's."""
     from geojson_vt_cpp_spark.operators import codec
     from geojson_vt_cpp_spark.operators.pyramid import _rows_to_features
 
-    from .local_pyramid import geojson_to_tile
+    rows = (
+        geojson_to_tile_df(docs, z, x, y, opts, **kw)
+        .orderBy(*codec.SORT_KEYS)
+        .collect()
+    )
+    return _rows_to_features(rows)
 
+
+def test_spark_one_shot_simple_and_metrics_inline_line(spark):
+    """Runnable counterpart of test_spark_one_shot_simple_and_metrics on
+    the inline CROSSING_LINE_GEOJSON: the Spark one-shot tile equals the
+    local geoJSONToTile mirror at z12 and at the z13 pair under
+    lineMetrics (buffer 64, tolerance 3), and the pair's slices start and
+    end the line. Mirror parity, so weaker than the fixture test: both
+    sides run the same kernels, so it catches Spark-stage bugs only."""
+    docs = documents_from_fixture(spark, CROSSING_LINE_GEOJSON, "crossing-line")
+    metrics = TileOptions(line_metrics=True, buffer=64, tolerance=3)
+    tags = {}
+    for z, x, y, opts in [
+        (12, 1171, 1566, TileOptions()),
+        (13, 2342, 3133, metrics),
+        (13, 2343, 3133, metrics),
+    ]:
+        feats, nsimp = _one_shot(docs, z, x, y, opts)
+        want = geojson_to_tile(CROSSING_LINE_GEOJSON, z, x, y, opts)
+        assert feats == want.features and len(feats) == 1, (z, x, y)
+        assert nsimp == want.num_simplified, (z, x, y)
+        tags[(z, x)] = feats[0]["tags"]
+    assert tags[(12, 1171)] == {"name": "inline street"}
+    assert tags[(13, 2342)]["mapbox_clip_start"] == 0.0
+    assert tags[(13, 2343)]["mapbox_clip_end"] == 1.0
+
+
+def test_spark_empty_feature_collection(spark):
+    """Runnable counterpart of test_spark_empty_geojson on an inline empty
+    FeatureCollection: the build registers the one empty z0 tile, as the
+    mirror's genTiles does (mirror parity: weaker than a golden)."""
+    docs = documents_from_fixture(spark, EMPTY_COLLECTION_GEOJSON, "empty")
+    pyr = TilePyramid.from_documents(
+        docs, Options(max_zoom=14, index_max_zoom=0, index_max_points=10000)
+    )
+    out = pyr.all_tiles()
+    pyr.close()
+    assert len(out) == 1
+    assert out == gen_tiles(EMPTY_COLLECTION_GEOJSON)
+
+
+# the tiles of the row DATELINE_GEOJSON lies in, in the edge columns
+_DATELINE_EDGE_TILES = [(0, 0, 0), (1, 0, 0), (1, 1, 0), (2, 0, 1), (2, 3, 1)]
+
+
+@pytest.mark.parametrize("line_metrics", [False, True])
+def test_spark_one_shot_wrap_matches_mirror(spark, line_metrics):
+    """The one-shot ``wrap=True`` tile equals the local geoJSONToTile
+    mirror with wrap on, over the antimeridian-crossing inputs: every tile
+    of z0-z2, clip off and on. The edge-column tiles of the inputs' row
+    are checked to be non-empty. Each tile is two jobs: wrap's deciding
+    aggregate and the tile's one kernel."""
     docs = documents_from_fixture(spark, DATELINE_GEOJSON, "dateline")
     opts = TileOptions(line_metrics=line_metrics)
-    for z, x, y in [(0, 0, 0), (1, 0, 0), (1, 1, 0), (2, 0, 1), (2, 3, 1)]:
-        rows = (
-            geojson_to_tile_df(docs, z, x, y, opts, wrap=True, clip=True)
-            .orderBy(*codec.SORT_KEYS)
-            .collect()
-        )
-        want = geojson_to_tile(DATELINE_GEOJSON, z, x, y, opts, wrap_=True, clip=True)
-        feats, nsimp = _rows_to_features(rows)
-        assert feats == want.features and feats, (z, x, y)
-        assert nsimp == want.num_simplified, (z, x, y)
+    for clip in (False, True):
+        for z in range(3):
+            for x in range(1 << z):
+                for y in range(1 << z):
+                    feats, nsimp = _one_shot(docs, z, x, y, opts, wrap=True, clip=clip)
+                    want = geojson_to_tile(
+                        DATELINE_GEOJSON, z, x, y, opts, wrap_=True, clip=clip
+                    )
+                    assert feats == want.features, (clip, z, x, y)
+                    assert nsimp == want.num_simplified, (clip, z, x, y)
+                    assert feats or (z, x, y) not in _DATELINE_EDGE_TILES
+
+
+def test_spark_one_shot_wrap_is_one_kernel(spark):
+    """A ``wrap=True`` one-shot tile plans one Python node: wrap's windows
+    run inside the fused kernel, and wrap's deciding aggregate runs on the
+    driver before the tile's plan is built."""
+    docs = documents_from_fixture(spark, DATELINE_GEOJSON, "dateline")
+    df = geojson_to_tile_df(docs, 1, 0, 0, wrap=True, clip=True)
+    assert str(df._jdf.queryExecution().optimizedPlan()).count("MapInPandas") == 1
+
+
+def _feature(name, geometry):
+    return {"type": "Feature", "properties": {"name": name}, "geometry": geometry}
+
+
+# lon 570 projects to x = 2.08, beyond every wrap window
+_FAR_POINT = _feature("far point", {"type": "Point", "coordinates": [570, 10]})
+_WRAP_CORPORA = {
+    "far_next_to_crossing_line": (
+        [_FAR_POINT, _feature("crossing line", {
+            "type": "LineString", "coordinates": [[170, 60], [190, 60]]})],
+        True,
+    ),
+    "far_alone": ([_FAR_POINT], False),
+    "far_next_to_empty_and_interior": (
+        [_FAR_POINT,
+         _feature("empty", {"type": "MultiPoint", "coordinates": []}),
+         _feature("interior polygon", {"type": "Polygon", "coordinates": [
+             [[10, 10], [20, 10], [20, 20], [10, 20], [10, 10]]]})],
+        True,
+    ),
+}
+
+
+@pytest.mark.parametrize("corpus", sorted(_WRAP_CORPORA))
+def test_spark_one_shot_wrap_corpus_decision(spark, corpus):
+    """Wrap is decided for the whole corpus (wrap.hpp:25-26), not per
+    feature. A far Point, which no wrap window reaches, is dropped by the
+    center window when another feature activates wrap: a dateline-crossing
+    line, or a zero-point geometry, whose inverted bbox every window
+    accepts. Alone, it activates nothing and is kept, unwrapped. The
+    Spark one-shot tile equals the mirror at z0-z1, clip off and on."""
+    from geojson_vt_cpp_spark.operators.convert import extract_features
+    from geojson_vt_cpp_spark.operators.wrap import decide
+
+    features, active = _WRAP_CORPORA[corpus]
+    text = json.dumps({"type": "FeatureCollection", "features": features})
+    docs = documents_from_fixture(spark, text, corpus)
+    opts = TileOptions()
+    assert decide(extract_features(docs, 0.0), opts.buffer / opts.extent)[0] == active
+    for clip in (False, True):
+        for z, x, y in [(0, 0, 0), (1, 0, 0), (1, 0, 1), (1, 1, 0), (1, 1, 1)]:
+            feats, nsimp = _one_shot(docs, z, x, y, opts, wrap=True, clip=clip)
+            want = geojson_to_tile(text, z, x, y, opts, wrap_=True, clip=clip)
+            assert feats == want.features, (clip, z, x, y)
+            assert nsimp == want.num_simplified, (clip, z, x, y)
+            if not clip and z == 0:
+                names = [f["tags"]["name"] for f in feats]
+                assert ("far point" in names) == (not active), names
 
 
 def test_spark_error_paths(spark):
